@@ -12,6 +12,7 @@ decide — at 100 TB you never blanket-cache base tables).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,7 +49,7 @@ def table_path(sf_dir: str, name: str) -> str:
 # persisted or materialized, its plan is identical to a fresh read,
 # and every action still computes from the parquet input. Entries die
 # with their session (weak key). A cheap os.stat fingerprint of the
-# table path (file size + mtime; for a directory, its direct entries)
+# table path (file size + mtime; for a directory, every file beneath it)
 # guards the handle: a REWRITTEN table re-resolves instead of serving
 # a stale relation (unit fixtures overwrite tmp tables in place — the
 # driver fixtures never change, so they always hit the memo).
@@ -58,20 +59,22 @@ _SCAN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 
 def _path_fingerprint(path: str):
-    """(size, mtime_ns) of ``path``; for a directory, the sorted same
-    for each direct entry. None (never memo-hit) when unreadable."""
+    """(size, mtime_ns) of ``path``; for a directory, the sorted
+    (name, fingerprint) of each entry, nested (partition) directories
+    included — a part file rewritten in place under ``k=v/`` changes
+    no entry of the table directory itself. None (never memo-hit)
+    when unreadable."""
     try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return (st.st_size, st.st_mtime_ns)
-        return tuple(
-            sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in os.scandir(path)
-            )
-        )
+        return _tree_stat(path)
     except OSError:
         return None
+
+
+def _tree_stat(path: str):
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns)
+    return tuple(sorted((e.name, _tree_stat(e.path)) for e in os.scandir(path)))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -37,6 +37,7 @@ one hash partition on the document id.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -395,13 +396,35 @@ class Warehouse:
         return last_seq
 
     def _bucket_of(self, col, n_buckets: int | None = None) -> "F.Column":
-        """THE bucket formula — one definition shared by merge pruning
-        and point lookup, so the two can never drift apart.
+        """THE bucket formula — one definition shared by merge pruning,
+        the writers and ``fsck`` (``_bucket_of_id`` is its driver-side
+        evaluation for point lookups), so they can never drift apart.
         ``n_buckets`` overrides the warehouse default with a specific
         VERSION's recorded count (manifests are authoritative once a
         table exists — see ``rebucket``)."""
         c = F.col(col) if isinstance(col, str) else col
         return F.pmod(F.xxhash64(c), F.lit(n_buckets or self.n_buckets)).cast("int")
+
+    def _bucket_of_id(self, doc_id: str, n_buckets: int) -> int:
+        """``_bucket_of`` evaluated on the driver for one id, with no
+        Spark plan: ``F.xxhash64`` on a string column is Spark's
+        ``XXH64.hashUTF8String(utf8, 42)``, so calling that same JVM
+        function and taking the non-negative remainder (Python's ``%``
+        is ``pmod`` for a positive divisor) gives the bucket the
+        column formula puts the row in — one hash implementation, not
+        two."""
+        xxh64, utf8 = self._jvm_xxh64
+        return xxh64.hashUTF8String(utf8.fromString(doc_id), 42) % n_buckets
+
+    @functools.cached_property
+    def _jvm_xxh64(self):
+        """(XXH64, UTF8String) JVM class handles, resolved once: each
+        package step of a py4j class path is a gateway round trip."""
+        jvm = self.spark._jvm
+        return (
+            jvm.org.apache.spark.sql.catalyst.expressions.XXH64,
+            jvm.org.apache.spark.unsafe.types.UTF8String,
+        )
 
     def _manifest_buckets_n(self, manifest: dict | None) -> int:
         """The bucket count a manifest's layout was written with.
@@ -626,6 +649,38 @@ class Warehouse:
             for b, files in manifest["buckets"].items()
             for fn in files
         ]
+
+    def _read_parts(
+        self,
+        path: str,
+        manifest: dict,
+        files: list[str] | None = None,
+        schema: T.StructType | None = None,
+    ) -> DataFrame:
+        """THE read of committed part files: ``files`` (default: the
+        whole snapshot) of one manifest, with the manifest's schema —
+        or an explicit ``schema`` — plus ``_cw_bucket`` as the
+        partition column under ``basePath``. No footer is sampled for
+        a schema: under evolution one snapshot mixes files written
+        before and after a column was added, and a schema-less read
+        would take whichever footer comes first — dropping the column
+        or failing. Declared, a missing column reads as typed NULLs
+        per file, and each table version reads with the schema it
+        committed (Delta's schema-per-log-entry)."""
+        if schema is None:
+            schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        read_schema = T.StructType(
+            list(schema.fields) + [T.StructField("_cw_bucket", T.IntegerType())]
+        )
+        if files is None:
+            files = self._manifest_files(path, manifest)
+        if not files:
+            return self.spark.createDataFrame([], read_schema)
+        return (
+            self.spark.read.option("basePath", path)
+            .schema(read_schema)
+            .parquet(*files)
+        )
 
     def _adopt_legacy(self, path: str) -> dict | None:
         """Migrate a pre-manifest table directory (plain bucket-
@@ -891,17 +946,8 @@ class Warehouse:
             elif m > mx:
                 mx = int(m)
         if missing:
-            # Same schema-declared read as _read_state, restricted to
-            # the stat-less files: a file written before a column
-            # existed reads as typed NULLs instead of failing.
-            schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-            read_schema = T.StructType(
-                list(schema.fields) + [T.StructField("_cw_bucket", T.IntegerType())]
-            )
             row = (
-                self.spark.read.option("basePath", path)
-                .schema(read_schema)
-                .parquet(*missing)
+                self._read_parts(path, manifest, missing)
                 .agg(F.max(SEQ_COL).alias("m"))
                 .collect()[0]
             )
@@ -1111,18 +1157,16 @@ class Warehouse:
                 aff_files, conformed, tombstones, stats_by_path
             )
             if read_files:
-                # Explicit schema (CURRENT frozen schema + seq): under
-                # evolution the affected files may predate a column —
-                # a schema-less read would sample one file's footer
-                # and silently drop or misalign; explicit schema makes
-                # pre-evolution files read the new column as NULL.
+                # The CURRENT frozen schema + seq, not the manifest's:
+                # a batch that just evolved the schema reads the new
+                # column as NULL from every older file.
                 state_schema = T.StructType(
                     list(schema_to_struct(self.schemas[doc_type]).fields)
                     + [T.StructField(SEQ_COL, T.LongType())]
                 )
-                state = self.spark.read.schema(state_schema).parquet(*read_files)
-            else:
-                state = None
+                state = self._read_parts(
+                    path, manifest, read_files, schema=state_schema
+                ).drop("_cw_bucket")
         elif os.path.isdir(path) and any(
             fn.endswith(".parquet") for fn in os.listdir(path)
         ):
@@ -1260,16 +1304,14 @@ class Warehouse:
             return 0
 
         tmp = self._scratch_dir(path)
-        # basePath keeps _cw_bucket as a partition column while reading
-        # ONLY the fragmented buckets' referenced files; repartition by
-        # the bucket column so each bucket lands in one task → ~one
-        # output file.
+        # Read ONLY the fragmented buckets' referenced files;
+        # repartition by the bucket column so each bucket lands in one
+        # task → ~one output file.
         files = [
             os.path.join(path, f"_cw_bucket={b}", fn) for b in todo for fn in prev[b]
         ]
         df = (
-            self.spark.read.option("basePath", path)
-            .parquet(*files)
+            self._read_parts(path, manifest, files)
             .repartition(len(todo), "_cw_bucket")
             .sortWithinPartitions("_cw_bucket", "id")
         )
@@ -1385,18 +1427,7 @@ class Warehouse:
                     .collect()
                 ]
             if probe_files:
-                schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-                state_ids = (
-                    self.spark.read.option("basePath", path)
-                    .schema(
-                        T.StructType(
-                            list(schema.fields)
-                            + [T.StructField("_cw_bucket", T.IntegerType())]
-                        )
-                    )
-                    .parquet(*probe_files)
-                    .select("id")
-                )
+                state_ids = self._read_parts(path, manifest, probe_files).select("id")
                 n_del = t_ids.join(state_ids, "id", "left_semi").count()
         flat = live.withColumn(SEQ_COL, F.lit(base_seq + 1))
         if doc_type not in self.schemas:
@@ -1734,10 +1765,8 @@ class Warehouse:
         if not pending:
             return 0
         schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        df = (
-            self.spark.read.schema(schema)
-            .parquet(*[fp for _, _, fp in pending])
-            .withColumn("_cw_file", F.input_file_name())
+        df = self._read_parts(path, manifest, [fp for _, _, fp in pending]).withColumn(
+            "_cw_file", F.input_file_name()
         )
         cols = [c for c in (columns or [f.name for f in schema.fields])]
         aggs = [F.count(F.lit(1)).alias("_rows")]
@@ -1942,13 +1971,7 @@ class Warehouse:
                 manifest = self._adopt_legacy(path)
             if manifest is None:
                 continue
-            prev = {int(b): fs for b, fs in manifest["buckets"].items()}
-            files = [
-                os.path.join(path, f"_cw_bucket={b}", fn)
-                for b, fs in prev.items()
-                for fn in fs
-            ]
-            if not files:
+            if not self._manifest_files(path, manifest):
                 # Zero-row table: commit the (empty) layout under the
                 # new count so future merges hash consistently.
                 self._commit_manifest(
@@ -1959,9 +1982,7 @@ class Warehouse:
                 continue
             tmp = self._scratch_dir(path)
             (
-                self.spark.read.option("basePath", path)
-                .parquet(*files)
-                .drop("_cw_bucket")
+                self._read_parts(path, manifest)
                 .withColumn("_cw_bucket", self._bucket_of("id", n_buckets))
                 .repartition(n_buckets, "_cw_bucket")
                 .sortWithinPartitions("_cw_bucket", "id")
@@ -2022,10 +2043,7 @@ class Warehouse:
         todo = sorted(b for b, fs in prev.items() if fs)
         if not todo:
             return 0
-        files = [
-            os.path.join(path, f"_cw_bucket={b}", fn) for b in todo for fn in prev[b]
-        ]
-        df = self.spark.read.option("basePath", path).parquet(*files)
+        df = self._read_parts(path, manifest)
 
         numeric = {
             f.name
@@ -2245,40 +2263,18 @@ class Warehouse:
         return df
 
     def _read_state(self, path: str, version: int | None = None) -> DataFrame:
-        """ONE read path for table() and lookup(): resolve a manifest
-        (the latest, or an explicit time-travel ``version``) and read
-        exactly its file list. ``basePath`` keeps ``_cw_bucket`` a
-        partition column, so point lookups still partition-prune. The
-        explicit file list IS the snapshot: a commit that lands after
-        this plan is built changes nothing the plan reads, and a
-        zero-row version reads as an empty frame from the manifest's
-        stored schema. Pre-manifest directories fall back to a plain
-        parquet read."""
+        """The snapshot read behind table(), changes() and the row-level
+        rewrites: resolve a manifest (the latest, or an explicit
+        time-travel ``version``) and read exactly its file list
+        (``_read_parts``). The explicit file list IS the snapshot: a
+        commit that lands after this plan is built changes nothing the
+        plan reads, and a zero-row version reads as an empty frame
+        from the manifest's stored schema. Pre-manifest directories
+        fall back to a plain parquet read."""
         manifest = self._load_manifest(path, version)
         if manifest is None:
             return self.spark.read.parquet(path)
-        files = self._manifest_files(path, manifest)
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        # Read with THIS version's manifest schema, explicitly: under
-        # schema evolution a bucket legitimately mixes files written
-        # before and after a column was added (pre-evolution files
-        # carry forward by reference), and a schema-less parquet read
-        # would take whichever file it samples first — silently
-        # dropping the new column or failing. Explicit schema makes
-        # missing columns typed NULLs per file, and makes each table
-        # VERSION read with the schema it committed (Delta's
-        # schema-per-log-entry). _cw_bucket rides along as the
-        # partition column.
-        read_schema = T.StructType(
-            list(schema.fields) + [T.StructField("_cw_bucket", T.IntegerType())]
-        )
-        return (
-            self.spark.read.option("basePath", path)
-            .schema(read_schema)
-            .parquet(*files)
-        )
+        return self._read_parts(path, manifest)
 
     def table(
         self,
@@ -2373,36 +2369,35 @@ class Warehouse:
     def lookup(self, doc_id: str, doc_type: str = DEFAULT_TYPE) -> DataFrame:
         """Point lookup by document id — the reference's ``id PRIMARY
         KEY`` access path (reference lib/sqlite.js:38-40, ``WHERE id =
-        ?`` at :83). Two pruning levels compose: the manifest's
-        recorded per-file id ranges drop every part file whose
-        [min, max] cannot contain the id BEFORE any Spark plan exists
-        (stats-in-log file skipping — at 100 TB this reads the one or
-        two files that can hold the row), and the bucket partition
-        filter (PartitionFilters on ``_cw_bucket``) prunes whatever
-        survives. Files without recorded stats are kept conservatively.
+        ?`` at :83), resolved from the manifest before any Spark plan
+        exists. The driver hashes the id to its bucket
+        (``_bucket_of_id``, under the version's recorded bucket count)
+        and plans only that bucket's part files — hash buckets spread
+        ids over the whole key range, so the per-file id ranges of
+        DIFFERENT buckets overlap and cannot narrow the read by
+        themselves. Within the bucket, the manifest's recorded ranges
+        then drop every file whose [min, max] cannot contain the id;
+        files without recorded stats are kept. The ``_cw_bucket``
+        equality filter stays in the plan (PartitionFilters). The read
+        declares the manifest's schema instead of inferring one from a
+        footer, so building the lookup submits no Spark job (while the
+        bucket's file count stays under Spark's parallel-listing
+        threshold).
         """
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
-        if manifest is not None and manifest.get("stats"):
-            cand = []
-            for b, files in manifest["buckets"].items():
-                per = manifest["stats"].get(b, {})
-                for fn in files:
-                    rng = per.get(fn)
-                    if rng is None or (rng[0] <= doc_id <= rng[1]):
-                        cand.append(os.path.join(path, f"_cw_bucket={b}", fn))
-            if not cand:
-                schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-                df = self.spark.createDataFrame([], schema)
-            else:
-                df = self.spark.read.option("basePath", path).parquet(*cand)
-        else:
+        b = self._bucket_of_id(doc_id, self._manifest_buckets_n(manifest))
+        if manifest is None:
             df = self._read_state(path)
+        else:
+            per = manifest.get("stats", {}).get(str(b), {})
+            df = self._read_parts(path, manifest, [
+                os.path.join(path, f"_cw_bucket={b}", fn)
+                for fn in manifest["buckets"].get(str(b), [])
+                if per.get(fn) is None or per[fn][0] <= doc_id <= per[fn][1]
+            ])
         if "_cw_bucket" in df.columns:
-            df = df.filter(
-                F.col("_cw_bucket")
-                == self._bucket_of(F.lit(doc_id), self._manifest_buckets_n(manifest))
-            )
+            df = df.filter(F.col("_cw_bucket") == b)
         return df.filter(F.col("id") == doc_id).drop(SEQ_COL, "_cw_bucket")
 
     def query(

@@ -44,3 +44,38 @@ def test_memo_invalidates_on_rewrite(spark, tmp_path):
     again = load_table(spark, d, "documents")
     assert again is not first
     assert again.count() == 5
+
+
+def test_memo_invalidates_on_nested_rewrite(spark, tmp_path):
+    """A partitioned table: a part file rewritten in place one level
+    down (``lang=en/``) leaves every entry of the table directory
+    unchanged, and the memo must still miss."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path)
+    part = tmp_path / "documents.parquet" / "lang=en" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+
+    def write(n):
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": list(range(n)),
+                    "text": ["a"] * n,
+                    "source": ["s"] * n,
+                }
+            ),
+            str(part),
+        )
+
+    write(3)
+    first = load_table(spark, d, "documents")
+    assert first.count() == 3
+    assert load_table(spark, d, "documents") is first
+    top = sorted(p.name for p in (tmp_path / "documents.parquet").iterdir())
+    write(7)  # same file name, same directory entries, new bytes
+    assert sorted(p.name for p in (tmp_path / "documents.parquet").iterdir()) == top
+    again = load_table(spark, d, "documents")
+    assert again is not first
+    assert again.count() == 7

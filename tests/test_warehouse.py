@@ -1730,3 +1730,118 @@ def test_fsck_clean_and_corrupted(spark, tmp_path):
     rep2 = wh.fsck().collect()[0]
     assert not rep2["ok"]
     assert rep2["n_missing_files"] == 1
+
+
+def _jobs_run_by(spark, group: str, fn):
+    """(fn(), number of Spark jobs ``fn`` submitted), counted through a
+    job group; the listener bus is drained so no job is missed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_plans_one_bucket_without_a_job(spark, tmp_path):
+    """Building a point lookup submits NO Spark job: the bucket is
+    chosen on the driver and the read declares the manifest's schema
+    instead of inferring one from a footer. Collecting it submits
+    exactly one, over the chosen bucket's files only."""
+    feed = person_feed(str(tmp_path / "feed.jsonl"), n=50)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "lookupjobs", n_buckets=8)
+    wh.spool(feed)
+    b = wh._bucket_of_id("person0009", 8)
+
+    df, n_build = _jobs_run_by(spark, "lookup-build", lambda: wh.lookup("person0009"))
+    assert n_build == 0
+    assert df.inputFiles() and all(
+        f"/_cw_bucket={b}/" in f for f in df.inputFiles()
+    )
+    rows, n_exec = _jobs_run_by(spark, "lookup-exec", df.collect)
+    assert n_exec == 1
+    assert len(rows) == 1 and rows[0]["name"] == "Person 9"
+
+
+def test_bucket_of_id_matches_bucket_formula(spark, tmp_path):
+    """The driver-side bucket (Spark's XXH64 called directly) equals the
+    column formula ``_bucket_of`` for every id, edge cases included:
+    the empty string, non-ASCII text and long ids."""
+    import pandas as pd
+
+    rng = random.Random(5)
+    alphabet = "abcxyz019-_:é漢字🙂Ωß"
+    ids = ["", "é", "漢字🙂", "x" * 200, "order00005"] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(1, 40)))
+        for _ in range(1000)
+    ] + [f"doc{i:06d}" for i in range(1000)]
+    wh = Warehouse(spark, str(tmp_path / "wh"), "bucketids")
+    frame = spark.createDataFrame(pd.DataFrame({"id": ids}))
+    got = frame.select(
+        "id", *[wh._bucket_of("id", n).alias(f"b{n}") for n in (1, 5, 16)]
+    ).collect()
+    assert len(got) == len(ids)
+    for r in got:
+        for n in (1, 5, 16):
+            assert wh._bucket_of_id(r["id"], n) == r[f"b{n}"], (r["id"], n)
+
+
+def test_lookup_after_rebucket_and_restore(spark, tmp_path):
+    """The driver-side bucket choice hashes with the CURRENT version's
+    bucket count: after rebucket(5), and after restoring the 2-bucket
+    version, every looked-up id is still found."""
+    rng = random.Random(23)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "lookuplayout", n_buckets=2)
+    envs = [envelope(i + 1, order_doc(i, rng)) for i in range(30)]
+    wh.spool(write_feed(str(tmp_path / "f1.jsonl"), envs))
+    v1 = wh._load_manifest(wh._table_path("_default"))["version"]
+    ids = [f"order{i:05d}" for i in (0, 3, 7, 12, 21, 29)]
+
+    def found():
+        return [len(wh.lookup(i).collect()) for i in ids]
+
+    assert found() == [1] * len(ids)
+    wh.rebucket(5)
+    assert found() == [1] * len(ids)
+    wh.restore(v1)
+    assert found() == [1] * len(ids)
+    assert wh.lookup("order99999").collect() == []
+
+
+def test_maintenance_rewrites_keep_evolved_columns(spark, tmp_path):
+    """compact, rebucket and optimize_zorder rewrite a snapshot whose
+    files mix rows written before and after ``evolve_schema`` added a
+    column; the rewrite must keep that column's values (a read that
+    inferred the schema from one part file's footer dropped the column
+    whenever it sampled the pre-evolution file). Which file is sampled
+    varies with the part-file names, so eight fresh tables are built,
+    each from one pre-evolution and one evolved batch."""
+    want = {f"aaa{i:02d}": None for i in range(12)}
+    want.update({f"ddd{i:02d}": f"y{i}" for i in range(3)})
+    for trial in range(8):
+        wh = Warehouse(
+            spark, str(tmp_path / f"wh{trial}"), f"evo{trial}",
+            n_buckets=1, evolve_schema=True,
+        )
+        seq = 0
+        for prefix, n in (("aaa", 12), ("ddd", 3)):
+            envs = []
+            for i in range(n):
+                seq += 1
+                doc = {"_id": f"{prefix}{i:02d}", "_rev": f"1-{seq:04d}", "x": i}
+                if prefix == "ddd":
+                    doc["y"] = f"y{i}"
+                envs.append(envelope(seq, doc))
+            wh.spool(write_feed(str(tmp_path / f"t{trial}{prefix}.jsonl"), envs))
+        wh.clone("_default", "rb")
+        wh.clone("_default", "zo")
+
+        assert wh.compact(max_files_per_bucket=1) == 1
+        assert wh.rebucket(3, doc_type="rb") == 1
+        # Z-ordering BY the evolved column: it must be a known column.
+        assert wh.optimize_zorder(["y"], doc_type="zo") == 1
+        for t in ("_default", "rb", "zo"):
+            got = {r["id"]: r["y"] for r in wh.table(t).collect()}
+            assert got == want, (trial, t)
