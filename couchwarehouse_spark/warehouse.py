@@ -2369,36 +2369,57 @@ class Warehouse:
     def lookup(self, doc_id: str, doc_type: str = DEFAULT_TYPE) -> DataFrame:
         """Point lookup by document id — the reference's ``id PRIMARY
         KEY`` access path (reference lib/sqlite.js:38-40, ``WHERE id =
-        ?`` at :83), resolved from the manifest before any Spark plan
-        exists. The driver hashes the id to its bucket
-        (``_bucket_of_id``, under the version's recorded bucket count)
-        and plans only that bucket's part files — hash buckets spread
-        ids over the whole key range, so the per-file id ranges of
-        DIFFERENT buckets overlap and cannot narrow the read by
-        themselves. Within the bucket, the manifest's recorded ranges
-        then drop every file whose [min, max] cannot contain the id;
-        files without recorded stats are kept. The ``_cw_bucket``
-        equality filter stays in the plan (PartitionFilters). The read
-        declares the manifest's schema instead of inferring one from a
-        footer, so building the lookup submits no Spark job (while the
-        bucket's file count stays under Spark's parallel-listing
-        threshold).
+        ?`` at :83), served on the driver from the manifest and the
+        part files' row-group statistics, with no Spark job. The driver
+        hashes the id to its bucket (``_bucket_of_id``, under the
+        version's recorded bucket count) — hash buckets spread ids over
+        the whole key range, so the per-file id ranges of DIFFERENT
+        buckets overlap and cannot narrow the read by themselves.
+        Within the bucket, the manifest's recorded ranges drop every
+        file whose [min, max] cannot contain the id (files without
+        recorded stats are kept), and pyarrow reads the rest with an
+        ``id`` equality filter whose row-group statistics skip every
+        row group that cannot hold the id (merges write part files
+        id-sorted, so that leaves one row group per file). The read
+        declares the manifest's schema minus ``_cw_seq``, so a
+        file written before ``evolve_schema`` added a column reads it
+        as typed NULLs, as ``table()`` does.
+
+        The result is materialised when ``lookup`` is called: a local
+        relation holding the head version's row, which collecting does
+        not recompute — it survives a later ``vacuum``. The driver
+        needs the same view of storage that reading manifests and
+        footer stats already requires. Pre-manifest directories fall
+        back to a Spark read of the chosen bucket.
         """
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
         b = self._bucket_of_id(doc_id, self._manifest_buckets_n(manifest))
         if manifest is None:
             df = self._read_state(path)
-        else:
-            per = manifest.get("stats", {}).get(str(b), {})
-            df = self._read_parts(path, manifest, [
-                os.path.join(path, f"_cw_bucket={b}", fn)
-                for fn in manifest["buckets"].get(str(b), [])
-                if per.get(fn) is None or per[fn][0] <= doc_id <= per[fn][1]
-            ])
-        if "_cw_bucket" in df.columns:
-            df = df.filter(F.col("_cw_bucket") == b)
-        return df.filter(F.col("id") == doc_id).drop(SEQ_COL, "_cw_bucket")
+            if "_cw_bucket" in df.columns:
+                df = df.filter(F.col("_cw_bucket") == b)
+            return df.filter(F.col("id") == doc_id).drop(SEQ_COL, "_cw_bucket")
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = T.StructType([
+            f for f in T.StructType.fromJson(json.loads(manifest["schema"])).fields
+            if f.name != SEQ_COL
+        ])
+        per = manifest.get("stats", {}).get(str(b), {})
+        files = [
+            os.path.join(path, f"_cw_bucket={b}", fn)
+            for fn in manifest["buckets"].get(str(b), [])
+            if per.get(fn) is None or per[fn][0] <= doc_id <= per[fn][1]
+        ]
+        rows = pq.read_table(
+            files,
+            schema=to_arrow_schema(schema),
+            filters=[("id", "=", doc_id)],
+            partitioning=None,
+        )
+        return self.spark.createDataFrame(rows, schema)
 
     def query(
         self, sql: str, substitutions: dict | list | None = None

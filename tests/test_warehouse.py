@@ -262,23 +262,54 @@ def test_incremental_bucket_merge(spark, tmp_path):
 
 
 def test_lookup_prunes_to_one_bucket(spark, tmp_path):
-    """Point lookup must read ONE bucket partition (PartitionFilters
-    on _cw_bucket) and return the right row."""
-    feed = person_feed(str(tmp_path / "feed.jsonl"), n=50)
-    wh = Warehouse(spark, str(tmp_path / "wh"), "lookupdata", n_buckets=8)
-    wh.spool(feed)
+    """Point lookup reads only the id's bucket, and within it only the
+    files whose recorded id range covers the id: every other part file
+    is overwritten with garbage bytes and the lookup still returns the
+    right row (while a lookup that does reach a garbled file fails)."""
+    import os as _os
 
-    df = wh.lookup("person0009")
-    rows = df.collect()
-    assert len(rows) == 1 and rows[0]["name"] == "Person 9"
+    import pyarrow as pa
+    import pytest
 
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+    rng = random.Random(264)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "lookupdata", n_buckets=2)
+    seq = 0
+    for prefix in ("aaa", "mmm", "zzz"):
+        envs = []
+        for i in range(8):
+            seq += 1
+            d = person_doc(i, rng)
+            d["_id"] = f"{prefix}{i:04d}"
+            envs.append(envelope(seq, d))
+        wh.spool(write_feed(str(tmp_path / f"f_{prefix}.jsonl"), envs))
+
+    path = wh._table_path("_default")
+    manifest = wh._load_manifest(path)
+    b = str(wh._bucket_of_id("mmm0003", 2))
+    garbled = {"other bucket": 0, "range excludes id": 0}
+    for bucket, files in manifest["buckets"].items():
+        for fn in files:
+            lo, hi = manifest["stats"][bucket][fn]
+            if bucket != b:
+                garbled["other bucket"] += 1
+            elif not lo <= "mmm0003" <= hi:
+                garbled["range excludes id"] += 1
+            else:
+                continue
+            fp = _os.path.join(path, f"_cw_bucket={bucket}", fn)
+            with open(fp, "wb") as f:
+                f.write(b"not a parquet file" * 64)
+    assert min(garbled.values()) >= 1, garbled
+
+    rows = wh.lookup("mmm0003").collect()
+    assert len(rows) == 1
+    assert rows[0]["id"] == "mmm0003" and rows[0]["name"] == "Person 3"
+    other = next(
+        f"{p}{i:04d}" for p in ("aaa", "zzz") for i in range(8)
+        if str(wh._bucket_of_id(f"{p}{i:04d}", 2)) != b
     )
-    pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
-    assert "_cw_bucket" in pf and " = " in pf  # equality prune to one bucket
-    # id predicate also pushed to the parquet reader
-    assert "PushedFilters" in plan and "EqualTo(id,person0009)" in plan
+    with pytest.raises(pa.ArrowInvalid):
+        wh.lookup(other)
 
 
 def test_random_replay_matches_dict_oracle(spark, tmp_path):
@@ -1745,24 +1776,18 @@ def _jobs_run_by(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_lookup_plans_one_bucket_without_a_job(spark, tmp_path):
-    """Building a point lookup submits NO Spark job: the bucket is
-    chosen on the driver and the read declares the manifest's schema
-    instead of inferring one from a footer. Collecting it submits
-    exactly one, over the chosen bucket's files only."""
+def test_lookup_submits_no_spark_job(spark, tmp_path):
+    """A point lookup is served on the driver: building it and
+    collecting it each submit NO Spark job, for a hit and a miss."""
     feed = person_feed(str(tmp_path / "feed.jsonl"), n=50)
     wh = Warehouse(spark, str(tmp_path / "wh"), "lookupjobs", n_buckets=8)
     wh.spool(feed)
-    b = wh._bucket_of_id("person0009", 8)
 
-    df, n_build = _jobs_run_by(spark, "lookup-build", lambda: wh.lookup("person0009"))
-    assert n_build == 0
-    assert df.inputFiles() and all(
-        f"/_cw_bucket={b}/" in f for f in df.inputFiles()
-    )
-    rows, n_exec = _jobs_run_by(spark, "lookup-exec", df.collect)
-    assert n_exec == 1
-    assert len(rows) == 1 and rows[0]["name"] == "Person 9"
+    for doc_id, want in (("person0009", ["Person 9"]), ("person9999", [])):
+        df, n_build = _jobs_run_by(spark, f"build-{doc_id}", lambda: wh.lookup(doc_id))
+        rows, n_exec = _jobs_run_by(spark, f"exec-{doc_id}", df.collect)
+        assert (n_build, n_exec) == (0, 0)
+        assert [r["name"] for r in rows] == want
 
 
 def test_bucket_of_id_matches_bucket_formula(spark, tmp_path):
@@ -1808,6 +1833,99 @@ def test_lookup_after_rebucket_and_restore(spark, tmp_path):
     wh.restore(v1)
     assert found() == [1] * len(ids)
     assert wh.lookup("order99999").collect() == []
+
+
+def _assert_lookups_match_table(wh, ids, doc_type="_default"):
+    """Every id in ``ids`` looks up exactly its ``table()`` rows (none
+    for a deleted or unknown id), under the same schema."""
+    table = wh.table(doc_type)
+    want: dict[str, list] = {}
+    for r in table.collect():
+        want.setdefault(r["id"], []).append(r)
+    for i in sorted(ids):
+        got = wh.lookup(i, doc_type=doc_type)
+        assert got.schema == table.schema, i
+        assert got.collect() == want.get(i, []), i
+    return want
+
+
+def test_lookup_matches_table_through_history(spark, tmp_path):
+    """``lookup(i)`` equals ``table().filter(id == i)`` — rows and
+    schema — after every kind of commit: updates, deletes, a delete
+    then recreate, a column added by ``evolve_schema`` (older files
+    lack it), compact, rebucket, z-order, restore and clone; for a
+    split-mode type; and after ``vacuum`` removed the looked-up files."""
+    import os as _os
+
+    import pyarrow.parquet as pq
+
+    rng = random.Random(2387)
+    wh = Warehouse(
+        spark, str(tmp_path / "wh"), "lookupeq", n_buckets=3, evolve_schema=True
+    )
+    path = wh._table_path("_default")
+    seen: set[str] = {"order99999", ""}
+    seq = 0
+
+    def spool(name, changes):
+        nonlocal seq
+        envs = []
+        for i, kind in changes:
+            seq += 1
+            doc_id = f"order{i:05d}"
+            seen.add(doc_id)
+            if kind == "delete":
+                envs.append(envelope(seq, None, doc_id=doc_id, deleted=True))
+            else:
+                extra = {"newfield": f"{kind}{i}"} if kind != "base" else None
+                envs.append(envelope(seq, order_doc(i, rng, extra=extra)))
+        wh.spool(write_feed(str(tmp_path / f"{name}.jsonl"), envs))
+        return _assert_lookups_match_table(wh, seen)
+
+    spool("base", [(i, "base") for i in range(20)])
+    v1 = wh._load_manifest(path)["version"]
+    want = spool("evolve", [(i, "new") for i in range(20, 25)])
+    assert want["order00022"][0]["newfield"] == "new22"
+    assert want["order00003"][0]["newfield"] is None
+    assert any(
+        "newfield" not in pq.read_schema(fp).names
+        for fp in wh._manifest_files(path, wh._load_manifest(path))
+    )
+    want = spool(
+        "churn",
+        [(i, "upd") for i in range(5)]
+        + [(i, "delete") for i in (5, 6, 7, 21)]
+        + [(20, "upd")],
+    )
+    assert "order00005" not in want and want["order00020"][0]["newfield"] == "upd20"
+    want = spool("recreate", [(5, "again"), (6, "upd"), (25, "base"), (26, "new")])
+    assert want["order00005"][0]["newfield"] == "again5" and "order00007" not in want
+
+    wh.compact(max_files_per_bucket=1)
+    _assert_lookups_match_table(wh, seen)
+    wh.rebucket(5)
+    _assert_lookups_match_table(wh, seen)
+    wh.optimize_zorder(["total"])
+    _assert_lookups_match_table(wh, seen)
+    wh.restore(v1)
+    want = _assert_lookups_match_table(wh, seen)
+    assert len(want) == 20 and "newfield" not in wh.table().columns
+    wh.clone("_default", "branch")
+    _assert_lookups_match_table(wh, seen, doc_type="branch")
+
+    # A lookup is materialised when it is called: vacuuming the files
+    # it read does not change what collecting it returns.
+    pinned = wh.lookup("order00010")
+    read_before = set(wh._manifest_files(path, wh._load_manifest(path)))
+    wh.rebucket(2)
+    wh.vacuum(retain_versions=1, min_age_seconds=0)
+    assert not any(_os.path.exists(fp) for fp in read_before)
+    assert pinned.collect() == want["order00010"]
+
+    split = Warehouse(spark, str(tmp_path / "split"), "lookupsplit", split="type")
+    split.spool(mixed_feed(str(tmp_path / "mixed.jsonl")))
+    products = {f"A{i}" for i in range(20)} | {"A999", "order00001"}
+    assert len(_assert_lookups_match_table(split, products, doc_type="product")) == 20
 
 
 def test_maintenance_rewrites_keep_evolved_columns(spark, tmp_path):
