@@ -19,11 +19,17 @@ Spark-first design (no row-at-a-time anything):
   batch can't change the outcome because seq ordering decides.
   At 100 TB the upgrade path is Delta/Iceberg ``MERGE`` which makes
   this incremental instead of snapshot-rewrite; semantics identical.
+* **checkpoint** — the reference's log is only ever read at its last
+  row, so each table keeps one JSON file holding its latest seq,
+  replaced atomically (temp file, fsync, rename). No Spark job writes
+  or reads it.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -149,139 +155,59 @@ def cdc_payload(
     return marked.join(new_state, key, "left")
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON, all or nothing: the
+    object is written to a temp file in the same directory, fsynced,
+    then renamed over ``path``. A crash mid-write leaves the old file
+    intact plus a ``*.tmp`` that no reader opens."""
+    import uuid
+
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except FileNotFoundError:
+            pass
+        raise
+
+
 class CheckpointStore:
-    """Append-only ``(tablename, seq)`` checkpoint log (R14).
+    """Per-table resume points (R14), one JSON file each.
 
     Mirrors ``couchwarehouse_checkpoints`` (reference lib/sqlite.js:11,
-    138-170): ``write`` appends one row; ``read`` returns the latest
-    seq for a table (resume point), or None. Backed by a parquet
-    directory — append-only writes, resume = ``max_by(seq, ord)``
-    which Spark executes as a tiny agg, exactly the reference's
-    ``ORDER BY id DESC LIMIT 1``.
+    138-170), which appends ``(tablename, seq)`` rows and resumes from
+    the latest. Only the latest row is ever read, so here each table
+    keeps just that: ``<path>/<quoted tablename>.json``, replaced
+    atomically by ``write`` and read back by ``read`` (None when the
+    table has no checkpoint). Neither submits a Spark job.
     """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # In-process cache: under the single-writer contract this store
-        # is the only thing appending, so after the first read (or any
-        # write) the latest seq is known without re-scanning the log —
-        # one fewer parquet read+agg per micro-batch in monitor mode.
-        # A fresh process (new store) still resumes from the log.
-        self._cache: dict[str, str | None] = {}
 
-    # Compact the log once it fragments past this many part files —
-    # every micro-batch appends one tiny file, so an unattended monitor
-    # would otherwise accumulate unbounded files and resume scans
-    # would slow with uptime.
-    COMPACT_THRESHOLD = 64
+    def _file(self, tablename: str) -> str:
+        return os.path.join(self.path, quote(tablename, safe="") + ".json")
 
     def write(self, tablename: str, seq: str) -> None:
-        import time
-
-        # Parameterized literal SELECT, not createDataFrame: a Python
-        # list literal becomes an RDD scan that boots a Python worker
-        # for one row (~seconds); this stays JVM-only.
-        df = self.spark.sql(
-            "SELECT CAST(:t AS STRING) AS tablename,"
-            "       CAST(:s AS STRING) AS seq,"
-            "       CAST(:o AS LONG)   AS ord",
-            args={"t": tablename, "s": seq, "o": time.time_ns()},
-        )
-        df.coalesce(1).write.mode("append").parquet(self.path)
-        self._cache[tablename] = seq
-        if len(self._part_files()) > self.COMPACT_THRESHOLD:
-            # Best-effort maintenance: a compaction racing another HA
-            # writer's compaction may lose files mid-read — never let
-            # that kill the ingest loop; the next write retries.
-            try:
-                self.compact()
-            except Exception:
-                pass
-
-    def _part_files(self) -> list[str]:
-        if not os.path.isdir(self.path):
-            return []
-        return [
-            f
-            for f in os.listdir(self.path)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
-
-    def compact(self) -> int:
-        """Collapse the log to its latest row per table. Crash-safe by
-        ordering, not atomicity: the surviving rows (with their
-        ORIGINAL ords) are APPENDED as one new file first, and only
-        then are the pre-existing files deleted — a crash at any point
-        leaves duplicates at worst, and ``max_by(seq, ord)`` reads the
-        same resume point through duplicates. Returns files removed."""
-        import time
-
-        before = self._part_files()
-        if len(before) <= 1:
-            return 0
-        # Same concurrent-append tolerance as read(): another writer
-        # deleting ITS compacted-away files between our listing and
-        # our scan is survivable — retry the read+append.
-        last_err: Exception | None = None
-        for _ in range(3):
-            try:
-                latest = (
-                    self.spark.read.parquet(self.path)
-                    .groupBy("tablename")
-                    .agg(F.max_by(F.struct("seq", "ord"), "ord").alias("m"))
-                    .select(
-                        "tablename",
-                        F.col("m.seq").alias("seq"),
-                        F.col("m.ord").alias("ord"),
-                    )
-                )
-                latest.coalesce(1).write.mode("append").parquet(self.path)
-                last_err = None
-                break
-            except Exception as err:  # transient mid-compact read
-                last_err = err
-                before = self._part_files()
-                time.sleep(0.3)
-        if last_err is not None:
-            raise last_err
-        removed = 0
-        for fn in before:
-            try:
-                os.remove(os.path.join(self.path, fn))
-                removed += 1
-            except FileNotFoundError:
-                pass
-        return removed
+        write_json_atomic(self._file(tablename), {"tablename": tablename, "seq": seq})
 
     def read(self, tablename: str) -> str | None:
-        if tablename in self._cache:
-            return self._cache[tablename]
-        if not os.path.isdir(self.path):
+        try:
+            with open(self._file(tablename)) as f:
+                return json.load(f)["seq"]
+        except FileNotFoundError:
             return None
-        # Tolerate concurrent appends: the writer's commit protocol
-        # keeps a _temporary dir while a checkpoint row lands, and a
-        # read racing it can fail or see a partial listing — retry.
-        import time
-
-        last_err: Exception | None = None
-        for _ in range(3):
-            try:
-                df = self.spark.read.parquet(self.path).filter(
-                    F.col("tablename") == tablename
-                )
-                rows = df.agg(F.max_by("seq", "ord").alias("seq")).collect()
-                seq = rows[0]["seq"] if rows and rows[0]["seq"] is not None else None
-                self._cache[tablename] = seq
-                return seq
-            except Exception as err:  # transient mid-commit read
-                last_err = err
-                time.sleep(0.3)
-        raise last_err
 
     def reset(self) -> None:
         """R19 — forget all checkpoints (next run starts from seq 0)."""
         import shutil
 
         shutil.rmtree(self.path, ignore_errors=True)
-        self._cache.clear()

@@ -21,6 +21,7 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from couchwarehouse_spark.operators.document import seq_number_col
 
@@ -36,12 +37,24 @@ def _envelope_ddl(doc_schema: str) -> str:
     )
 
 
+def infer_json_schema(spark: SparkSession, frame: DataFrame) -> T.StructType:
+    """The schema ``spark.read.json`` would infer for ``frame``'s rows.
+
+    ``frame`` has one string column of JSON texts. It is handed to the
+    JVM's ``DataFrameReader.json(Dataset[String])``, which runs the
+    same ``JsonInferSchema`` pass as a directory read — one Spark job,
+    nothing written to storage.
+    """
+    jvm = spark._jvm
+    lines = getattr(frame._jdf, "as")(jvm.org.apache.spark.sql.Encoders.STRING())
+    return DataFrame(spark._jsparkSession.read().json(lines), spark).schema
+
+
 def read_changes_feed(
     spark: SparkSession,
     path: str,
     doc_transform: Callable[[dict], dict] | None = None,
     doc_schema: str | None = None,
-    scratch_dir: str | None = None,
 ) -> DataFrame:
     """Read a JSON-lines changes feed into an envelope DataFrame.
 
@@ -63,10 +76,10 @@ def read_changes_feed(
     the transform lane parses envelopes with ONE ``from_json``
     projection — no RDD round-trip, no inference scan — the shape to
     use when the doc type is known (the warehouse's frozen schema can
-    supply it). When omitted, the lane falls back to full-union
-    inference over a scratch-dir spool of the transformed lines (one
-    extra bounded write + JVM-side inference scan, batch lane only;
-    ``scratch_dir`` must be shared storage on a multi-node cluster).
+    supply it). When omitted, the lane infers the full-union schema
+    from the transformed lines with :func:`infer_json_schema` (one
+    extra scan that runs the transform a second time), then parses
+    them with that schema.
     """
     if doc_transform is None:
         if doc_schema is not None:
@@ -96,36 +109,12 @@ def read_changes_feed(
                 yield pd.DataFrame({"value": out})
 
         transformed = lines.mapInPandas(_tx, "value string")
-        if doc_schema is not None:
-            env = transformed.select(
-                F.from_json("value", _envelope_ddl(doc_schema)).alias("e")
-            ).select("e.*")
-        else:
-            # Schemaless fallback: spool the transformed lines to a
-            # scratch text dir once and let the JVM json reader infer
-            # the envelope schema from the spooled copy — the same
-            # trick as the streaming lane (streaming/ingest.py:
-            # _parse_docs). The Python transform executes exactly once
-            # for the inference pass (during the write); the
-            # alternative `.rdd` round-trip re-ran it for inference
-            # AND left a Python-RDD scan in the plan. Parsing is then
-            # a from_json projection over the transformed lines —
-            # whole-stage-codegen'd, schema known up front. On a
-            # multi-node cluster pass `scratch_dir` on shared storage
-            # (a node-local /tmp default only works in local mode) —
-            # or better, supply `doc_schema` and skip inference.
-            import shutil
-            import tempfile
-
-            tmp = scratch_dir or tempfile.mkdtemp(prefix="cw_feedschema_")
-            try:
-                transformed.write.mode("overwrite").text(tmp)
-                inferred = spark.read.json(tmp).schema
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-            env = transformed.select(
-                F.from_json("value", inferred).alias("e")
-            ).select("e.*")
+        schema = (
+            _envelope_ddl(doc_schema)
+            if doc_schema is not None
+            else infer_json_schema(spark, transformed)
+        )
+        env = transformed.select(F.from_json("value", schema).alias("e")).select("e.*")
 
     # Null-fill any missing envelope column — an EMPTY feed (a
     # maintenance-only CLI run, a fully caught-up monitor poll) infers

@@ -16,17 +16,10 @@ the streaming checkpoint (D2: offsets/commits under
 the reference's couchwarehouse_checkpoints table on top).
 
 The feed source here is a JSON-lines landing directory (what a real
-deployment's HTTP tailer writes page by page). A first-class
-``couchdb_changes`` format also exists
-(sources.changes_source.ChangesFeedDataSource — Spark 4 Python Data
-Source with offset-tracked micro-batches and ``maxPagesPerBatch``
-rate limiting); the file stream stays the default because Python
-sources don't support ``Trigger.AvailableNow`` yet.
+deployment's HTTP tailer writes page by page).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from couchwarehouse_spark.operators.document import seq_number_col
 from couchwarehouse_spark.operators.upsert import SEQ_COL
+from couchwarehouse_spark.sources.changes import infer_json_schema
 from couchwarehouse_spark.warehouse import Warehouse
 
 # Envelope wire format (FIXTURES.md §D; reference test/samplechanges.txt:2).
@@ -94,10 +88,7 @@ def monitor_warehouse(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        scratch = os.path.join(warehouse.warehouse_dir, "_scratch", f"docschema_{batch_id}")
-        last = warehouse._process_batch(
-            _parse_docs(warehouse.spark, batch_df, scratch)
-        )
+        last = warehouse._process_batch(_parse_docs(warehouse.spark, batch_df))
         if last is not None:
             warehouse.checkpoints.write(warehouse.db_name, last)
 
@@ -111,38 +102,18 @@ def monitor_warehouse(
     return writer.start()
 
 
-def _parse_docs(
-    spark: SparkSession, batch_df: DataFrame, scratch_dir: str | None = None
-) -> DataFrame:
+def _parse_docs(spark: SparkSession, batch_df: DataFrame) -> DataFrame:
     """Parse the batch's doc JSON strings into a struct column.
 
     Schema = ``spark.read.json`` union inference over ALL docs in the
-    micro-batch — lossless: a field carried by any doc of the batch
-    becomes a struct field (first-doc-only inference would null it
-    out, and latest-wins merge would then overwrite stored values).
-    The inference pass is JVM-only: the doc strings are spooled to a
-    scratch text dir and re-read — no ``.rdd``, no per-row Python in
-    the streaming hot path. Micro-batches are bounded, so the extra
-    write is one bounded sequential pass.
-
-    ``scratch_dir`` must be on storage BOTH executors and driver can
-    see (the warehouse dir qualifies — monitor_warehouse passes
-    ``<warehouse_dir>/_scratch/...``). A node-local /tmp default would
-    silently break on a multi-node cluster: executors would write
-    their part files locally while the driver reads an empty dir.
+    micro-batch (:func:`infer_json_schema`) — lossless: a field carried
+    by any doc of the batch becomes a struct field (first-doc-only
+    inference would null it out, and latest-wins merge would then
+    overwrite stored values). Inference is one JVM-only Spark job over
+    the batch — no ``.rdd``, no per-row Python, nothing written.
     """
-    import shutil
-    import tempfile
-
-    tmp = scratch_dir or tempfile.mkdtemp(prefix="cw_docschema_")
-    try:
-        batch_df.select(
-            F.coalesce(F.col("doc"), F.lit("{}")).alias("value")
-        ).write.mode("overwrite").text(tmp)
-        doc_schema = spark.read.json(tmp).schema
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    docs = batch_df.select(F.coalesce(F.col("doc"), F.lit("{}")).alias("value"))
     return (
-        batch_df.withColumn("doc", F.from_json("doc", doc_schema))
+        batch_df.withColumn("doc", F.from_json("doc", infer_json_schema(spark, docs)))
         .withColumn(SEQ_COL, seq_number_col("seq"))
     )

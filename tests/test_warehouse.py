@@ -14,10 +14,13 @@ from couchwarehouse_spark.warehouse import Warehouse
 from .fixtures import (
     envelope,
     evolve_feed,
+    jobs_run_by,
     mixed_feed,
     order_doc,
     person_doc,
     person_feed,
+    product_doc,
+    user_doc,
     write_feed,
 )
 
@@ -1763,19 +1766,6 @@ def test_fsck_clean_and_corrupted(spark, tmp_path):
     assert rep2["n_missing_files"] == 1
 
 
-def _jobs_run_by(spark, group: str, fn):
-    """(fn(), number of Spark jobs ``fn`` submitted), counted through a
-    job group; the listener bus is drained so no job is missed."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_lookup_submits_no_spark_job(spark, tmp_path):
     """A point lookup is served on the driver: building it and
     collecting it each submit NO Spark job, for a hit and a miss."""
@@ -1784,8 +1774,8 @@ def test_lookup_submits_no_spark_job(spark, tmp_path):
     wh.spool(feed)
 
     for doc_id, want in (("person0009", ["Person 9"]), ("person9999", [])):
-        df, n_build = _jobs_run_by(spark, f"build-{doc_id}", lambda: wh.lookup(doc_id))
-        rows, n_exec = _jobs_run_by(spark, f"exec-{doc_id}", df.collect)
+        df, n_build = jobs_run_by(spark, f"build-{doc_id}", lambda: wh.lookup(doc_id))
+        rows, n_exec = jobs_run_by(spark, f"exec-{doc_id}", df.collect)
         assert (n_build, n_exec) == (0, 0)
         assert [r["name"] for r in rows] == want
 
@@ -1963,3 +1953,73 @@ def test_maintenance_rewrites_keep_evolved_columns(spark, tmp_path):
         for t in ("_default", "rb", "zo"):
             got = {r["id"]: r["y"] for r in wh.table(t).collect()}
             assert got == want, (trial, t)
+
+
+def test_spool_survives_corrupt_feed_lines(spark, tmp_path):
+    """PERMISSIVE JSON parsing turns malformed feed lines into all-null
+    envelopes; the ingest filter must drop them explicitly so they
+    never reach schema discovery or the merge — the good changes on
+    the same page still land and the checkpoint advances to their max
+    seq."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    (feed / "page1.jsonl").write_text(
+        '{"seq":"1-a","id":"doc1","doc":{"_id":"doc1","_rev":"1-x","name":"alice"}}\n'
+        "THIS IS NOT JSON {{{\n"
+        '{"seq":"2-a","id":"doc2","doc":{"_id":"doc2","_rev":"1-x","name":"bob"}}\n'
+        '{"seq":"3-a"\n'  # truncated envelope
+    )
+    from couchwarehouse_spark.warehouse import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"), "robustdb", reset=True)
+    last = wh.spool(str(feed))
+    assert last == "2-a"
+    rows = {r["id"]: r["name"] for r in wh.table().collect()}
+    assert rows == {"doc1": "alice", "doc2": "bob"}
+
+
+def test_crash_while_saving_schemas_keeps_previous_registry(spark, tmp_path, monkeypatch):
+    """A crash while ``_schemas.json`` is being written must not tear
+    it: the registry is replaced atomically, so a fresh Warehouse opens
+    and shows the schemas saved by the previous batch. Re-running the
+    interrupted spool then completes it."""
+    import json
+    import os
+
+    import pytest
+
+    from couchwarehouse_spark import warehouse as warehouse_mod
+
+    rng = random.Random(17)
+    users = write_feed(
+        str(tmp_path / "users.jsonl"), [envelope(i + 1, user_doc(i, rng)) for i in range(5)]
+    )
+    products = write_feed(
+        str(tmp_path / "products.jsonl"),
+        [envelope(i + 6, product_doc(i, rng)) for i in range(5)],
+    )
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir, "tornschema", split="type")
+    wh.spool(users)
+    before = json.loads(json.dumps(wh.schemas))
+    assert set(before) == {"user"}
+
+    real_dump = warehouse_mod.json.dump
+
+    def dump_then_crash(obj, fp, *args, **kwargs):
+        if "__meta__" not in obj:
+            return real_dump(obj, fp, *args, **kwargs)
+        fp.write(json.dumps(obj)[:40])
+        raise OSError("disk went away mid-write")
+
+    monkeypatch.setattr(warehouse_mod.json, "dump", dump_then_crash)
+    with pytest.raises(OSError, match="mid-write"):
+        wh.spool(products)
+    monkeypatch.undo()
+
+    reopened = Warehouse(spark, wh_dir, "tornschema", split="type")
+    assert reopened.schemas == before
+    assert not [f for f in os.listdir(wh_dir) if f.endswith(".tmp")]
+    reopened.spool(products)
+    assert set(reopened.schemas) == {"user", "product"}
+    assert reopened.table("product").count() == 5
