@@ -95,7 +95,8 @@ def sum_count_mv_follower(name: str, group_col: str, value_col: str):
             # Versions strictly between the MV base and the current
             # merge must ALL be content-neutral ('compact' re-clusters
             # bytes only). A missed 'merge' (follower detached for a
-            # batch) or an out-of-band 'restore'/'adopt' changed rows
+            # batch) or an out-of-band 'restore'/'delete_where'/
+            # 'update_where' changed rows
             # this batch's keys don't cover, so the retraction math no
             # longer balances — recompute.
             for v in table_versions:

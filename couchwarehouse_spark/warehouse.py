@@ -423,12 +423,12 @@ class Warehouse:
         )
 
     def _manifest_buckets_n(self, manifest: dict | None) -> int:
-        """The bucket count a manifest's layout was written with.
-        Manifests predating the field default to the warehouse
-        setting (their layout was built with it)."""
+        """The bucket count a manifest's layout was written with (every
+        commit records it); with no manifest — a table's first write —
+        the warehouse setting."""
         if manifest is None:
             return self.n_buckets
-        return int(manifest.get("n_buckets", self.n_buckets))
+        return int(manifest["n_buckets"])
 
     # -- manifest snapshot commits (Delta-lake style) -------------------
     #
@@ -490,6 +490,14 @@ class Warehouse:
                     raise
                 continue
         return None
+
+    def _committed_manifest(self, path: str, version: int | None = None) -> dict:
+        """``_load_manifest``, raising ``FileNotFoundError`` naming the
+        table when it has no readable manifest."""
+        manifest = self._load_manifest(path, version)
+        if manifest is None:
+            raise FileNotFoundError(f"no committed table at {path}")
+        return manifest
 
     def _commit_manifest(
         self,
@@ -678,37 +686,6 @@ class Warehouse:
             .parquet(*files)
         )
 
-    def _adopt_legacy(self, path: str) -> dict | None:
-        """Migrate a pre-manifest table directory (plain bucket-
-        partitioned parquet) by publishing an 'adopt' manifest that
-        references its files in place — a one-time metadata write, no
-        data movement."""
-        if not os.path.isdir(path):
-            return None
-        buckets: dict[int, list[str]] = {}
-        stats: dict[int, dict[str, list | None]] = {}
-        for entry in sorted(os.listdir(path)):
-            if entry.startswith("_cw_bucket="):
-                b = int(entry.split("=", 1)[1])
-                buckets[b] = [
-                    fn
-                    for fn in sorted(os.listdir(os.path.join(path, entry)))
-                    if fn.endswith(".parquet")
-                ]
-                for fn in buckets[b]:
-                    rng = _parquet_id_range(os.path.join(path, entry, fn))
-                    stats.setdefault(b, {})[fn] = list(rng) if rng else None
-        if not buckets:
-            return None
-        schema_json = (
-            self.spark.read.parquet(path).schema.json()
-        )
-        # Adoption only happens on a pre-manifest directory: base 0, so
-        # two processes racing to adopt collide on v1 instead of
-        # double-publishing.
-        self._commit_manifest(path, "adopt", buckets, schema_json, stats, base_version=0)
-        return self._load_manifest(path)
-
     DEFAULT_VACUUM_GRACE_SECONDS = 600.0
 
     def vacuum(
@@ -774,20 +751,6 @@ class Warehouse:
         # between our listdir and stat/remove, so every per-file
         # getmtime/remove tolerates FileNotFoundError — the file being
         # gone IS the goal state, whoever got there first.
-        for fn in os.listdir(path):
-            # Root-level parquet = a superseded pre-manifest layout;
-            # no manifest ever references root files.
-            fp = os.path.join(path, fn)
-            try:
-                if (
-                    fn.endswith(".parquet")
-                    and os.path.isfile(fp)
-                    and os.path.getmtime(fp) <= cutoff
-                ):
-                    os.remove(fp)
-                    deleted += 1
-            except FileNotFoundError:
-                continue
         for entry in os.listdir(path):
             if not entry.startswith("_cw_bucket="):
                 continue
@@ -955,7 +918,7 @@ class Warehouse:
         bucket_files: dict[int, list[str]],
         conformed: DataFrame,
         tombstones: DataFrame,
-        stats_by_path: dict[str, list | None] | None = None,
+        stats_by_path: dict[str, list | None],
     ) -> tuple[list[str], dict[int, list[str]]]:
         """File-level merge pruning WITHIN affected buckets: a part
         file whose ``id`` min/max range contains no batch id needs no
@@ -964,23 +927,19 @@ class Warehouse:
         copy always lives in a file whose range covers it).
         ``bucket_files`` is the current manifest's view of the affected
         buckets (bucket id → absolute part-file paths);
-        ``stats_by_path`` is the manifest's recorded id ranges, so the
-        common case never touches a parquet footer here (stats were
-        read once at commit — Delta's stats-in-log). Returns (files to
-        merge, per-bucket untouched files the next manifest carries
-        forward by reference). The range-vs-batch-id check is a
-        broadcast semi join, not a collect of ids. Files without id
-        statistics are conservatively merged."""
-        stats_by_path = stats_by_path or {}
+        ``stats_by_path`` is the manifest's recorded id ranges, so no
+        parquet footer is touched here (stats were read once at
+        publish — Delta's stats-in-log). Returns (files to merge,
+        per-bucket untouched files the next manifest carries forward
+        by reference). The range-vs-batch-id check is a broadcast semi
+        join, not a collect of ids. A file with no recorded range (its
+        footer had no id statistics at publish, and part files are
+        immutable) is conservatively merged."""
         metas: list[tuple[int, str, str, str]] = []
         read_files: list[str] = []
         for b, files in bucket_files.items():
             for fp in files:
                 rng = stats_by_path.get(fp)
-                if rng is None:
-                    # Pre-stats manifest (or absent footer stats at
-                    # commit): one fallback footer read.
-                    rng = _parquet_id_range(fp)
                 if rng is None:
                     read_files.append(fp)
                 else:
@@ -1099,36 +1058,80 @@ class Warehouse:
         n = next(self._scratch_counter)
         return f"{path}._tmp.{os.getpid()}.{n}"
 
+    def _commit_rewrite(
+        self,
+        path: str,
+        manifest: dict | None,
+        op: str,
+        frame: DataFrame,
+        replaced,
+        carried: dict[int, list[str]] | None = None,
+        schema_json: str | None = None,
+        n_buckets: int | None = None,
+    ) -> int:
+        """THE data-rewriting commit, shared by every op that writes
+        part files: write ``frame`` (which carries ``_cw_bucket``) to a
+        scratch dir, slide the uniquely-named part files into the live
+        bucket dirs (``_publish_tmp``), then COMMIT by atomically
+        publishing the version after ``manifest`` (None: a fresh table,
+        base 0). Each bucket in ``replaced``, and each bucket the write
+        produced, holds the new files plus its ``carried`` file names
+        (unchanged files kept by reference, with their recorded
+        ranges); a bucket left with no file gets no entry. Every other
+        bucket carries forward whole — zero I/O, not even a rename. A
+        crash anywhere before the manifest lands leaves the table at
+        ``manifest``'s version: the published files are unreferenced
+        orphans ``vacuum()`` reclaims. Returns the committed version."""
+        tmp = self._scratch_dir(path)
+        frame.write.mode("overwrite").partitionBy("_cw_bucket").parquet(tmp)
+        moved, moved_stats = self._publish_tmp(path, tmp)
+        base = manifest or {"version": 0, "buckets": {}, "stats": {}}
+        carried = carried or {}
+        replace = {int(b) for b in replaced} | set(moved)
+        buckets = {
+            int(b): fs for b, fs in base["buckets"].items() if int(b) not in replace
+        }
+        stats = {int(b): per for b, per in base["stats"].items() if int(b) not in replace}
+        for b in replace:
+            keep = carried.get(b, [])
+            if moved.get(b) or keep:
+                buckets[b] = moved.get(b, []) + keep
+                prev = base["stats"].get(str(b), {})
+                stats[b] = {**moved_stats.get(b, {}), **{fn: prev.get(fn) for fn in keep}}
+        return self._commit_manifest(
+            path,
+            op,
+            buckets,
+            schema_json or base["schema"],
+            stats,
+            base_version=base["version"],
+            n_buckets=n_buckets or self._manifest_buckets_n(manifest),
+        )
+
     def _merge_conformed(
         self, conformed: DataFrame, tombstones: DataFrame, doc_type: str
     ) -> None:
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
-        if manifest is None:
-            manifest = self._adopt_legacy(path)
         # Hash with the CURRENT VERSION's bucket count — after a
         # rebucket it differs from the constructor default, and a
         # merge that hashed with the wrong count would prune the
         # wrong buckets and write files no reader looks for.
         n_cur = self._manifest_buckets_n(manifest)
         bucket_of = lambda c: self._bucket_of(c, n_cur)  # noqa: E731
+        # A fresh table is an empty previous version: no bucket to
+        # probe, no state to fold, nothing carried.
         state = None
-        affected: list[int] | None = None
+        affected: list[int] = []
         untouched: dict[int, list[str]] = {}
-        prev_buckets: dict[int, list[str]] = {}
-        prev_stats: dict[int, dict[str, list | None]] = {}
         if manifest is not None:
-            prev_buckets = {int(b): fs for b, fs in manifest["buckets"].items()}
-            prev_stats = {
-                int(b): per for b, per in manifest.get("stats", {}).items()
-            }
             # Incremental lane: only buckets this batch's ids (or
             # tombstone ids) hash into are considered — and within
             # those, only part files whose id range intersects the
             # batch are read and rewritten (_prune_bucket_files);
             # every other file carries forward BY REFERENCE in the
-            # next manifest — zero I/O, not even a rename. Bucket ids
-            # are ≤ n_buckets scalars; collecting them is not data.
+            # next manifest. Bucket ids are ≤ n_buckets scalars;
+            # collecting them is not data.
             affected = sorted(
                 r["b"]
                 for r in conformed.select(bucket_of("id").alias("b"))
@@ -1136,21 +1139,16 @@ class Warehouse:
                 .distinct()
                 .collect()
             )
-            aff_files = {
-                b: [
-                    os.path.join(path, f"_cw_bucket={b}", fn)
-                    for fn in prev_buckets.get(b, [])
-                ]
-                for b in affected
-                if prev_buckets.get(b)
-            }
-            stats_by_path = {
-                os.path.join(path, f"_cw_bucket={b}", fn): rng
-                for b, per in prev_stats.items()
-                for fn, rng in per.items()
-            }
+            bucket_files: dict[int, list[str]] = {}
+            stats_by_path: dict[str, list | None] = {}
+            for b in affected:
+                per = manifest["stats"].get(str(b), {})
+                for fn in manifest["buckets"].get(str(b), []):
+                    fp = os.path.join(path, f"_cw_bucket={b}", fn)
+                    bucket_files.setdefault(b, []).append(fp)
+                    stats_by_path[fp] = per.get(fn)
             read_files, untouched = self._prune_bucket_files(
-                aff_files, conformed, tombstones, stats_by_path
+                bucket_files, conformed, tombstones, stats_by_path
             )
             if read_files:
                 # The CURRENT frozen schema + seq, not the manifest's:
@@ -1163,63 +1161,27 @@ class Warehouse:
                 state = self._read_parts(
                     path, manifest, read_files, schema=state_schema
                 ).drop("_cw_bucket")
-        elif os.path.isdir(path) and any(
-            fn.endswith(".parquet") for fn in os.listdir(path)
-        ):
-            # Pre-manifest unpartitioned layout: fold the whole state
-            # in; the first commit re-buckets it and the root-level
-            # files become vacuum-able orphans.
-            state = self.spark.read.parquet(path)
         new_state = merge_batch(state, conformed, tombstones).withColumn(
             "_cw_bucket", bucket_of("id")
         )
-
-        # Write ONLY the merged (affected-bucket) rows to a scratch
-        # dir, slide the uniquely-named part files into the live bucket
-        # dirs, then COMMIT by atomically publishing the next manifest.
-        # A crash anywhere before the manifest rename leaves the table
-        # at its previous version (the new files are unreferenced
-        # orphans vacuum() reclaims) and the unadvanced checkpoint
-        # replays the batch — idempotent by seq.
-        tmp = self._scratch_dir(path)
-        # Local (no-shuffle) sort by id inside each write task: row
-        # groups land id-ordered, so the parquet reader's pushed
-        # id-filters prune at row-group granularity even after
-        # compaction collapses a bucket to one wide-range file.
-        new_state.sortWithinPartitions("_cw_bucket", "id").write.mode(
-            "overwrite"
-        ).partitionBy("_cw_bucket").parquet(tmp)
-        schema_json = new_state.drop("_cw_bucket").schema.json()
-        new_buckets, new_stats = self._publish_tmp(path, tmp)
-
-        if affected is None:
-            next_buckets, next_stats = new_buckets, new_stats
-        else:
-            aff = set(affected)
-            next_buckets = {
-                b: fs for b, fs in prev_buckets.items() if b not in aff
-            }
-            next_stats = {
-                b: per for b, per in prev_stats.items() if b not in aff
-            }
-            for b in affected:
-                carried = [os.path.basename(fp) for fp in untouched.get(b, [])]
-                files = new_buckets.get(b, []) + carried
-                if files:
-                    next_buckets[b] = files
-                    per = dict(new_stats.get(b, {}))
-                    for fn in carried:
-                        per[fn] = prev_stats.get(b, {}).get(fn)
-                    next_stats[b] = per
-                # A bucket whose every row was deleted simply has no
-                # entry in the new version.
-        self._commit_manifest(
+        # Write ONLY the merged (affected-bucket) rows; the unadvanced
+        # checkpoint replays a batch whose commit never landed —
+        # idempotent by seq. Local (no-shuffle) sort by id inside each
+        # write task: row groups land id-ordered, so the parquet
+        # reader's pushed id-filters prune at row-group granularity
+        # even after compaction collapses a bucket to one wide-range
+        # file. A bucket whose every row was deleted simply has no
+        # entry in the new version.
+        self._commit_rewrite(
             path,
+            manifest,
             "merge",
-            next_buckets,
-            schema_json,
-            next_stats,
-            base_version=manifest["version"] if manifest is not None else 0,
+            new_state.sortWithinPartitions("_cw_bucket", "id"),
+            affected,
+            carried={
+                b: [os.path.basename(fp) for fp in fps] for b, fps in untouched.items()
+            },
+            schema_json=new_state.drop("_cw_bucket").schema.json(),
             n_buckets=n_cur,
         )
 
@@ -1291,15 +1253,12 @@ class Warehouse:
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
         if manifest is None:
-            manifest = self._adopt_legacy(path)
-        if manifest is None:
             return 0
         prev = {int(b): fs for b, fs in manifest["buckets"].items()}
         todo = sorted(b for b, fs in prev.items() if len(fs) > max_files_per_bucket)
         if not todo:
             return 0
 
-        tmp = self._scratch_dir(path)
         # Read ONLY the fragmented buckets' referenced files;
         # repartition by the bucket column so each bucket lands in one
         # task → ~one output file.
@@ -1311,24 +1270,7 @@ class Warehouse:
             .repartition(len(todo), "_cw_bucket")
             .sortWithinPartitions("_cw_bucket", "id")
         )
-        df.write.mode("overwrite").partitionBy("_cw_bucket").parquet(tmp)
-        moved, moved_stats = self._publish_tmp(path, tmp)
-        next_buckets = dict(prev)
-        next_stats = {
-            int(b): per for b, per in manifest.get("stats", {}).items()
-        }
-        for b in todo:
-            next_buckets[b] = moved.get(b, [])
-            next_stats[b] = moved_stats.get(b, {})
-        self._commit_manifest(
-            path,
-            "compact",
-            next_buckets,
-            manifest["schema"],
-            next_stats,
-            base_version=manifest["version"],
-            n_buckets=self._manifest_buckets_n(manifest),
-        )
+        self._commit_rewrite(path, manifest, "compact", df, todo)
         return len(todo)
 
     def merge_into(
@@ -1393,17 +1335,14 @@ class Warehouse:
         if delete_col is not None and base_seq > 0 and manifest is not None:
             t_ids = tombstones.select("id").distinct()
             n_cur = self._manifest_buckets_n(manifest)
-            stats = {int(b): per for b, per in manifest.get("stats", {}).items()}
             metas: list[tuple[int, str, str, str]] = []
             probe_files: list[str] = []
             for b, fns in manifest["buckets"].items():
                 for fn in fns:
                     fp = os.path.join(path, f"_cw_bucket={b}", fn)
-                    rng = stats.get(int(b), {}).get(fn)
+                    rng = manifest["stats"].get(b, {}).get(fn)
                     if rng is None:
-                        rng = _parquet_id_range(fp)
-                    if rng is None:
-                        probe_files.append(fp)  # no stats: read it
+                        probe_files.append(fp)  # no recorded range: read it
                     else:
                         metas.append((int(b), fp, rng[0], rng[1]))
             if metas:
@@ -1498,13 +1437,9 @@ class Warehouse:
         assignments: Mapping[str, object] | None,
     ) -> int:
         path = self._table_path(doc_type)
-        manifest = self._load_manifest(path)
-        if manifest is None:
-            manifest = self._adopt_legacy(path)
-        if manifest is None:
-            raise FileNotFoundError(f"no committed table for {doc_type!r}")
+        manifest = self._committed_manifest(path)
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        state = self._read_state(path)
+        state = self._read_parts(path, manifest)
         # One job: matching buckets AND the total match count.
         probe = (
             state.filter(cond)
@@ -1554,29 +1489,12 @@ class Warehouse:
                     updated = enforced
             new_state = keep.unionByName(updated)
 
-        tmp = self._scratch_dir(path)
-        new_state.sortWithinPartitions("_cw_bucket", "id").write.mode(
-            "overwrite"
-        ).partitionBy("_cw_bucket").parquet(tmp)
-        moved, moved_stats = self._publish_tmp(path, tmp)
-        prev = {int(b): fs for b, fs in manifest["buckets"].items()}
-        prev_stats = {int(b): per for b, per in manifest.get("stats", {}).items()}
-        aff_set = set(affected)
-        next_buckets = {b: fs for b, fs in prev.items() if b not in aff_set}
-        next_stats = {b: per for b, per in prev_stats.items() if b not in aff_set}
-        for b in affected:
-            files = moved.get(b, [])
-            if files:
-                next_buckets[b] = files
-                next_stats[b] = moved_stats.get(b, {})
-        self._commit_manifest(
+        self._commit_rewrite(
             path,
+            manifest,
             op,
-            next_buckets,
-            manifest["schema"],
-            next_stats,
-            base_version=manifest["version"],
-            n_buckets=self._manifest_buckets_n(manifest),
+            new_state.sortWithinPartitions("_cw_bucket", "id"),
+            affected,
         )
         self.register_view(doc_type)
         return n_matched
@@ -1730,9 +1648,7 @@ class Warehouse:
         complete; no new version is committed in that case).
         """
         path = self._table_path(doc_type)
-        manifest = self._load_manifest(path)
-        if manifest is None:
-            raise FileNotFoundError(f"no committed table for {doc_type!r}")
+        manifest = self._committed_manifest(path)
         # Ordinary commits (merge/compact/...) don't carry column_stats
         # forward; recover the newest ANALYZE's stats by walking back —
         # sound because stats are keyed by IMMUTABLE file, and pruned
@@ -1804,7 +1720,7 @@ class Warehouse:
             "analyze",
             {int(b): fs for b, fs in manifest["buckets"].items()},
             manifest["schema"],
-            {int(b): per for b, per in manifest.get("stats", {}).items()},
+            {int(b): per for b, per in manifest["stats"].items()},
             base_version=manifest["version"],
             n_buckets=self._manifest_buckets_n(manifest),
             column_stats=new_stats,
@@ -1906,8 +1822,6 @@ class Warehouse:
         src_path = self._table_path(src_type)
         manifest = self._load_manifest(src_path)
         if manifest is None:
-            manifest = self._adopt_legacy(src_path)
-        if manifest is None:
             raise ValueError(f"clone source {src_type!r} has no committed version")
         dst_path = self._table_path(dst_type)
         n_linked = 0
@@ -1927,7 +1841,7 @@ class Warehouse:
             "clone",
             {int(b): list(fs) for b, fs in manifest["buckets"].items()},
             manifest["schema"],
-            {int(b): dict(per) for b, per in manifest.get("stats", {}).items()},
+            {int(b): dict(per) for b, per in manifest["stats"].items()},
             base_version=0,
             n_buckets=self._manifest_buckets_n(manifest),
         )
@@ -1964,8 +1878,6 @@ class Warehouse:
             path = self._table_path(t)
             manifest = self._load_manifest(path)
             if manifest is None:
-                manifest = self._adopt_legacy(path)
-            if manifest is None:
                 continue
             if not self._manifest_files(path, manifest):
                 # Zero-row table: commit the (empty) layout under the
@@ -1976,25 +1888,14 @@ class Warehouse:
                 )
                 done += 1
                 continue
-            tmp = self._scratch_dir(path)
-            (
+            df = (
                 self._read_parts(path, manifest)
                 .withColumn("_cw_bucket", self._bucket_of("id", n_buckets))
                 .repartition(n_buckets, "_cw_bucket")
                 .sortWithinPartitions("_cw_bucket", "id")
-                .write.mode("overwrite")
-                .partitionBy("_cw_bucket")
-                .parquet(tmp)
             )
-            moved, moved_stats = self._publish_tmp(path, tmp)
-            self._commit_manifest(
-                path,
-                "rebucket",
-                moved,
-                manifest["schema"],
-                moved_stats,
-                base_version=manifest["version"],
-                n_buckets=n_buckets,
+            self._commit_rewrite(
+                path, manifest, "rebucket", df, manifest["buckets"], n_buckets=n_buckets
             )
             done += 1
         if doc_type is None:
@@ -2032,11 +1933,8 @@ class Warehouse:
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
         if manifest is None:
-            manifest = self._adopt_legacy(path)
-        if manifest is None:
             return 0
-        prev = {int(b): fs for b, fs in manifest["buckets"].items()}
-        todo = sorted(b for b, fs in prev.items() if fs)
+        todo = sorted(int(b) for b, fs in manifest["buckets"].items() if fs)
         if not todo:
             return 0
         df = self._read_parts(path, manifest)
@@ -2081,32 +1979,14 @@ class Warehouse:
                         F.shiftright(qc, bit).bitwiseAND(F.lit(1)), bit * k + ci
                     )
                 )
-        tmp = self._scratch_dir(path)
-        (
+        df = (
             df.withColumn("_cw_zval", zval)
             .repartition(len(todo), "_cw_bucket")
             .sortWithinPartitions("_cw_bucket", "_cw_zval")
             .drop("_cw_zval", *[f"_mn_{c}" for c in cols if c in numeric],
                   *[f"_st_{c}" for c in cols if c in numeric])
-            .write.mode("overwrite")
-            .partitionBy("_cw_bucket")
-            .parquet(tmp)
         )
-        moved, moved_stats = self._publish_tmp(path, tmp)
-        next_buckets = dict(prev)
-        next_stats = {int(b): per for b, per in manifest.get("stats", {}).items()}
-        for b in todo:
-            next_buckets[b] = moved.get(b, [])
-            next_stats[b] = moved_stats.get(b, {})
-        self._commit_manifest(
-            path,
-            "zorder",
-            next_buckets,
-            manifest["schema"],
-            next_stats,
-            base_version=manifest["version"],
-            n_buckets=self._manifest_buckets_n(manifest),
-        )
+        self._commit_rewrite(path, manifest, "zorder", df, todo)
         return len(todo)
 
     def restore(self, version: int, doc_type: str = DEFAULT_TYPE) -> int:
@@ -2142,7 +2022,7 @@ class Warehouse:
             "restore",
             {int(b): fs for b, fs in manifest["buckets"].items()},
             manifest["schema"],
-            {int(b): per for b, per in manifest.get("stats", {}).items()},
+            {int(b): per for b, per in manifest["stats"].items()},
             base_version=latest["version"],
             # Restoring a layout restores its bucket count too.
             n_buckets=self._manifest_buckets_n(manifest),
@@ -2179,15 +2059,13 @@ class Warehouse:
         partial-aggregated mismatch count.
         """
         path = self._table_path(doc_type)
-        manifest = self._load_manifest(path)
-        if manifest is None:
-            raise FileNotFoundError(f"no committed table for {doc_type!r}")
+        manifest = self._committed_manifest(path)
         n_cur = self._manifest_buckets_n(manifest)
         missing: list[str] = []
         stat_mismatch: list[str] = []
         n_files = 0
         for b, files in manifest["buckets"].items():
-            per = manifest.get("stats", {}).get(b, {})
+            per = manifest["stats"].get(b, {})
             for fn in files:
                 n_files += 1
                 fp = os.path.join(path, f"_cw_bucket={b}", fn)
@@ -2201,7 +2079,7 @@ class Warehouse:
                         stat_mismatch.append(fp)
         misplaced = 0
         if not missing:
-            state = self._read_state(path)
+            state = self._read_parts(path, manifest)
             misplaced = int(
                 state.select(
                     (
@@ -2259,18 +2137,16 @@ class Warehouse:
         return df
 
     def _read_state(self, path: str, version: int | None = None) -> DataFrame:
-        """The snapshot read behind table(), changes() and the row-level
-        rewrites: resolve a manifest (the latest, or an explicit
-        time-travel ``version``) and read exactly its file list
-        (``_read_parts``). The explicit file list IS the snapshot: a
-        commit that lands after this plan is built changes nothing the
-        plan reads, and a zero-row version reads as an empty frame
-        from the manifest's stored schema. Pre-manifest directories
-        fall back to a plain parquet read."""
-        manifest = self._load_manifest(path, version)
-        if manifest is None:
-            return self.spark.read.parquet(path)
-        return self._read_parts(path, manifest)
+        """The snapshot read behind table() and changes(): resolve a
+        manifest (the latest, or an explicit time-travel ``version``)
+        and read exactly its file list (``_read_parts``). The explicit
+        file list IS the snapshot: a commit that lands after this plan
+        is built changes nothing the plan reads, and a zero-row version
+        reads as an empty frame from the manifest's stored schema. A
+        directory with no readable manifest is not a table — part
+        files there are orphans of a first commit that never landed —
+        so it raises ``FileNotFoundError``."""
+        return self._read_parts(path, self._committed_manifest(path, version))
 
     def table(
         self,
@@ -2385,17 +2261,12 @@ class Warehouse:
         relation holding the head version's row, which collecting does
         not recompute — it survives a later ``vacuum``. The driver
         needs the same view of storage that reading manifests and
-        footer stats already requires. Pre-manifest directories fall
-        back to a Spark read of the chosen bucket.
+        footer stats already requires. A table with no readable
+        manifest raises ``FileNotFoundError``, as ``table()`` does.
         """
         path = self._table_path(doc_type)
-        manifest = self._load_manifest(path)
+        manifest = self._committed_manifest(path)
         b = self._bucket_of_id(doc_id, self._manifest_buckets_n(manifest))
-        if manifest is None:
-            df = self._read_state(path)
-            if "_cw_bucket" in df.columns:
-                df = df.filter(F.col("_cw_bucket") == b)
-            return df.filter(F.col("id") == doc_id).drop(SEQ_COL, "_cw_bucket")
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -2403,7 +2274,7 @@ class Warehouse:
             f for f in T.StructType.fromJson(json.loads(manifest["schema"])).fields
             if f.name != SEQ_COL
         ])
-        per = manifest.get("stats", {}).get(str(b), {})
+        per = manifest["stats"].get(str(b), {})
         files = [
             os.path.join(path, f"_cw_bucket={b}", fn)
             for fn in manifest["buckets"].get(str(b), [])

@@ -114,8 +114,8 @@ def test_delete_count_pruned_probe_is_exact(spark, tmp_path):
 
 
 def test_delete_count_footer_fallback_without_manifest_stats(spark, tmp_path):
-    """A pre-stats manifest (stats map emptied) still counts deletes
-    exactly: the prune falls back to per-file footer id ranges."""
+    """A manifest with no recorded id ranges (stats map emptied) still
+    counts deletes exactly: files with no recorded range are read."""
     import json as _json
 
     wh = Warehouse(spark, str(tmp_path / "wh"), "db", n_buckets=2)

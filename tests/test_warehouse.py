@@ -399,6 +399,51 @@ def test_commit_crash_orphans_invisible_and_vacuumed(spark, tmp_path):
     assert {r["id"]: r["name"] for r in wh2.table().collect()} == before
 
 
+def test_uncommitted_first_write_is_not_a_table(spark, tmp_path):
+    """Part files published before a table's FIRST manifest commit —
+    what a process dying between _publish_tmp and _commit_manifest on
+    a fresh table leaves — are orphans, not a table: table() and
+    lookup() raise, the next spool commits over an empty previous
+    version (its 5 rows, not the orphans' 40), and vacuum reclaims
+    every orphan."""
+    import os
+    import shutil
+
+    import pytest
+
+    src = Warehouse(spark, str(tmp_path / "src"), "firstcrash", n_buckets=4)
+    src.spool(person_feed(str(tmp_path / "feed40.jsonl"), n=40))
+    src_path = src._table_path("_default")
+    wh = Warehouse(spark, str(tmp_path / "wh"), "firstcrash", n_buckets=4)
+    path = wh._table_path("_default")
+    orphans = []
+    for entry in os.listdir(src_path):
+        if entry.startswith("_cw_bucket="):
+            shutil.copytree(os.path.join(src_path, entry), os.path.join(path, entry))
+            orphans += [
+                os.path.join(path, entry, fn)
+                for fn in os.listdir(os.path.join(path, entry))
+                if fn.endswith(".parquet")
+            ]
+    assert orphans and not os.path.exists(wh._versions_path(path))
+
+    with pytest.raises(FileNotFoundError):
+        wh.table()
+    with pytest.raises(FileNotFoundError):
+        wh.lookup("person0003")
+
+    wh.spool(person_feed(str(tmp_path / "feed5.jsonl"), n=5))
+    assert [r["op"] for r in wh.history().orderBy("version").collect()] == ["merge"]
+    assert wh.table().count() == 5
+
+    assert wh.vacuum(retain_versions=1, min_age_seconds=0) == len(orphans)
+    assert not any(os.path.exists(fp) for fp in orphans)
+    assert sorted(r["id"] for r in wh.table().collect()) == [
+        f"person{i:04d}" for i in range(5)
+    ]
+    assert len(wh.lookup("person0003").collect()) == 1
+
+
 def test_n_buckets_persisted_across_reopen(spark, tmp_path):
     """The on-disk bucket count must win over the constructor default:
     a reopen with a different n_buckets would otherwise silently
@@ -2023,3 +2068,39 @@ def test_crash_while_saving_schemas_keeps_previous_registry(spark, tmp_path, mon
     reopened.spool(products)
     assert set(reopened.schemas) == {"user", "product"}
     assert reopened.table("product").count() == 5
+
+
+def test_table_reads_and_rewrites_have_one_path():
+    """One read path, one rewrite commit — an ``ast`` scan of
+    warehouse.py: Spark reads parquet only in ``_read_parts`` (every
+    committed table read) and ``quarantined`` (the dead-letter dir,
+    not a table); pyarrow reads part files only in ``lookup``; only
+    ``_commit_rewrite`` writes a scratch dir and publishes it; and no
+    op commits an 'adopt' manifest."""
+    import ast
+
+    from couchwarehouse_spark import warehouse
+
+    with open(warehouse.__file__) as f:
+        tree = ast.parse(f.read())
+    watched = {"self.spark.read", "pq.read_table", "self._scratch_dir", "self._publish_tmp"}
+    used_in: dict[str, set[str]] = {name: set() for name in watched}
+    constants: set[str] = set()
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and ast.unparse(child) in watched:
+                used_in[ast.unparse(child)].add(func)
+            elif isinstance(child, ast.Constant) and isinstance(child.value, str):
+                constants.add(child.value)
+            visit(child, func)
+
+    visit(tree, "<module>")
+    assert used_in["self.spark.read"] == {"_read_parts", "quarantined"}
+    assert used_in["pq.read_table"] == {"lookup"}
+    assert used_in["self._scratch_dir"] == {"_commit_rewrite"}
+    assert used_in["self._publish_tmp"] == {"_commit_rewrite"}
+    assert "adopt" not in constants
