@@ -8,6 +8,12 @@ names must match between the two lanes — alias everything.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +77,40 @@ def scoped_shuffle(spark: SparkSession, n: int):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+@functools.cache
+def _e2e_root() -> str:
+    """This process's root for e2e scratch dirs, made on first use and
+    removed at interpreter exit (by this process, not a forked child)."""
+    root = tempfile.mkdtemp(prefix="cw_scratch_")
+    owner = os.getpid()
+
+    def cleanup() -> None:
+        if os.getpid() == owner:
+            shutil.rmtree(root, ignore_errors=True)
+
+    atexit.register(cleanup)
+    return root
+
+
+def sf_tag(sf_dir: str) -> str:
+    """Short stable tag of an input directory, so the scratch dirs and
+    session-scoped names (memory sinks, views) of one entry run at two
+    scale factors in one session never collide."""
+    return hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+
+
+def e2e_scratch_dir(name: str, sf_dir: str) -> str:
+    """Working directory for one e2e body's feeds, warehouse and
+    checkpoints at ``sf_dir``: ``<root>/<name>_<sf_tag(sf_dir)>``,
+    removed if a previous call left it, and returned ABSENT (callers
+    create what they write). ``<root>`` is per process, so two
+    processes on one host never share, or delete, each other's
+    tables."""
+    path = os.path.join(_e2e_root(), f"{name}_{sf_tag(sf_dir)}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def query_scoped_shuffle(

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from couchwarehouse_spark.catalog import load_table
 from couchwarehouse_spark.plans.dedup import FINGERPRINT_SQL, fingerprint_col
-from couchwarehouse_spark.plans.registry import query, scoped_persist
+from couchwarehouse_spark.plans.registry import e2e_scratch_dir, query, scoped_persist
 from couchwarehouse_spark.plans.sizing import data_width
 
 TRAIN_PCT = 80  # buckets 0-79 → train
@@ -2256,19 +2256,14 @@ def corpus_export_roundtrip_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read), and the verify pass is shard-local — the release of a
     100 TB corpus verifies at scan speed with no driver-side data.
     """
-    import hashlib as _hashlib
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from couchwarehouse_spark.sinks.corpus_export import (
         export_corpus,
         verify_export,
     )
 
-    tag = _hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out_dir = _os.path.join(_tempfile.gettempdir(), f"cw_release_{tag}")
-    _shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = e2e_scratch_dir("cw_release", sf_dir)
 
     d = load_table(spark, sf_dir, "documents")
     manifest = export_corpus(d, out_dir, key="doc_id", n_shards=CE_SHARDS)

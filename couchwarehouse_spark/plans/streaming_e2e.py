@@ -11,16 +11,18 @@ merges included.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from couchwarehouse_spark.catalog import load_table
-from couchwarehouse_spark.plans.registry import query_scoped_shuffle
+from couchwarehouse_spark.plans.registry import (
+    e2e_scratch_dir,
+    query_scoped_shuffle,
+    sf_tag,
+)
 from couchwarehouse_spark.plans.sizing import state_partitions
 
 # Streaming state partitions are FIXED at a query's first run from
@@ -101,11 +103,9 @@ def streaming_window_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     state size is bounded by windows·types, not events. The stage
     write is the test harness, not the operator.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_stream_{tag}")
+    base = e2e_scratch_dir("cw_stream", sf_dir)
     stage = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type", "value")
     ev.repartition(SW_STAGE_FILES).write.mode("overwrite").parquet(stage)
@@ -123,7 +123,7 @@ def streaming_window_counts_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("value_cents"),
     )
-    qname = f"cw_stream_out_{tag}"
+    qname = f"cw_stream_out_{sf_tag(sf_dir)}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -183,11 +183,9 @@ def streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ``streaming_dedup_watermark_e2e`` (the warehouse's bucketed
     merge is the other bounded lane).
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sdedup_{tag}")
+    base = e2e_scratch_dir("cw_sdedup", sf_dir)
     stage = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
@@ -207,7 +205,7 @@ def streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_unique_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
-    qname = f"cw_sdedup_out_{tag}"
+    qname = f"cw_sdedup_out_{sf_tag(sf_dir)}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -313,12 +311,10 @@ def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is keyed by user_id and bounded by watermark horizon
     × per-user event rate; the stage write is harness, not operator.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sjoin_{tag}")
+    base = e2e_scratch_dir("cw_sjoin", sf_dir)
     stage_v = os.path.join(base, "views")
     stage_p = os.path.join(base, "purch")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "event_type", "value")
     _stage_by_event_time(
@@ -359,7 +355,7 @@ def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             AND purchase_ts <= view_ts + INTERVAL {SJ_ATTR_HOURS} HOUR"""
         ),
     )
-    qname = f"cw_sjoin_out_{tag}"
+    qname = f"cw_sjoin_out_{sf_tag(sf_dir)}"
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -416,11 +412,9 @@ def streaming_static_enrich_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented trade-off vs a stale cached copy. The stage write
     is harness, not operator.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_senrich_{tag}")
+    base = e2e_scratch_dir("cw_senrich", sf_dir)
     stage = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     (
         load_table(spark, sf_dir, "orders")
@@ -455,7 +449,7 @@ def streaming_static_enrich_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("revenue_cents"),
     )
-    qname = f"cw_senrich_out_{tag}"
+    qname = f"cw_senrich_out_{sf_tag(sf_dir)}"
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -538,11 +532,9 @@ def streaming_session_state_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sess_{tag}")
+    base = e2e_scratch_dir("cw_sess", sf_dir)
     stage = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     # events.ts is TIMESTAMP_NTZ; unix_micros needs an instant. The
     # session-tz cast adds a CONSTANT offset, which cancels in every
@@ -619,7 +611,7 @@ def streaming_session_state_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    qname = f"cw_sess_out_{tag}"
+    qname = f"cw_sess_out_{sf_tag(sf_dir)}"
     q = (
         sessions.writeStream.format("memory")
         .queryName(qname)
@@ -688,12 +680,10 @@ def warehouse_streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     batch lane runs; the streaming checkpoint adds offset-exact
     resume. The stage write is harness, not operator.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_wstream_{tag}")
+    base = e2e_scratch_dir("cw_wstream", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % WI_SUBSET == 0
@@ -867,12 +857,10 @@ def streaming_left_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFr
     attribution-with-fallback shape ("did the view convert within an
     hour, or do we bill it as unconverted?").
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sljoin_{tag}")
+    base = e2e_scratch_dir("cw_sljoin", sf_dir)
     stage_v = os.path.join(base, "views")
     stage_p = os.path.join(base, "purch")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select(
         "ts", "user_id", "event_type", "value"
@@ -912,7 +900,7 @@ def streaming_left_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFr
         ),
         "left_outer",
     )
-    qname = f"cw_sljoin_out_{tag}"
+    qname = f"cw_sljoin_out_{sf_tag(sf_dir)}"
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -982,12 +970,10 @@ def streaming_restart_resume_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of table size; each resumed micro-batch is the same
     bucket-pruned merge as steady state.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_rstream_{tag}")
+    base = e2e_scratch_dir("cw_rstream", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % RR_SUBSET == 0
@@ -1163,11 +1149,9 @@ def streaming_dedup_watermark_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     history| — the entire reason this operator exists; eviction is
     the state store's native TTL, no user code.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_wmdedup_{tag}")
+    base = e2e_scratch_dir("cw_wmdedup", sf_dir)
     stage = os.path.join(base, "in")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     pass1 = d.withColumn(
@@ -1209,7 +1193,7 @@ def streaming_dedup_watermark_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
         .withWatermark("ts", WD_DELAY)
         .dropDuplicatesWithinWatermark(["doc_id"])
     )
-    qname = f"cw_wmdedup_out_{tag}"
+    qname = f"cw_wmdedup_out_{sf_tag(sf_dir)}"
     q = (
         stream.writeStream.format("memory")
         .queryName(qname)
@@ -1351,12 +1335,10 @@ def concurrent_compact_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     put-if-absent (one winner per version) plus idempotent-by-seq
     replay, not from scheduling maintenance windows.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base_dir = os.path.join(tempfile.gettempdir(), f"cw_cci_{tag}")
+    base_dir = e2e_scratch_dir("cw_cci", sf_dir)
     feed_dir = os.path.join(base_dir, "feed")
     wh_dir = os.path.join(base_dir, "wh")
     ckpt = os.path.join(base_dir, "ckpt")
-    shutil.rmtree(base_dir, ignore_errors=True)
 
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % CI_SUBSET == 0
@@ -1595,12 +1577,10 @@ def streaming_full_outer_interval_join_e2e(
     left's wm > view_ts + window — state is never larger than the
     left-outer case.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sfojoin_{tag}")
+    base = e2e_scratch_dir("cw_sfojoin", sf_dir)
     stage_v = os.path.join(base, "views")
     stage_p = os.path.join(base, "purch")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "event_type")
     _stage_by_event_time(
@@ -1638,7 +1618,7 @@ def streaming_full_outer_interval_join_e2e(
         ),
         "full_outer",
     )
-    qname = f"cw_sfojoin_out_{tag}"
+    qname = f"cw_sfojoin_out_{sf_tag(sf_dir)}"
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)

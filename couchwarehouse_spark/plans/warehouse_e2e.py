@@ -15,16 +15,17 @@ nothing transits the driver but the per-type first doc.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from couchwarehouse_spark.catalog import load_table
-from couchwarehouse_spark.plans.registry import query_scoped_shuffle
+from couchwarehouse_spark.plans.registry import (
+    e2e_scratch_dir,
+    query_scoped_shuffle,
+    sf_tag,
+)
 from couchwarehouse_spark.plans.sizing import data_width, state_partitions
 from couchwarehouse_spark.warehouse import Warehouse
 
@@ -217,11 +218,9 @@ def warehouse_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     must produce straight from the source rows: amendments win by seq,
     tombstoned orders vanish, everything else survives exactly once.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_e2e_{tag}")
+    base = e2e_scratch_dir("cw_e2e", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir)
     wh = Warehouse(spark, wh_dir, "e2eorders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -265,10 +264,8 @@ def time_travel_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same shape as snapshot_cdc (operators/upsert.py:snapshot_diff),
     here applied across table VERSIONS instead of table copies.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_ttcdc_{tag}")
+    base = e2e_scratch_dir("cw_ttcdc", sf_dir)
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     feed1, feed2 = _build_two_phase_feeds(
         spark, sf_dir, os.path.join(base, "feeds"), TT_SUBSET
@@ -334,11 +331,9 @@ def predicate_delete_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciliation joins the CDF diff (delete-count sized) to the
     pre-delete snapshot on the bucket-colocated id key.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_pdel_{tag}")
+    base = e2e_scratch_dir("cw_pdel", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, subset=PD_SUBSET)
     wh = Warehouse(spark, wh_dir, "pdorders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -431,11 +426,9 @@ def warehouse_split_transform_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     to its own type's table. The final union+agg reads two conformed
     tables and hash-aggregates on (kind, status_norm).
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_split_{tag}")
+    base = e2e_scratch_dir("cw_split", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     orders = (
         load_table(spark, sf_dir, "orders")
@@ -550,11 +543,9 @@ def zorder_relayout_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Bucket layout is preserved, so merge pruning and point
     lookups keep their contract after the relayout.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_zorder_{tag}")
+    base = e2e_scratch_dir("cw_zorder", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, subset=ZR_SUBSET)
     wh = Warehouse(spark, wh_dir, "zorders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -691,10 +682,8 @@ def schema_evolution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-backfilled at scan time, exactly Delta/iceberg add-column
     semantics); the amendment merge itself stays bucket-pruned.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sevo_{tag}")
+    base = e2e_scratch_dir("cw_sevo", sf_dir)
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     feed1, feed2 = _build_evolution_feeds(
         spark, sf_dir, os.path.join(base, "feeds"), SE_SUBSET
@@ -771,11 +760,9 @@ def constraint_quarantine_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per batch plus a filtered dead-letter append — no second
     scan of the table; the merge itself stays bucket-pruned.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_cquar_{tag}")
+    base = e2e_scratch_dir("cw_cquar", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, subset=CQ_SUBSET)
     wh = Warehouse(
@@ -840,11 +827,9 @@ def restore_version_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the target version's file list; nothing is rewritten, and the
     incident version stays readable for forensics until vacuum.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_restore_{tag}")
+    base = e2e_scratch_dir("cw_restore", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, subset=RV_SUBSET)
     wh = Warehouse(spark, wh_dir, "rvorders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -906,10 +891,8 @@ def clone_divergence_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     referencing table vacuums, so neither side's retention can
     corrupt the other.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_clone_{tag}")
+    base = e2e_scratch_dir("cw_clone", sf_dir)
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     feed1, feed2 = _build_two_phase_feeds(
         spark, sf_dir, os.path.join(base, "feeds"), CL_SUBSET
@@ -995,11 +978,9 @@ def update_where_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets rewrite; the CDF diff joins two snapshots on the
     bucket-colocated id key.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_uwcdc_{tag}")
+    base = e2e_scratch_dir("cw_uwcdc", sf_dir)
     feed_dir = os.path.join(base, "feed")
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, subset=UW_SUBSET)
     wh = Warehouse(spark, wh_dir, "uworders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -1107,10 +1088,8 @@ def compact_small_files_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     fragments stay for older snapshots until vacuum, so concurrent
     readers never break.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_compact_{tag}")
+    base = e2e_scratch_dir("cw_compact", sf_dir)
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     feed_a = os.path.join(base, "feed_a")
     feed_b = os.path.join(base, "feed_b")
@@ -1171,10 +1150,8 @@ def vacuum_retention_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     protects in-flight readers in production (0 here: the entry owns
     the table).
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_vacuum_{tag}")
+    base = e2e_scratch_dir("cw_vacuum", sf_dir)
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     feed1, feed2 = _build_two_phase_feeds(
         spark, sf_dir, os.path.join(base, "feeds"), VC_SUBSET
@@ -1233,10 +1210,8 @@ def rebucket_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     right-sized units. Bucket count is version state, so time travel
     across the relayout keeps working.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_rebucket_{tag}")
+    base = e2e_scratch_dir("cw_rebucket", sf_dir)
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     feed1, feed2 = _build_two_phase_feeds(
         spark, sf_dir, os.path.join(base, "feeds"), RB_SUBSET
@@ -1313,11 +1288,9 @@ def merge_into_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     only buckets the incoming ids hash into rewrite; the seq probe is
     one partial-aggregated max.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_mi_{tag}")
+    base = e2e_scratch_dir("cw_mi", sf_dir)
     wh_dir = os.path.join(base, "wh")
     feed_dir = os.path.join(base, "feed")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, phase=1, subset=MI_SUBSET)
     wh = Warehouse(spark, wh_dir, "miorders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -1421,11 +1394,9 @@ def analyze_stats_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     steady-state re-ANALYZE cost tracks the merge rate, not the
     table size.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_az_{tag}")
+    base = e2e_scratch_dir("cw_az", sf_dir)
     wh_dir = os.path.join(base, "wh")
     feed_dir = os.path.join(base, "feed")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, subset=AZ_SUBSET)
     wh = Warehouse(spark, wh_dir, "azorders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -1506,10 +1477,8 @@ def asof_timestamp_read_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: timestamp resolution is a scan of retained manifest JSONs
     (bounded by retention), then the ordinary snapshot read.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_ao_{tag}")
+    base = e2e_scratch_dir("cw_ao", sf_dir)
     wh_dir = os.path.join(base, "wh")
-    shutil.rmtree(base, ignore_errors=True)
 
     feed1, feed2 = _build_two_phase_feeds(
         spark, sf_dir, os.path.join(base, "feeds"), AO_SUBSET
@@ -1571,11 +1540,9 @@ def fsck_integrity_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (3) is one partial-aggregated bucket-recompute scan — the cost of
     a single census query, not a repair job.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_fsck_{tag}")
+    base = e2e_scratch_dir("cw_fsck", sf_dir)
     wh_dir = os.path.join(base, "wh")
     feed_dir = os.path.join(base, "feed")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, subset=FSCK_SUBSET)
     wh = Warehouse(spark, wh_dir, "fsckorders", reset=True, feed_schema=FEED_DOC_DDL)
@@ -1648,17 +1615,15 @@ def masked_view_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: masking is a per-read projection on the scan — zero
     storage cost, always reflecting the current version.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_mv_{tag}")
+    base = e2e_scratch_dir("cw_mv", sf_dir)
     wh_dir = os.path.join(base, "wh")
     feed_dir = os.path.join(base, "feed")
-    shutil.rmtree(base, ignore_errors=True)
 
     _build_feed(spark, sf_dir, feed_dir, phase=1, subset=MV_SUBSET)
     wh = Warehouse(spark, wh_dir, "mvorders", reset=True, feed_schema=FEED_DOC_DDL)
     wh.spool(feed_dir)
 
-    view_name = f"cw_masked_{tag}"
+    view_name = f"cw_masked_{sf_tag(sf_dir)}"
     mv = wh.create_masked_view(
         view_name,
         rules={

@@ -845,10 +845,11 @@ class Warehouse:
         struct = schema_to_struct(self.schemas[doc_type])
 
         # Persisted: the incremental lane reads this frame twice (the
-        # affected-bucket probe and the merge write) — without a persist
-        # the flatten/transform/selector/conform pipeline would run
-        # twice per micro-batch. Released in the finally below so a
-        # failed write cannot leak the cached frame for the session.
+        # per-bucket id-range aggregate, _id_ranges, and the merge
+        # write) — without a persist the flatten/transform/selector/
+        # conform pipeline would run twice per micro-batch. Released
+        # in the finally below so a failed write cannot leak the
+        # cached frame for the session.
         conformed = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
         try:
             conformed = self._enforce_constraints(conformed, doc_type)
@@ -913,99 +914,52 @@ class Warehouse:
             mx = max(mx, int(row["m"] or 0))
         return mx
 
+    def _id_ranges(
+        self, ids: DataFrame, n_buckets: int
+    ) -> dict[int, tuple[str | None, str | None]]:
+        """The batch's ``id`` range per bucket it hashes into (bucket →
+        (min id, max id)), under ``n_buckets`` — the version's recorded
+        count. One aggregate whose result is bounded by the bucket
+        count, not by the data: the keys are the affected buckets, and
+        the ranges are what ``_prune_bucket_files`` tests the
+        manifest's recorded file ranges against. A bucket whose every
+        id is NULL keeps its entry, with a (None, None) range."""
+        return {
+            r["b"]: (r["lo"], r["hi"])
+            for r in ids.groupBy(self._bucket_of("id", n_buckets).alias("b"))
+            .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
+            .collect()
+        }
+
     def _prune_bucket_files(
         self,
-        bucket_files: dict[int, list[str]],
-        conformed: DataFrame,
-        tombstones: DataFrame,
-        stats_by_path: dict[str, list | None],
+        path: str,
+        manifest: dict,
+        ranges: dict[int, tuple[str | None, str | None]],
     ) -> tuple[list[str], dict[int, list[str]]]:
-        """File-level merge pruning WITHIN affected buckets: a part
-        file whose ``id`` min/max range contains no batch id needs no
-        rewrite — its rows can't compete in the latest-wins window
-        (state holds exactly one row per id, so a touched id's single
-        copy always lives in a file whose range covers it).
-        ``bucket_files`` is the current manifest's view of the affected
-        buckets (bucket id → absolute part-file paths);
-        ``stats_by_path`` is the manifest's recorded id ranges, so no
-        parquet footer is touched here (stats were read once at
-        publish — Delta's stats-in-log). Returns (files to merge,
-        per-bucket untouched files the next manifest carries forward
-        by reference). The range-vs-batch-id check is a broadcast semi
-        join, not a collect of ids. A file with no recorded range (its
-        footer had no id statistics at publish, and part files are
-        immutable) is conservatively merged."""
-        metas: list[tuple[int, str, str, str]] = []
+        """File-level merge pruning WITHIN the buckets of ``ranges``
+        (``_id_ranges``), on the driver, with no Spark job: a part file
+        whose recorded ``id`` [min, max] does not overlap its bucket's
+        batch [lo, hi] needs no rewrite — state holds one row per id,
+        so a touched id's single copy lives in a file whose range
+        covers it. The test is per bucket, not per id: a file the
+        batch's ids straddle, with none inside it, is still read.
+        Files with no recorded range (no footer id statistics at
+        publish), and the files of a bucket whose batch ids are all
+        NULL, are read. Returns (absolute paths of the files to read,
+        bucket → names of the untouched files, which the next manifest
+        carries forward by reference)."""
         read_files: list[str] = []
-        for b, files in bucket_files.items():
-            for fp in files:
-                rng = stats_by_path.get(fp)
-                if rng is None:
-                    read_files.append(fp)
-                else:
-                    metas.append((b, fp, rng[0], rng[1]))
-        hit: set[str] = set()
-        if metas:
-            meta_df = self._literal_frame(
-                metas, ["b", "file", "min_id", "max_id"]
-            )
-            touched = conformed.select("id").unionByName(tombstones.select("id"))
-            hit = {
-                r["file"]
-                for r in meta_df.join(
-                    touched,
-                    (F.col("id") >= F.col("min_id"))
-                    & (F.col("id") <= F.col("max_id")),
-                    "left_semi",
-                )
-                .select("file")
-                .collect()
-            }
         untouched: dict[int, list[str]] = {}
-        for b, fp, _, _ in metas:
-            if fp in hit:
-                read_files.append(fp)
-            else:
-                untouched.setdefault(b, []).append(fp)
+        for b, (lo, hi) in ranges.items():
+            per = manifest["stats"].get(str(b), {})
+            for fn in manifest["buckets"].get(str(b), []):
+                rng = per.get(fn)
+                if rng is None or lo is None or (rng[0] <= hi and lo <= rng[1]):
+                    read_files.append(os.path.join(path, f"_cw_bucket={b}", fn))
+                else:
+                    untouched.setdefault(b, []).append(fn)
         return read_files, untouched
-
-    _LITERAL_CHUNK = 500  # structs per explode()d array literal
-    _LITERAL_MAX = 20_000  # above this, fall back to createDataFrame
-
-    def _literal_frame(self, rows: list[tuple], names: list[str]) -> DataFrame:
-        """Small driver-side row list → DataFrame as a PURE EXPRESSION
-        plan (explode of struct-array literals), not a parallelized
-        Python RDD: ``spark.createDataFrame(list)`` plans a Python-RDD
-        scan whose per-use worker round-trip costs ~1-2 s inside every
-        join it feeds — measured directly on the merge prune at sf0.1.
-        Chunked arrays bound expression depth; beyond _LITERAL_MAX rows
-        (a table with tens of thousands of live files per affected set)
-        the literal plan itself would dominate, so fall back."""
-        if len(rows) > self._LITERAL_MAX:
-            schema = ", ".join(
-                f"{n} {'int' if isinstance(rows[0][i], int) else 'string'}"
-                for i, n in enumerate(names)
-            )
-            return self.spark.createDataFrame(rows, schema)
-        chunks = []
-        for i in range(0, len(rows), self._LITERAL_CHUNK):
-            arr = F.array(
-                *[
-                    F.struct(
-                        *[F.lit(v).alias(n) for v, n in zip(row, names)]
-                    )
-                    for row in rows[i : i + self._LITERAL_CHUNK]
-                ]
-            )
-            chunks.append(
-                self.spark.range(1)
-                .select(F.explode(arr).alias("_s"))
-                .select("_s.*")
-            )
-        out = chunks[0]
-        for c in chunks[1:]:
-            out = out.unionByName(c)
-        return out
 
     def _publish_tmp(
         self, path: str, tmp: str
@@ -1118,38 +1072,24 @@ class Warehouse:
         # merge that hashed with the wrong count would prune the
         # wrong buckets and write files no reader looks for.
         n_cur = self._manifest_buckets_n(manifest)
-        bucket_of = lambda c: self._bucket_of(c, n_cur)  # noqa: E731
         # A fresh table is an empty previous version: no bucket to
         # probe, no state to fold, nothing carried.
         state = None
         affected: list[int] = []
         untouched: dict[int, list[str]] = {}
         if manifest is not None:
-            # Incremental lane: only buckets this batch's ids (or
-            # tombstone ids) hash into are considered — and within
-            # those, only part files whose id range intersects the
-            # batch are read and rewritten (_prune_bucket_files);
+            # Incremental lane: only the buckets this batch's ids (or
+            # tombstone ids) hash into are rewritten — and within
+            # those, only part files whose recorded id range overlaps
+            # the bucket's batch id range are read (_prune_bucket_files);
             # every other file carries forward BY REFERENCE in the
-            # next manifest. Bucket ids are ≤ n_buckets scalars;
-            # collecting them is not data.
-            affected = sorted(
-                r["b"]
-                for r in conformed.select(bucket_of("id").alias("b"))
-                .unionByName(tombstones.select(bucket_of("id").alias("b")))
-                .distinct()
-                .collect()
+            # next manifest. One aggregate gives both the buckets and
+            # their ranges; its result is ≤ n_buckets rows.
+            ranges = self._id_ranges(
+                conformed.select("id").unionByName(tombstones.select("id")), n_cur
             )
-            bucket_files: dict[int, list[str]] = {}
-            stats_by_path: dict[str, list | None] = {}
-            for b in affected:
-                per = manifest["stats"].get(str(b), {})
-                for fn in manifest["buckets"].get(str(b), []):
-                    fp = os.path.join(path, f"_cw_bucket={b}", fn)
-                    bucket_files.setdefault(b, []).append(fp)
-                    stats_by_path[fp] = per.get(fn)
-            read_files, untouched = self._prune_bucket_files(
-                bucket_files, conformed, tombstones, stats_by_path
-            )
+            affected = sorted(ranges)
+            read_files, untouched = self._prune_bucket_files(path, manifest, ranges)
             if read_files:
                 # The CURRENT frozen schema + seq, not the manifest's:
                 # a batch that just evolved the schema reads the new
@@ -1162,7 +1102,7 @@ class Warehouse:
                     path, manifest, read_files, schema=state_schema
                 ).drop("_cw_bucket")
         new_state = merge_batch(state, conformed, tombstones).withColumn(
-            "_cw_bucket", bucket_of("id")
+            "_cw_bucket", self._bucket_of("id", n_cur)
         )
         # Write ONLY the merged (affected-bucket) rows; the unadvanced
         # checkpoint replays a batch whose commit never landed —
@@ -1178,9 +1118,7 @@ class Warehouse:
             "merge",
             new_state.sortWithinPartitions("_cw_bucket", "id"),
             affected,
-            carried={
-                b: [os.path.basename(fp) for fp in fps] for b, fps in untouched.items()
-            },
+            carried=untouched,
             schema_json=new_state.drop("_cw_bucket").schema.json(),
             n_buckets=n_cur,
         )
@@ -1295,10 +1233,13 @@ class Warehouse:
         actually existed in the pre-merge state — a delete for an
         absent id is a no-op and is NOT counted.
 
-        Scale: the seq probe is one partial-aggregated max; everything
-        else reuses the bucket-pruned incremental merge (only buckets
-        the incoming ids hash into rewrite; untouched files carry
-        forward by reference).
+        Scale: the seq probe reads per-file footer maxima, with no
+        scan. The delete count and the merge both prune with
+        ``_prune_bucket_files`` over one per-bucket id-range aggregate
+        (``_id_ranges``): only buckets the incoming ids hash into are
+        read, only their files whose recorded id range overlaps the
+        bucket's incoming range are rewritten, and the rest carry
+        forward by reference.
         """
         if "id" not in df.columns:
             raise ValueError("merge_into frame needs an 'id' column")
@@ -1325,42 +1266,20 @@ class Warehouse:
         # Deletes that matched an existing row, counted against the
         # PRE-merge state (after the merge the ids are gone) — a
         # tombstone for an absent id is a no-op, not an applied row.
-        # The existence probe reads only files that could hold a
-        # tombstoned id: each id lives in exactly bucket
-        # pmod(xxhash64(id), n) and in a file whose recorded id range
-        # covers it, so one semi-join against the manifest's literal
-        # (bucket, file, range) metas prunes the read down from the
-        # full state (previously a whole-table scan per delete-merge).
+        # The count is exact (a semi join of the tombstoned ids against
+        # the state), but it reads only files that could hold one: each
+        # id lives in bucket pmod(xxhash64(id), n), in a file whose
+        # recorded id range covers it, so the same driver-side prune
+        # the merge uses picks them from the tombstones' per-bucket id
+        # ranges.
         n_del = 0
         if delete_col is not None and base_seq > 0 and manifest is not None:
             t_ids = tombstones.select("id").distinct()
-            n_cur = self._manifest_buckets_n(manifest)
-            metas: list[tuple[int, str, str, str]] = []
-            probe_files: list[str] = []
-            for b, fns in manifest["buckets"].items():
-                for fn in fns:
-                    fp = os.path.join(path, f"_cw_bucket={b}", fn)
-                    rng = manifest["stats"].get(b, {}).get(fn)
-                    if rng is None:
-                        probe_files.append(fp)  # no recorded range: read it
-                    else:
-                        metas.append((int(b), fp, rng[0], rng[1]))
-            if metas:
-                meta_df = self._literal_frame(
-                    metas, ["b", "file", "min_id", "max_id"]
-                )
-                probe_files += [
-                    r["file"]
-                    for r in meta_df.join(
-                        t_ids,
-                        (self._bucket_of("id", n_cur) == F.col("b"))
-                        & (F.col("id") >= F.col("min_id"))
-                        & (F.col("id") <= F.col("max_id")),
-                        "left_semi",
-                    )
-                    .select("file")
-                    .collect()
-                ]
+            probe_files, _ = self._prune_bucket_files(
+                path,
+                manifest,
+                self._id_ranges(t_ids, self._manifest_buckets_n(manifest)),
+            )
             if probe_files:
                 state_ids = self._read_parts(path, manifest, probe_files).select("id")
                 n_del = t_ids.join(state_ids, "id", "left_semi").count()

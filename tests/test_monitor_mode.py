@@ -41,11 +41,12 @@ def test_monitor_tails_new_pages(spark, tmp_path):
         processing_time="1 seconds",
     )
     def table_count():
-        """Poll helper: a read can race the snapshot swap mid-scan —
-        treat transient read errors as 'not there yet'."""
+        """Poll helper: before the first commit the table has no
+        manifest, and reading it raises FileNotFoundError — 'not there
+        yet'. Any other read fault fails the test."""
         try:
             return wh.table().count()
-        except Exception:
+        except FileNotFoundError:
             return -1
 
     try:
@@ -129,7 +130,8 @@ def test_mixed_field_batch_is_lossless(spark, tmp_path):
 
 
 def _count(wh):
+    """Row count, or -1 while the table has no committed manifest."""
     try:
         return wh.table().count()
-    except Exception:
+    except FileNotFoundError:
         return -1
