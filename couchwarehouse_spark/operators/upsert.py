@@ -37,8 +37,11 @@ from pyspark.sql import functions as F
 SEQ_COL = "_cw_seq"  # numeric change-sequence attached by the ingest layer
 
 
-def latest_wins(df: DataFrame, key: str = "id", seq: str = SEQ_COL) -> DataFrame:
+def latest_wins(
+    df: DataFrame, key: str | list[str] = "id", seq: str = SEQ_COL
+) -> DataFrame:
     """Keep only each key's highest-seq row (R11's upsert semantics).
+    A list ``key`` is a composite key of those columns.
 
     ``row_number`` (not ``rank``) guarantees exactly one survivor per
     key even on seq ties; ties break arbitrarily-but-deterministically

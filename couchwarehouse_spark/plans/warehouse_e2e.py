@@ -1133,10 +1133,12 @@ VC_SUBSET = 19  # vacuum e2e feeds only o_orderkey % 19 == 0
     """,
 )
 def vacuum_retention_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VACUUM retention under the oracle gate: two spools create a
-    superseded snapshot, ``vacuum(retain_versions=1,
-    min_age_seconds=0)`` reclaims every file only version 1
-    references, and the entry queries the surviving head — the oracle
+    """VACUUM retention under the oracle gate: two spools and a
+    compaction create superseded files (a merge appends and marks the
+    rows it supersedes dead, so only a rewrite leaves a file
+    unreferenced), ``vacuum(retain_versions=1, min_age_seconds=0)``
+    reclaims every file only the older versions reference, and the
+    entry queries the surviving head — the oracle
     states the full post-ETL census from ``orders``, so a hash match
     certifies vacuum deleted ONLY unreferenced bytes (one live row
     lost or one stale file resurrected would flip a count). The
@@ -1159,6 +1161,7 @@ def vacuum_retention_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = Warehouse(spark, wh_dir, "vcorders", reset=True, feed_schema=FEED_DOC_DDL)
     wh.spool(feed1)
     wh.spool(feed2)
+    assert wh.compact(max_files_per_bucket=1) > 0, "the second spool appended nothing"
     n_reclaimed = wh.vacuum(retain_versions=1, min_age_seconds=0.0)
     assert n_reclaimed > 0, "nothing reclaimed — the retention e2e is vacuous"
     try:

@@ -50,6 +50,11 @@ def get_spark(
         # events.parquet stores TIMESTAMP(NANOS) which the vectorized
         # reader rejects; read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Warehouse reads pass each manifest file as a root path. Above
+        # this many paths (default 32) Spark lists them with a Spark
+        # job, one task per file, on every read, although the manifest
+        # already is the listing: keep the listing on the driver.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(1 << 16))
         .config("spark.ui.enabled", "false")
     )
     # NB: spark.driver.memory cannot be set here — by the time

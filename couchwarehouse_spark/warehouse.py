@@ -16,12 +16,15 @@ micro-batch analog of the reference's 'batch' event loop
 (reference index.js:105-125).
 
 Scale: tables are hash-bucket-partitioned on ``id`` (parquet
-``_cw_bucket=K`` directories); a batch rewrites ONLY the buckets its
-ids hash into — per-batch I/O is proportional to the batch, not the
-table (the reference's per-row ``REPLACE INTO``, reference
-lib/sqlite.js:82, expressed as partition-level merge). Ids never
-change buckets, so the merge plan (window latest-wins + tombstone
-union) runs bucket-pruned. Commits are MANIFEST SNAPSHOTS in the
+``_cw_bucket=K`` directories), and a merge is MERGE-ON-READ: a batch
+appends its winning rows as one new part file per bucket they hash
+into and records, in the same manifest, which stored row versions
+they supersede (the dead set, Delta's deletion vectors / Iceberg's
+row-level deletes) — per-batch write I/O is proportional to the batch,
+not the table (the reference's per-row ``REPLACE INTO``, reference
+lib/sqlite.js:82). Every reader drops dead rows; a bucket is folded
+back to one file once an append would leave it with more than
+``MAX_FILES_PER_BUCKET`` files. Commits are MANIFEST SNAPSHOTS in the
 Delta-lake style: a merge writes new part files alongside the old
 ones and then atomically renames one JSON manifest listing exactly
 the files that make up the new version — readers resolve the latest
@@ -55,8 +58,10 @@ from couchwarehouse_spark.operators.document import (
     usable_table_name,
 )
 from couchwarehouse_spark.operators.upsert import (
+    DELETED_COL,
     SEQ_COL,
     CheckpointStore,
+    latest_wins,
     merge_batch,
     write_json_atomic,
 )
@@ -127,6 +132,37 @@ def _parquet_seq_max(fp: str) -> int | None:
             return None
         mx = st.max if mx is None or st.max > mx else mx
     return mx
+
+
+def _dead_key(seq: int, doc_id: str | None) -> str:
+    """The dead-set name of one stored row version, ``<seq>:<id>``
+    (``<seq>`` alone for a NULL id): what readers compute per row as
+    ``concat_ws(':', _cw_seq, id)`` (``_DEAD_KEY_SQL``). A feed row's
+    seq is its change's seq and ``merge_into`` stamps one seq on ids
+    made unique, so the pair names exactly one version."""
+    return str(seq) if doc_id is None else f"{seq}:{doc_id}"
+
+
+_DEAD_KEY_SQL = f"concat_ws(':', cast({SEQ_COL} AS string), id)"
+
+
+def _not_in_sql(keys) -> str:
+    """``_DEAD_KEY_SQL NOT IN (<keys as SQL string literals>)`` — one
+    predicate string, parsed once by ``F.expr``; Catalyst turns the
+    literal list into a hash set."""
+    lits = ", ".join(
+        "'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys
+    )
+    return f"{_DEAD_KEY_SQL} NOT IN ({lits})"
+
+
+def _dead_digest(keys) -> str:
+    """A fingerprint of one bucket's dead set: per-file ANALYZE stats
+    count live rows, so they hold only while the dead set they were
+    computed under is unchanged."""
+    import hashlib
+
+    return hashlib.sha1("\n".join(sorted(keys)).encode()).hexdigest()[:16] if keys else ""
 
 
 def _logical_of(dtype: T.DataType) -> str:
@@ -509,11 +545,17 @@ class Warehouse:
         base_version: int | None = None,
         n_buckets: int | None = None,
         column_stats: dict | None = None,
+        dead: dict[int, list[str]] | None = None,
+        metrics: dict | None = None,
     ) -> int:
         """Atomically publish a new table version. ``buckets`` maps
         bucket id → part-file names relative to that bucket's dir;
         ``stats`` carries each file's [min_id, max_id] (or None when
-        footer statistics were absent) for metadata-only pruning.
+        footer statistics were absent) for metadata-only pruning;
+        ``dead`` maps bucket id → the ``_dead_key`` names of the row
+        versions in that bucket's files that later rows superseded
+        (every reader drops them); ``metrics`` records what the
+        committing op did.
 
         ``base_version`` pins the commit to exactly ``base + 1`` — the
         version of the manifest the caller READ when planning its write
@@ -546,7 +588,10 @@ class Warehouse:
                 str(b): dict(sorted(per.items()))
                 for b, per in sorted((stats or {}).items())
             },
+            "dead": {str(b): sorted(keys) for b, keys in sorted((dead or {}).items()) if keys},
         }
+        if metrics is not None:
+            manifest["metrics"] = metrics
         if column_stats is not None:
             # ANALYZE output: {bucket: {file: {col: {min, max, nulls,
             # ndv}, "_rows": n}}} — per-FILE so stats survive any
@@ -670,7 +715,9 @@ class Warehouse:
         would take whichever footer comes first — dropping the column
         or failing. Declared, a missing column reads as typed NULLs
         per file, and each table version reads with the schema it
-        committed (Delta's schema-per-log-entry)."""
+        committed (Delta's schema-per-log-entry). Rows the manifest's
+        dead set names are filtered out, so every reader sees one live
+        row per id."""
         if schema is None:
             schema = T.StructType.fromJson(json.loads(manifest["schema"]))
         read_schema = T.StructType(
@@ -680,11 +727,17 @@ class Warehouse:
             files = self._manifest_files(path, manifest)
         if not files:
             return self.spark.createDataFrame([], read_schema)
-        return (
-            self.spark.read.option("basePath", path)
-            .schema(read_schema)
-            .parquet(*files)
-        )
+        df = self.spark.read.option("basePath", path).schema(read_schema).parquet(*files)
+        dead = [k for keys in self._dead(manifest).values() for k in keys]
+        # Merge-on-read: superseded row versions stay in their files
+        # and drop out here, by one literal predicate — no join, no job.
+        return df.filter(F.expr(_not_in_sql(dead))) if dead else df
+
+    @staticmethod
+    def _dead(manifest: dict) -> dict[str, list[str]]:
+        """A manifest's dead set, bucket → ``_dead_key`` names (tables
+        committed before merge-on-read have none)."""
+        return manifest.get("dead", {})
 
     DEFAULT_VACUUM_GRACE_SECONDS = 600.0
 
@@ -809,8 +862,10 @@ class Warehouse:
 
     def history(self, doc_type: str = DEFAULT_TYPE) -> DataFrame:
         """The table's commit log (Delta's DESCRIBE HISTORY): one row
-        per retained version with op, timestamp and file count. Driver-
-        side metadata — bounded by version count, never data-sized."""
+        per retained version with op, timestamp, file count and the
+        op's recorded ``MERGE_METRICS`` (NULL for ops that record
+        none). Driver-side metadata — bounded by version count, never
+        data-sized."""
         path = self._table_path(doc_type)
         rows = []
         for v in self._list_versions(path):
@@ -818,16 +873,20 @@ class Warehouse:
                 m = self._load_manifest(path, v)
             except (ValueError, OSError, json.JSONDecodeError):
                 continue  # torn file: readers walk past it; so does the log
+            metrics = m.get("metrics", {})
             rows.append(
                 (
                     m["version"],
                     m["op"],
                     float(m["ts"]),
                     sum(len(fs) for fs in m["buckets"].values()),
+                    *(metrics.get(k) for k in self.MERGE_METRICS),
                 )
             )
         return self.spark.createDataFrame(
-            rows, "version int, op string, ts double, n_files int"
+            rows,
+            "version int, op string, ts double, n_files int, "
+            + ", ".join(f"{k} long" for k in self.MERGE_METRICS),
         )
 
     def _merge_type(self, live: DataFrame, tombstones: DataFrame, doc_type: str) -> None:
@@ -844,12 +903,11 @@ class Warehouse:
             self._evolve_schema(flat, doc_type)
         struct = schema_to_struct(self.schemas[doc_type])
 
-        # Persisted: the incremental lane reads this frame twice (the
-        # per-bucket id-range aggregate, _id_ranges, and the merge
-        # write) — without a persist the flatten/transform/selector/
-        # conform pipeline would run twice per micro-batch. Released
-        # in the finally below so a failed write cannot leak the
-        # cached frame for the session.
+        # Persisted: the merge reads this frame twice (its key collect
+        # and its write), and followers read it again — without a
+        # persist the flatten/transform/selector/conform pipeline
+        # would run once per read. Released in the finally below so a
+        # failed write cannot leak the cached frame for the session.
         conformed = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
         try:
             conformed = self._enforce_constraints(conformed, doc_type)
@@ -914,41 +972,22 @@ class Warehouse:
             mx = max(mx, int(row["m"] or 0))
         return mx
 
-    def _id_ranges(
-        self, ids: DataFrame, n_buckets: int
-    ) -> dict[int, tuple[str | None, str | None]]:
-        """The batch's ``id`` range per bucket it hashes into (bucket →
-        (min id, max id)), under ``n_buckets`` — the version's recorded
-        count. One aggregate whose result is bounded by the bucket
-        count, not by the data: the keys are the affected buckets, and
-        the ranges are what ``_prune_bucket_files`` tests the
-        manifest's recorded file ranges against. A bucket whose every
-        id is NULL keeps its entry, with a (None, None) range."""
-        return {
-            r["b"]: (r["lo"], r["hi"])
-            for r in ids.groupBy(self._bucket_of("id", n_buckets).alias("b"))
-            .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
-            .collect()
-        }
-
     def _prune_bucket_files(
         self,
         path: str,
         manifest: dict,
         ranges: dict[int, tuple[str | None, str | None]],
     ) -> tuple[list[str], dict[int, list[str]]]:
-        """File-level merge pruning WITHIN the buckets of ``ranges``
-        (``_id_ranges``), on the driver, with no Spark job: a part file
-        whose recorded ``id`` [min, max] does not overlap its bucket's
-        batch [lo, hi] needs no rewrite — state holds one row per id,
-        so a touched id's single copy lives in a file whose range
-        covers it. The test is per bucket, not per id: a file the
-        batch's ids straddle, with none inside it, is still read.
-        Files with no recorded range (no footer id statistics at
-        publish), and the files of a bucket whose batch ids are all
-        NULL, are read. Returns (absolute paths of the files to read,
-        bucket → names of the untouched files, which the next manifest
-        carries forward by reference)."""
+        """Which part files the merge's key read opens WITHIN the
+        buckets of ``ranges`` (bucket → the batch's (min id, max id)
+        there), on the driver, with no Spark job: a file whose
+        recorded ``id`` [min, max] does not overlap its bucket's batch
+        [lo, hi] cannot hold a batch id. The test is per bucket, not
+        per id: a file the batch's ids straddle, with none inside it,
+        is still read. Files with no recorded range (no footer id
+        statistics at publish), and the files of a bucket whose batch
+        ids are all NULL, are read. Returns (absolute paths of the
+        files to read, bucket → names of the files left unread)."""
         read_files: list[str] = []
         untouched: dict[int, list[str]] = {}
         for b, (lo, hi) in ranges.items():
@@ -1019,39 +1058,46 @@ class Warehouse:
         op: str,
         frame: DataFrame,
         replaced,
-        carried: dict[int, list[str]] | None = None,
+        dead: dict[int, list[str]] | None = None,
         schema_json: str | None = None,
         n_buckets: int | None = None,
+        metrics: dict | None = None,
     ) -> int:
-        """THE data-rewriting commit, shared by every op that writes
-        part files: write ``frame`` (which carries ``_cw_bucket``) to a
+        """THE data-writing commit, shared by every op that writes part
+        files: write ``frame`` (which carries ``_cw_bucket``) to a
         scratch dir, slide the uniquely-named part files into the live
         bucket dirs (``_publish_tmp``), then COMMIT by atomically
         publishing the version after ``manifest`` (None: a fresh table,
-        base 0). Each bucket in ``replaced``, and each bucket the write
-        produced, holds the new files plus its ``carried`` file names
-        (unchanged files kept by reference, with their recorded
-        ranges); a bucket left with no file gets no entry. Every other
-        bucket carries forward whole — zero I/O, not even a rename. A
-        crash anywhere before the manifest lands leaves the table at
-        ``manifest``'s version: the published files are unreferenced
-        orphans ``vacuum()`` reclaims. Returns the committed version."""
+        base 0). Each bucket in ``replaced`` holds only the new files
+        and loses its dead set: the op read its live rows (through
+        ``_read_parts``) and rewrote them. Every other bucket keeps its
+        files, stats and dead set — zero I/O, not even a rename — and
+        gains any new files the write produced there (an append) plus
+        the ``dead`` names superseded in it. A bucket left with no file
+        gets no entry. A crash anywhere before the manifest lands
+        leaves the table at ``manifest``'s version: the published files
+        are unreferenced orphans ``vacuum()`` reclaims. Returns the
+        committed version."""
         tmp = self._scratch_dir(path)
         frame.write.mode("overwrite").partitionBy("_cw_bucket").parquet(tmp)
         moved, moved_stats = self._publish_tmp(path, tmp)
         base = manifest or {"version": 0, "buckets": {}, "stats": {}}
-        carried = carried or {}
-        replace = {int(b) for b in replaced} | set(moved)
-        buckets = {
-            int(b): fs for b, fs in base["buckets"].items() if int(b) not in replace
-        }
-        stats = {int(b): per for b, per in base["stats"].items() if int(b) not in replace}
-        for b in replace:
-            keep = carried.get(b, [])
-            if moved.get(b) or keep:
-                buckets[b] = moved.get(b, []) + keep
-                prev = base["stats"].get(str(b), {})
-                stats[b] = {**moved_stats.get(b, {}), **{fn: prev.get(fn) for fn in keep}}
+        replaced = {int(b) for b in replaced}
+        base_dead = self._dead(base)
+        buckets: dict[int, list[str]] = {}
+        stats: dict[int, dict[str, list | None]] = {}
+        dead_out: dict[int, list[str]] = {}
+        for b in {int(b) for b in base["buckets"]} | set(moved):
+            kept = b not in replaced
+            old = base["buckets"].get(str(b), []) if kept else []
+            if not (moved.get(b) or old):
+                continue
+            buckets[b] = moved.get(b, []) + old
+            stats[b] = {
+                **(base["stats"].get(str(b), {}) if kept else {}),
+                **moved_stats.get(b, {}),
+            }
+            dead_out[b] = (base_dead.get(str(b), []) if kept else []) + (dead or {}).get(b, [])
         return self._commit_manifest(
             path,
             op,
@@ -1060,68 +1106,175 @@ class Warehouse:
             stats,
             base_version=base["version"],
             n_buckets=n_buckets or self._manifest_buckets_n(manifest),
+            dead=dead_out,
+            metrics=metrics,
         )
+
+    # A bucket holding this many part files is folded back to one by
+    # the next merge that appends to it — the default of ``compact``
+    # too. It bounds a point lookup's read fan-out to this many files
+    # per bucket, and a bucket's dead set to the rows of the batches
+    # appended since its last fold.
+    MAX_FILES_PER_BUCKET = 4
+
+    # What every merge records in its manifest's ``metrics``: batch
+    # rows written, stored row versions they superseded (marked dead,
+    # or dropped by a fold), and buckets folded back to one file.
+    MERGE_METRICS = ("rows_appended", "rows_superseded", "buckets_folded")
 
     def _merge_conformed(
         self, conformed: DataFrame, tombstones: DataFrame, doc_type: str
-    ) -> None:
+    ) -> int:
+        """Merge-on-read upsert of one conformed batch and its
+        tombstones, committed as ONE new manifest version; returns the
+        number of tombstones that deleted a live row.
+
+        1. The batch's (id, seq, deleted, bucket) keys are collected —
+           one job, no shuffle — and the driver keeps each id's latest.
+        2. On the driver, with no Spark job: the keys give each
+           bucket's id range, which picks the files that could hold a
+           batch id (``_prune_bucket_files``); pyarrow reads only their
+           ``id`` and ``_cw_seq`` columns, keeps the rows whose id is in
+           the batch and drops the dead ones (``_stored_seqs``).
+        3. A batch row whose seq is ≤ its id's stored seq (or that is
+           itself a dead version) is a replay loser: neither written
+           nor marking anything. Otherwise the stored version joins the
+           dead set, and the row is appended unless it is a tombstone.
+        4. A bucket that gets an appended row while already holding
+           ``MAX_FILES_PER_BUCKET`` files is folded: its live rows and
+           its batch rows go through ``merge_batch`` into one file, and
+           its dead set is dropped.
+        5. One ``_commit_rewrite`` of the appended plus folded rows, one
+           new file per written bucket; every other file is carried by
+           reference, and the manifest gets the new dead names and the
+           ``MERGE_METRICS``.
+
+        A replayed batch loses every row, so it changes no row."""
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
         # Hash with the CURRENT VERSION's bucket count — after a
         # rebucket it differs from the constructor default, and a
-        # merge that hashed with the wrong count would prune the
+        # merge that hashed with the wrong count would look in the
         # wrong buckets and write files no reader looks for.
         n_cur = self._manifest_buckets_n(manifest)
-        # A fresh table is an empty previous version: no bucket to
-        # probe, no state to fold, nothing carried.
-        state = None
-        affected: list[int] = []
-        untouched: dict[int, list[str]] = {}
-        if manifest is not None:
-            # Incremental lane: only the buckets this batch's ids (or
-            # tombstone ids) hash into are rewritten — and within
-            # those, only part files whose recorded id range overlaps
-            # the bucket's batch id range are read (_prune_bucket_files);
-            # every other file carries forward BY REFERENCE in the
-            # next manifest. One aggregate gives both the buckets and
-            # their ranges; its result is ≤ n_buckets rows.
-            ranges = self._id_ranges(
-                conformed.select("id").unionByName(tombstones.select("id")), n_cur
+        # Seq is stored as a long: merge_into stamps an int literal, and
+        # an appended file must read under the table's declared schema.
+        batch = (
+            conformed.withColumns({SEQ_COL: F.col(SEQ_COL).cast("long"), DELETED_COL: F.lit(False)})
+            .unionByName(
+                tombstones.select("id", SEQ_COL).withColumn(DELETED_COL, F.lit(True)),
+                allowMissingColumns=True,
             )
-            affected = sorted(ranges)
-            read_files, untouched = self._prune_bucket_files(path, manifest, ranges)
-            if read_files:
-                # The CURRENT frozen schema + seq, not the manifest's:
-                # a batch that just evolved the schema reads the new
-                # column as NULL from every older file.
-                state_schema = T.StructType(
-                    list(schema_to_struct(self.schemas[doc_type]).fields)
-                    + [T.StructField(SEQ_COL, T.LongType())]
-                )
-                state = self._read_parts(
-                    path, manifest, read_files, schema=state_schema
-                ).drop("_cw_bucket")
-        new_state = merge_batch(state, conformed, tombstones).withColumn(
-            "_cw_bucket", self._bucket_of("id", n_cur)
+            .withColumn("_cw_bucket", self._bucket_of("id", n_cur))
         )
-        # Write ONLY the merged (affected-bucket) rows; the unadvanced
+        keys = batch.select("id", SEQ_COL, DELETED_COL, "_cw_bucket").toArrow().to_pydict()
+        latest: dict = {}
+        for row in zip(keys["id"], keys[SEQ_COL], keys[DELETED_COL], keys["_cw_bucket"]):
+            if row[0] not in latest or row[1] > latest[row[0]][1]:
+                latest[row[0]] = row
+        dead = {k for ks in self._dead(manifest or {}).values() for k in ks}
+        stored = self._stored_seqs(path, manifest, list(latest.values()), dead) if manifest else {}
+        losers: list[str] = []
+        new_dead: dict[int, list[str]] = {}
+        appended: set[int] = set()
+        n_rows = n_superseded = n_applied = 0
+        for doc_id, seq, deleted, b in latest.values():
+            old = stored.get(doc_id)
+            if (old is not None and seq <= old) or _dead_key(seq, doc_id) in dead:
+                losers.append(_dead_key(seq, doc_id))
+                continue
+            if old is not None:
+                new_dead.setdefault(b, []).append(_dead_key(old, doc_id))
+                n_superseded += 1
+                n_applied += deleted
+            if not deleted:
+                n_rows += 1
+                appended.add(b)
+        files = (manifest or {"buckets": {}})["buckets"]
+        fold = sorted(
+            b for b in appended if len(files.get(str(b), [])) >= self.MAX_FILES_PER_BUCKET
+        )
+        # Spark's latest-wins, with ONE shuffle, by bucket: the window's
+        # (bucket, id) clustering is met by that partitioning, so each
+        # bucket's rows land in one task, which writes one file there.
+        w = latest_wins(batch.repartition("_cw_bucket"), key=["_cw_bucket", "id"])
+        if losers:
+            w = w.filter(F.expr(_not_in_sql(losers)))
+        frame = w.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
+        if fold:
+            in_fold = F.col("_cw_bucket").isin(fold)
+            # The CURRENT frozen schema + seq, not the manifest's: a
+            # batch that just evolved the schema reads the new column
+            # as NULL from every older file.
+            state_schema = T.StructType(
+                list(schema_to_struct(self.schemas[doc_type]).fields)
+                + [T.StructField(SEQ_COL, T.LongType())]
+            )
+            state = self._read_parts(
+                path,
+                manifest,
+                [os.path.join(path, f"_cw_bucket={b}", fn) for b in fold for fn in files[str(b)]],
+                schema=state_schema,
+            ).drop("_cw_bucket")
+            fb = w.filter(in_fold).drop("_cw_bucket")
+            folded = merge_batch(
+                state,
+                fb.filter(~F.col(DELETED_COL)).drop(DELETED_COL),
+                fb.filter(F.col(DELETED_COL)),
+            ).withColumn("_cw_bucket", self._bucket_of("id", n_cur))
+            frame = frame.filter(~in_fold).unionByName(folded).repartition("_cw_bucket")
+            for b in fold:
+                new_dead.pop(b, None)
+        # Rows id-sorted inside each file: the parquet reader's pushed
+        # id filters then prune at row-group granularity. The unadvanced
         # checkpoint replays a batch whose commit never landed —
-        # idempotent by seq. Local (no-shuffle) sort by id inside each
-        # write task: row groups land id-ordered, so the parquet
-        # reader's pushed id-filters prune at row-group granularity
-        # even after compaction collapses a bucket to one wide-range
-        # file. A bucket whose every row was deleted simply has no
-        # entry in the new version.
+        # idempotent by seq (step 3).
         self._commit_rewrite(
             path,
             manifest,
             "merge",
-            new_state.sortWithinPartitions("_cw_bucket", "id"),
-            affected,
-            carried=untouched,
-            schema_json=new_state.drop("_cw_bucket").schema.json(),
+            frame.sortWithinPartitions("_cw_bucket", "id"),
+            fold,
+            dead=new_dead,
+            schema_json=frame.drop("_cw_bucket").schema.json(),
             n_buckets=n_cur,
+            metrics=dict(zip(self.MERGE_METRICS, (n_rows, n_superseded, len(fold)))),
         )
+        return n_applied
+
+    def _stored_seqs(self, path: str, manifest: dict, rows: list, dead: set[str]) -> dict:
+        """Batch id → the seq of its live stored version, for the batch
+        ``rows`` of ``_merge_conformed`` (id, seq, deleted, bucket),
+        read on the driver with no Spark job: only the ``id`` and
+        ``_cw_seq`` columns of the files ``_prune_bucket_files`` keeps,
+        filtered to the batch's ids inside pyarrow, so Python touches
+        only matching rows; versions named in ``dead`` are skipped.
+        State holds one live version per id."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        ids: dict[int, list] = {}
+        for doc_id, _, _, b in rows:
+            ids.setdefault(b, []).append(doc_id)
+        ranges = {}
+        for b, bucket_ids in ids.items():
+            present = [i for i in bucket_ids if i is not None]
+            ranges[b] = (min(present), max(present)) if present else (None, None)
+        read_files, _ = self._prune_bucket_files(path, manifest, ranges)
+        if not read_files:
+            return {}
+        found = pq.read_table(
+            read_files,
+            schema=pa.schema([("id", pa.string()), (SEQ_COL, pa.int64())]),
+            filters=pc.field("id").isin([r[0] for r in rows]),
+            partitioning=None,
+        ).to_pydict()
+        return {
+            doc_id: seq
+            for doc_id, seq in zip(found["id"], found[SEQ_COL])
+            if _dead_key(seq, doc_id) not in dead
+        }
 
     def _evolve_schema(self, flat: DataFrame, doc_type: str) -> list[str]:
         """Widen the frozen schema with columns this batch introduces
@@ -1172,7 +1325,7 @@ class Warehouse:
         return schema
 
     def compact(
-        self, doc_type: str = DEFAULT_TYPE, max_files_per_bucket: int = 4
+        self, doc_type: str = DEFAULT_TYPE, max_files_per_bucket: int = MAX_FILES_PER_BUCKET
     ) -> int:
         """Compact fragmented bucket directories (operational kernel).
 
@@ -1234,12 +1387,10 @@ class Warehouse:
         absent id is a no-op and is NOT counted.
 
         Scale: the seq probe reads per-file footer maxima, with no
-        scan. The delete count and the merge both prune with
-        ``_prune_bucket_files`` over one per-bucket id-range aggregate
-        (``_id_ranges``): only buckets the incoming ids hash into are
-        read, only their files whose recorded id range overlaps the
-        bucket's incoming range are rewritten, and the rest carry
-        forward by reference.
+        scan. The merge is ``_merge_conformed``'s merge-on-read append:
+        it writes only the incoming rows and marks the versions they
+        supersede dead, and the delete count is the number of
+        tombstones it matched to a live stored row — no extra probe.
         """
         if "id" not in df.columns:
             raise ValueError("merge_into frame needs an 'id' column")
@@ -1263,26 +1414,6 @@ class Warehouse:
             tombstones = self.spark.range(0).select(
                 F.lit("").alias("id"), F.lit(0).cast("long").alias(SEQ_COL)
             )
-        # Deletes that matched an existing row, counted against the
-        # PRE-merge state (after the merge the ids are gone) — a
-        # tombstone for an absent id is a no-op, not an applied row.
-        # The count is exact (a semi join of the tombstoned ids against
-        # the state), but it reads only files that could hold one: each
-        # id lives in bucket pmod(xxhash64(id), n), in a file whose
-        # recorded id range covers it, so the same driver-side prune
-        # the merge uses picks them from the tombstones' per-bucket id
-        # ranges.
-        n_del = 0
-        if delete_col is not None and base_seq > 0 and manifest is not None:
-            t_ids = tombstones.select("id").distinct()
-            probe_files, _ = self._prune_bucket_files(
-                path,
-                manifest,
-                self._id_ranges(t_ids, self._manifest_buckets_n(manifest)),
-            )
-            if probe_files:
-                state_ids = self._read_parts(path, manifest, probe_files).select("id")
-                n_del = t_ids.join(state_ids, "id", "left_semi").count()
         flat = live.withColumn(SEQ_COL, F.lit(base_seq + 1))
         if doc_type not in self.schemas:
             self.schemas[doc_type] = self._freeze_schema(flat)
@@ -1293,7 +1424,7 @@ class Warehouse:
         try:
             conformed = self._enforce_constraints(conformed, doc_type)
             n = conformed.count()
-            self._merge_conformed(conformed, tombstones, doc_type)
+            n_del = self._merge_conformed(conformed, tombstones, doc_type)
             for follower in self.followers:
                 follower(self, doc_type, conformed, tombstones)
         finally:
@@ -1579,20 +1710,16 @@ class Warehouse:
                 if older and "column_stats" in older:
                     prev = older["column_stats"]
                     break
-        pending: list[tuple[str, str, str]] = []  # (bucket, fname, full)
-        for b, fns in manifest["buckets"].items():
-            have = prev.get(b, {})
-            for fn in fns:
-                if fn not in have:
-                    pending.append(
-                        (b, fn, os.path.join(path, f"_cw_bucket={b}", fn))
-                    )
         # Carry forward only stats for files this version still
-        # references (files dropped by compact/rebucket fall away).
-        new_stats: dict = {
-            b: {fn: prev[b][fn] for fn in fns if b in prev and fn in prev.get(b, {})}
+        # references (files dropped by compact/rebucket fall away) and
+        # whose bucket's dead set is the one they were counted under.
+        new_stats = self._live_column_stats(manifest, prev)
+        pending: list[tuple[str, str, str]] = [  # (bucket, fname, full)
+            (b, fn, os.path.join(path, f"_cw_bucket={b}", fn))
             for b, fns in manifest["buckets"].items()
-        }
+            for fn in fns
+            if fn not in new_stats.get(b, {})
+        ]
         if not pending:
             return 0
         schema = T.StructType.fromJson(json.loads(manifest["schema"]))
@@ -1621,11 +1748,12 @@ class Warehouse:
         import re as _re
         from urllib.parse import unquote as _unquote
 
+        dead = self._dead(manifest)
         for row in df.groupBy("_cw_file").agg(*aggs).collect():
             full = _unquote(row["_cw_file"])
             bucket_m = _re.search(r"_cw_bucket=(\d+)", full)
             b, fn = by_key[(bucket_m.group(1), os.path.basename(full))]
-            entry: dict = {"_rows": row["_rows"]}
+            entry: dict = {"_rows": row["_rows"], "_dead": _dead_digest(dead.get(b, []))}
             for c in cols:
                 entry[c] = {
                     "min": _json_safe(row[f"min__{c}"]),
@@ -1643,8 +1771,27 @@ class Warehouse:
             base_version=manifest["version"],
             n_buckets=self._manifest_buckets_n(manifest),
             column_stats=new_stats,
+            dead={int(b): keys for b, keys in dead.items()},
         )
         return len(pending)
+
+    def _live_column_stats(self, manifest: dict, column_stats: dict) -> dict:
+        """The per-file ANALYZE entries of ``column_stats`` that still
+        describe ``manifest``'s live rows: the file is still referenced
+        and its bucket's dead set is the one the entry was counted
+        under (a later merge that marks rows dead in a file makes its
+        counts stale)."""
+        dead = self._dead(manifest)
+        out: dict = {}
+        for b, fns in manifest["buckets"].items():
+            digest = _dead_digest(dead.get(b, []))
+            have = column_stats.get(b, {})
+            out[b] = {
+                fn: have[fn]
+                for fn in fns
+                if fn in have and have[fn].get("_dead", "") == digest
+            }
+        return out
 
     def describe_stats(self, doc_type: str = DEFAULT_TYPE) -> DataFrame:
         """Table-level column statistics folded from the manifest's
@@ -1659,18 +1806,12 @@ class Warehouse:
         cstats = (manifest or {}).get("column_stats", {})
         if manifest is not None and not cstats:
             # Same walk-back as analyze(): stats ride the newest
-            # ANALYZE version, pruned to files still referenced now.
+            # ANALYZE version, pruned to the entries that still count
+            # this version's live rows.
             for v in reversed(self._list_versions(path) or []):
                 older = self._load_manifest(path, v)
                 if older and "column_stats" in older:
-                    cstats = {
-                        b: {
-                            fn: st
-                            for fn, st in per.items()
-                            if fn in set(manifest["buckets"].get(b, []))
-                        }
-                        for b, per in older["column_stats"].items()
-                    }
+                    cstats = self._live_column_stats(manifest, older["column_stats"])
                     break
         per_col: dict[str, dict] = {}
         n_rows = 0
@@ -1680,7 +1821,7 @@ class Warehouse:
                 n_files += 1
                 n_rows += entry.get("_rows", 0)
                 for c, st in entry.items():
-                    if c == "_rows":
+                    if c in ("_rows", "_dead"):
                         continue
                     agg = per_col.setdefault(
                         c, {"min": None, "max": None, "nulls": 0, "ndv_ub": 0}
@@ -1763,6 +1904,7 @@ class Warehouse:
             {int(b): dict(per) for b, per in manifest["stats"].items()},
             base_version=0,
             n_buckets=self._manifest_buckets_n(manifest),
+            dead={int(b): keys for b, keys in self._dead(manifest).items()},
         )
         self.schemas[dst_type] = dict(self.schemas[src_type])
         self.clone_types.add(dst_type)
@@ -1943,8 +2085,10 @@ class Warehouse:
             manifest["schema"],
             {int(b): per for b, per in manifest["stats"].items()},
             base_version=latest["version"],
-            # Restoring a layout restores its bucket count too.
+            # Restoring a layout restores its bucket count and its dead
+            # set too: without the latter, superseded rows would live.
             n_buckets=self._manifest_buckets_n(manifest),
+            dead={int(b): keys for b, keys in self._dead(manifest).items()},
         )
 
     # -- query surface (R17) -------------------------------------------
@@ -2171,10 +2315,11 @@ class Warehouse:
         recorded stats are kept), and pyarrow reads the rest with an
         ``id`` equality filter whose row-group statistics skip every
         row group that cannot hold the id (merges write part files
-        id-sorted, so that leaves one row group per file). The read
-        declares the manifest's schema minus ``_cw_seq``, so a
-        file written before ``evolve_schema`` added a column reads it
-        as typed NULLs, as ``table()`` does.
+        id-sorted, so that leaves one row group per file). Versions
+        the bucket's dead set names are dropped in memory, leaving the
+        live one. The read declares the manifest's schema, so a file
+        written before ``evolve_schema`` added a column reads it as
+        typed NULLs, as ``table()`` does.
 
         The result is materialised when ``lookup`` is called: a local
         relation holding the head version's row, which collecting does
@@ -2186,13 +2331,12 @@ class Warehouse:
         path = self._table_path(doc_type)
         manifest = self._committed_manifest(path)
         b = self._bucket_of_id(doc_id, self._manifest_buckets_n(manifest))
+        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = T.StructType([
-            f for f in T.StructType.fromJson(json.loads(manifest["schema"])).fields
-            if f.name != SEQ_COL
-        ])
+        stored = T.StructType.fromJson(json.loads(manifest["schema"]))
+        schema = T.StructType([f for f in stored.fields if f.name != SEQ_COL])
         per = manifest["stats"].get(str(b), {})
         files = [
             os.path.join(path, f"_cw_bucket={b}", fn)
@@ -2201,10 +2345,16 @@ class Warehouse:
         ]
         rows = pq.read_table(
             files,
-            schema=to_arrow_schema(schema),
+            schema=to_arrow_schema(stored),
             filters=[("id", "=", doc_id)],
             partitioning=None,
         )
+        dead = set(self._dead(manifest).get(str(b), []))
+        live = [_dead_key(seq, doc_id) not in dead for seq in rows[SEQ_COL].to_pylist()]
+        # One chunk: createDataFrame drops the rows that follow two or
+        # more empty record batches (pyarrow yields one per file or scan
+        # batch that the id filter empties).
+        rows = rows.filter(pa.array(live, pa.bool_())).drop_columns([SEQ_COL]).combine_chunks()
         return self.spark.createDataFrame(rows, schema)
 
     def query(

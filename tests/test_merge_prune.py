@@ -1,10 +1,11 @@
-"""The merge's file prune: which part files a batch rewrites.
+"""The merge's file prune: which part files a batch's key read opens.
 
 ``_prune_bucket_files`` is pure driver arithmetic over the manifest's
-recorded per-file id ranges and the batch's per-bucket id range
-(``_id_ranges``), so its rule is tested here on hand-built manifests
-with no Spark session. The last test pins what that buys: the number
-of Spark jobs one merge into an existing table submits.
+recorded per-file id ranges and the batch's per-bucket id range (taken
+from the batch keys the merge collects), so its rule is tested here on
+hand-built manifests with no Spark session. The last test pins what
+the merge costs: the number of Spark jobs one merge into an existing
+table submits.
 """
 
 from __future__ import annotations

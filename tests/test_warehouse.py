@@ -2074,7 +2074,9 @@ def test_table_reads_and_rewrites_have_one_path():
     """One read path, one rewrite commit — an ``ast`` scan of
     warehouse.py: Spark reads parquet only in ``_read_parts`` (every
     committed table read) and ``quarantined`` (the dead-letter dir,
-    not a table); pyarrow reads part files only in ``lookup``; only
+    not a table); pyarrow reads part files only on the driver's two
+    key-addressed paths, ``lookup`` and the merge's key read
+    (``_stored_seqs``); only
     ``_commit_rewrite`` writes a scratch dir and publishes it; and no
     op commits an 'adopt' manifest."""
     import ast
@@ -2100,7 +2102,7 @@ def test_table_reads_and_rewrites_have_one_path():
 
     visit(tree, "<module>")
     assert used_in["self.spark.read"] == {"_read_parts", "quarantined"}
-    assert used_in["pq.read_table"] == {"lookup"}
+    assert used_in["pq.read_table"] == {"lookup", "_stored_seqs"}
     assert used_in["self._scratch_dir"] == {"_commit_rewrite"}
     assert used_in["self._publish_tmp"] == {"_commit_rewrite"}
     assert "adopt" not in constants
