@@ -72,7 +72,7 @@ def merge_batch(
     state: DataFrame | None,
     upserts: DataFrame,
     tombstones: DataFrame | None,
-    key: str = "id",
+    key: str | list[str] = "id",
     seq: str = SEQ_COL,
 ) -> DataFrame:
     """One changes-batch merge: seq-ordered upserts and deletes.
@@ -86,17 +86,21 @@ def merge_batch(
     the recreated row; this doesn't.
 
     ``state`` rows keep their stored seq, so merging is idempotent:
-    replaying an already-applied batch changes nothing.
+    replaying an already-applied batch changes nothing. A list ``key``
+    is a composite key; the rows are hash-partitioned by its leading
+    column, the window's one shuffle, so every row sharing that column
+    (a warehouse bucket) lands in one task.
     """
+    keys = [key] if isinstance(key, str) else list(key)
     merged = upserts.withColumn(DELETED_COL, F.lit(False))
     if tombstones is not None:
-        tomb = tombstones.select(key, seq).withColumn(DELETED_COL, F.lit(True))
+        tomb = tombstones.select(*keys, seq).withColumn(DELETED_COL, F.lit(True))
         merged = merged.unionByName(tomb, allowMissingColumns=True)
     if state is not None:
         merged = state.withColumn(DELETED_COL, F.lit(False)).unionByName(
             merged, allowMissingColumns=True
         )
-    winners = latest_wins(merged, key=key, seq=seq)
+    winners = latest_wins(merged.repartition(keys[0]), key=keys, seq=seq)
     return winners.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
 
 

@@ -1266,7 +1266,7 @@ class _CompactRacedWarehouse(Warehouse):
             and base >= self.arm_base
         ):
             self.arm_base = None  # fire exactly once
-            self.n_rival_rewrites = self.rival.compact(max_files_per_bucket=1)
+            self.n_rival_rewrites = self.rival.compact()
         try:
             return super()._commit_manifest(path, op, *args, **kwargs)
         except ConcurrentCommitError:
@@ -1309,7 +1309,7 @@ def concurrent_compact_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
        forward by id-range pruning, so buckets genuinely fragment)
        streams through ``monitor_warehouse`` one file per micro-batch.
        A fault-injected ``_commit_manifest`` has a RIVAL warehouse
-       handle commit ``compact(max_files_per_bucket=1)`` between the
+       handle commit ``compact()`` between the
        5th merge's manifest read and its commit. The merge's pinned
        read-version+1 target is taken → ``ConcurrentCommitError`` →
        the ``merge_retries`` loop replays the SAME conformed batch

@@ -1073,7 +1073,7 @@ def compact_small_files_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries wave A's part files forward untouched while wave B
     appends its own, so hot buckets genuinely fragment (the
     small-files problem that kills scan throughput at 100 TB). Then
-    ``compact(max_files_per_bucket=1)`` rewrites every fragmented
+    ``compact()`` rewrites every fragmented
     bucket to ~one file as a NEW manifest version and the entry
     queries the compacted table. The oracle states the doubled census
     straight from ``orders`` — a hash match certifies compaction
@@ -1104,7 +1104,7 @@ def compact_small_files_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_before = sum(
         len(fs) for fs in wh._load_manifest(path)["buckets"].values()
     )
-    n_buckets = wh.compact(max_files_per_bucket=1)
+    n_buckets = wh.compact()
     assert n_buckets > 0, "two disjoint waves left nothing fragmented"
     files_after = sum(
         len(fs) for fs in wh._load_manifest(path)["buckets"].values()
@@ -1161,7 +1161,7 @@ def vacuum_retention_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = Warehouse(spark, wh_dir, "vcorders", reset=True, feed_schema=FEED_DOC_DDL)
     wh.spool(feed1)
     wh.spool(feed2)
-    assert wh.compact(max_files_per_bucket=1) > 0, "the second spool appended nothing"
+    assert wh.compact() > 0, "the second spool appended nothing"
     n_reclaimed = wh.vacuum(retain_versions=1, min_age_seconds=0.0)
     assert n_reclaimed > 0, "nothing reclaimed — the retention e2e is vacuous"
     try:

@@ -61,7 +61,6 @@ from couchwarehouse_spark.operators.upsert import (
     DELETED_COL,
     SEQ_COL,
     CheckpointStore,
-    latest_wins,
     merge_batch,
     write_json_atomic,
 )
@@ -86,17 +85,17 @@ class ConstraintViolationError(RuntimeError):
     the table never holds a violating row)."""
 
 
-def _parquet_id_range(fp: str) -> tuple[str, str] | None:
-    """The ``id`` column's min/max across a part file's row groups,
-    from the parquet footer — None when statistics are absent. Read
-    ONCE at commit time and recorded in the manifest (Delta's
-    stats-in-log), so later merges and lookups prune files from
-    metadata alone."""
+def _parquet_range(fp: str, col: str) -> tuple | None:
+    """One column's (min, max) across a part file's row groups, from
+    the parquet footer — None when the column or its statistics are
+    absent. Files are immutable once committed, so the result may be
+    recorded in the manifest (the ``id`` range, Delta's stats-in-log)
+    or cached by path (the ``_cw_seq`` maximum)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(fp).metadata
     idx = next(
-        (i for i in range(md.num_columns) if md.schema.column(i).name == "id"),
+        (i for i in range(md.num_columns) if md.schema.column(i).name == col),
         None,
     )
     if idx is None:
@@ -111,29 +110,6 @@ def _parquet_id_range(fp: str) -> tuple[str, str] | None:
     return None if mn is None else (mn, mx)
 
 
-def _parquet_seq_max(fp: str) -> int | None:
-    """The ``_cw_seq`` column's max across a part file's row groups,
-    from the parquet footer — None when the column or its statistics
-    are absent. Files are immutable once committed, so callers may
-    cache the result by path."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(fp).metadata
-    idx = next(
-        (i for i in range(md.num_columns) if md.schema.column(i).name == SEQ_COL),
-        None,
-    )
-    if idx is None:
-        return None
-    mx = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        mx = st.max if mx is None or st.max > mx else mx
-    return mx
-
-
 def _dead_key(seq: int, doc_id: str | None) -> str:
     """The dead-set name of one stored row version, ``<seq>:<id>``
     (``<seq>`` alone for a NULL id): what readers compute per row as
@@ -146,14 +122,14 @@ def _dead_key(seq: int, doc_id: str | None) -> str:
 _DEAD_KEY_SQL = f"concat_ws(':', cast({SEQ_COL} AS string), id)"
 
 
-def _not_in_sql(keys) -> str:
-    """``_DEAD_KEY_SQL NOT IN (<keys as SQL string literals>)`` — one
+def _not_in_sql(keys, expr: str = _DEAD_KEY_SQL) -> str:
+    """``<expr> NOT IN (<keys as SQL string literals>)`` — one
     predicate string, parsed once by ``F.expr``; Catalyst turns the
     literal list into a hash set."""
     lits = ", ".join(
         "'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys
     )
-    return f"{_DEAD_KEY_SQL} NOT IN ({lits})"
+    return f"{expr} NOT IN ({lits})"
 
 
 def _dead_digest(keys) -> str:
@@ -372,10 +348,12 @@ class Warehouse:
     def _process_batch(self, env: DataFrame) -> str | None:
         """Conform + merge one envelope batch (the 'batch' event body,
         reference index.js:105-125). Returns the batch's max seq token."""
+        import pyarrow.compute as pc
+
         env = filter_design_docs(env)
         env = split_envelopes(env, self.split)
         # One JSON parse, many consumers: this batch is read by the
-        # max-seq probe, type discovery, the tombstone probe, and every
+        # batch probe (max seq, live types, tombstones) and every
         # per-type merge — without a persist each action re-parses the
         # feed from disk. Micro-batches are bounded, and persist()
         # spills to disk, so this holds at scale too.
@@ -385,27 +363,27 @@ class Warehouse:
         # tombstones carry no body, so no type (reference
         # lib/sqlite.js:95-98 deletes by id in whichever table).
         deleted = F.col("deleted").isNotNull() & F.col("deleted")
-        tombstones = env.filter(deleted).select("id", SEQ_COL)
-        live = env.filter(~deleted | F.col("deleted").isNull()).filter(
-            F.col("doc").isNotNull()
-        )
-
-        # One probe job, not three: batch max-seq, the set of live doc
-        # types, and does-this-batch-delete-anything all come out of a
-        # single aggregation over the persisted batch.
         is_live = (~deleted | F.col("deleted").isNull()) & F.col("doc").isNotNull()
-        stats = env.agg(
-            F.max_by("seq", SEQ_COL).alias("last_seq"),
-            F.collect_set(F.when(is_live, F.col("_cw_type"))).alias("types"),
-            F.max(deleted).alias("has_tombstones"),
-        ).collect()[0]
-        last_seq = stats["last_seq"]
-        types = set(stats["types"])
+        tombstones = env.filter(deleted).select("id", SEQ_COL)
+        live = env.filter(is_live)
+
+        # One narrow collect, not an aggregate (3 jobs): the batch's
+        # max-seq token, its live doc types and whether it deletes
+        # anything are read on the driver from O(batch) small values —
+        # the merge's key collect holds as many.
+        probe = env.select(
+            "seq", SEQ_COL, F.when(is_live, F.col("_cw_type")).alias("type"), deleted.alias("d")
+        ).toArrow()
+        top = pc.max(probe[SEQ_COL])
+        last_seq = (
+            probe.filter(pc.equal(probe[SEQ_COL], top))["seq"][0].as_py() if top.is_valid else None
+        )
+        types = set(pc.unique(probe["type"]).drop_null().to_pylist())
         # Tombstones must reach EVERY existing table, including types
         # with no live doc in this batch (a batch of pure deletes) —
         # CouchDB tombstones carry no type (reference lib/sqlite.js:95-98
         # deletes by id wherever the row lives).
-        if stats["has_tombstones"]:
+        if pc.any(probe["d"]).as_py():
             # Fan out to every DOC-TYPE table — but never to clone()
             # branches, whose lineage is frozen at clone time.
             types |= set(self.schemas.keys()) - self.clone_types
@@ -896,9 +874,23 @@ class Warehouse:
             flat = self.transform(flat)
         if self.selector_col is not None:
             flat = flat.filter(self.selector_col)
+        self._merge_flat(flat, tombstones, doc_type)
 
+    def _merge_flat(self, flat: DataFrame, tombstones: DataFrame, doc_type: str) -> int:
+        """THE merge of one flattened batch (with ``_cw_seq``) and its
+        tombstones, shared by the feed and ``merge_into``: freeze or
+        evolve the schema, conform, enforce CHECK constraints, merge
+        (retrying on a lost commit), feed the followers, register the
+        view. Returns the rows applied: the batch's live rows plus the
+        tombstones that deleted a stored row. A type whose schema is
+        not frozen yet and whose batch has no row (a selector rejected
+        them all) is left alone: its first row that passes freezes it,
+        as the reference's first matching doc does (index.js:55-68)."""
         if doc_type not in self.schemas:
-            self.schemas[doc_type] = self._freeze_schema(flat)
+            schema = self._freeze_schema(flat)
+            if schema is None:
+                return 0
+            self.schemas[doc_type] = schema
         elif self.evolve_schema:
             self._evolve_schema(flat, doc_type)
         struct = schema_to_struct(self.schemas[doc_type])
@@ -921,7 +913,7 @@ class Warehouse:
             # the default merge_retries=0 the conflict stays LOUD.
             for attempt in range(self.merge_retries + 1):
                 try:
-                    self._merge_conformed(conformed, tombstones, doc_type)
+                    n_live, n_deleted = self._merge_conformed(conformed, tombstones, doc_type)
                     break
                 except ConcurrentCommitError:
                     if attempt == self.merge_retries:
@@ -934,6 +926,7 @@ class Warehouse:
         finally:
             conformed.unpersist(blocking=False)
         self.register_view(doc_type)
+        return n_live + n_deleted
 
     def _state_max_seq(self, path: str, manifest: dict) -> int:
         """max(_cw_seq) over one manifest's snapshot WITHOUT a Spark
@@ -949,7 +942,8 @@ class Warehouse:
         for fp in self._manifest_files(path, manifest):
             if fp not in self._seq_stat_cache:
                 try:
-                    self._seq_stat_cache[fp] = _parquet_seq_max(fp)
+                    rng = _parquet_range(fp, SEQ_COL)
+                    self._seq_stat_cache[fp] = rng and rng[1]
                 except (OSError, ValueError):
                     # pyarrow raises ArrowInvalid (a ValueError) for a
                     # footer it cannot parse; don't cache the failure —
@@ -1033,7 +1027,7 @@ class Warehouse:
                     # (milliseconds), far inside any sane grace.
                     os.utime(dst)
                     names.append(fn)
-                    rng = _parquet_id_range(dst)
+                    rng = _parquet_range(dst, "id")
                     stats.setdefault(b, {})[fn] = list(rng) if rng else None
             moved[b] = names
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1111,10 +1105,9 @@ class Warehouse:
         )
 
     # A bucket holding this many part files is folded back to one by
-    # the next merge that appends to it — the default of ``compact``
-    # too. It bounds a point lookup's read fan-out to this many files
-    # per bucket, and a bucket's dead set to the rows of the batches
-    # appended since its last fold.
+    # the next merge that appends to it. It bounds a point lookup's
+    # read fan-out to this many files per bucket, and a bucket's dead
+    # set to the rows of the batches appended since its last fold.
     MAX_FILES_PER_BUCKET = 4
 
     # What every merge records in its manifest's ``metrics``: batch
@@ -1124,10 +1117,11 @@ class Warehouse:
 
     def _merge_conformed(
         self, conformed: DataFrame, tombstones: DataFrame, doc_type: str
-    ) -> int:
+    ) -> tuple[int, int]:
         """Merge-on-read upsert of one conformed batch and its
-        tombstones, committed as ONE new manifest version; returns the
-        number of tombstones that deleted a live row.
+        tombstones, committed as ONE new manifest version; returns
+        (the batch's live rows, the tombstones that deleted a stored
+        row).
 
         1. The batch's (id, seq, deleted, bucket) keys are collected —
            one job, no shuffle — and the driver keeps each id's latest.
@@ -1136,16 +1130,17 @@ class Warehouse:
            batch id (``_prune_bucket_files``); pyarrow reads only their
            ``id`` and ``_cw_seq`` columns, keeps the rows whose id is in
            the batch and drops the dead ones (``_stored_seqs``).
-        3. A batch row whose seq is ≤ its id's stored seq (or that is
-           itself a dead version) is a replay loser: neither written
-           nor marking anything. Otherwise the stored version joins the
-           dead set, and the row is appended unless it is a tombstone.
+        3. An id whose latest batch seq is ≤ its stored seq (or whose
+           latest batch row is itself a dead version) is a replay
+           loser: its batch rows are dropped, so they neither write nor
+           mark anything. Otherwise the stored version joins the dead
+           set, and the row is appended unless it is a tombstone.
         4. A bucket that gets an appended row while already holding
-           ``MAX_FILES_PER_BUCKET`` files is folded: its live rows and
-           its batch rows go through ``merge_batch`` into one file, and
-           its dead set is dropped.
-        5. One ``_commit_rewrite`` of the appended plus folded rows, one
-           new file per written bucket; every other file is carried by
+           ``MAX_FILES_PER_BUCKET`` files is folded: its live rows join
+           the merge as ``state``, and its dead set is dropped.
+        5. ``merge_batch`` keeps each (bucket, id)'s latest row with one
+           shuffle, by bucket, and one ``_commit_rewrite`` writes one new
+           file per written bucket; every other file is carried by
            reference, and the manifest gets the new dead names and the
            ``MERGE_METRICS``.
 
@@ -1157,17 +1152,18 @@ class Warehouse:
         # merge that hashed with the wrong count would look in the
         # wrong buckets and write files no reader looks for.
         n_cur = self._manifest_buckets_n(manifest)
+        bucket = self._bucket_of("id", n_cur)
         # Seq is stored as a long: merge_into stamps an int literal, and
         # an appended file must read under the table's declared schema.
-        batch = (
-            conformed.withColumns({SEQ_COL: F.col(SEQ_COL).cast("long"), DELETED_COL: F.lit(False)})
-            .unionByName(
-                tombstones.select("id", SEQ_COL).withColumn(DELETED_COL, F.lit(True)),
-                allowMissingColumns=True,
-            )
-            .withColumn("_cw_bucket", self._bucket_of("id", n_cur))
+        seq = F.col(SEQ_COL).cast("long")
+        upserts = conformed.withColumns({SEQ_COL: seq, "_cw_bucket": bucket})
+        tombs = tombstones.select("id", seq.alias(SEQ_COL), bucket.alias("_cw_bucket"))
+        keys = (
+            upserts.select("id", SEQ_COL, F.lit(False).alias(DELETED_COL), "_cw_bucket")
+            .unionByName(tombs.withColumn(DELETED_COL, F.lit(True)))
+            .toArrow()
+            .to_pydict()
         )
-        keys = batch.select("id", SEQ_COL, DELETED_COL, "_cw_bucket").toArrow().to_pydict()
         latest: dict = {}
         for row in zip(keys["id"], keys[SEQ_COL], keys[DELETED_COL], keys["_cw_bucket"]):
             if row[0] not in latest or row[1] > latest[row[0]][1]:
@@ -1181,7 +1177,7 @@ class Warehouse:
         for doc_id, seq, deleted, b in latest.values():
             old = stored.get(doc_id)
             if (old is not None and seq <= old) or _dead_key(seq, doc_id) in dead:
-                losers.append(_dead_key(seq, doc_id))
+                losers.append(doc_id)
                 continue
             if old is not None:
                 new_dead.setdefault(b, []).append(_dead_key(old, doc_id))
@@ -1190,41 +1186,32 @@ class Warehouse:
             if not deleted:
                 n_rows += 1
                 appended.add(b)
+        if losers:
+            # Every batch row of a losing id loses (its latest does), and
+            # the filter never reaches a folded bucket's stored rows.
+            won = F.expr(f"coalesce({_not_in_sql(losers, 'id')}, true)")
+            upserts, tombs = upserts.filter(won), tombs.filter(won)
         files = (manifest or {"buckets": {}})["buckets"]
         fold = sorted(
             b for b in appended if len(files.get(str(b), [])) >= self.MAX_FILES_PER_BUCKET
         )
-        # Spark's latest-wins, with ONE shuffle, by bucket: the window's
-        # (bucket, id) clustering is met by that partitioning, so each
-        # bucket's rows land in one task, which writes one file there.
-        w = latest_wins(batch.repartition("_cw_bucket"), key=["_cw_bucket", "id"])
-        if losers:
-            w = w.filter(F.expr(_not_in_sql(losers)))
-        frame = w.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
+        state = None
         if fold:
-            in_fold = F.col("_cw_bucket").isin(fold)
             # The CURRENT frozen schema + seq, not the manifest's: a
             # batch that just evolved the schema reads the new column
             # as NULL from every older file.
-            state_schema = T.StructType(
-                list(schema_to_struct(self.schemas[doc_type]).fields)
-                + [T.StructField(SEQ_COL, T.LongType())]
-            )
             state = self._read_parts(
                 path,
                 manifest,
                 [os.path.join(path, f"_cw_bucket={b}", fn) for b in fold for fn in files[str(b)]],
-                schema=state_schema,
-            ).drop("_cw_bucket")
-            fb = w.filter(in_fold).drop("_cw_bucket")
-            folded = merge_batch(
-                state,
-                fb.filter(~F.col(DELETED_COL)).drop(DELETED_COL),
-                fb.filter(F.col(DELETED_COL)),
-            ).withColumn("_cw_bucket", self._bucket_of("id", n_cur))
-            frame = frame.filter(~in_fold).unionByName(folded).repartition("_cw_bucket")
+                schema=T.StructType(
+                    list(schema_to_struct(self.schemas[doc_type]).fields)
+                    + [T.StructField(SEQ_COL, T.LongType())]
+                ),
+            )
             for b in fold:
                 new_dead.pop(b, None)
+        frame = merge_batch(state, upserts, tombs, key=["_cw_bucket", "id"])
         # Rows id-sorted inside each file: the parquet reader's pushed
         # id filters then prune at row-group granularity. The unadvanced
         # checkpoint replays a batch whose commit never landed —
@@ -1240,7 +1227,7 @@ class Warehouse:
             n_buckets=n_cur,
             metrics=dict(zip(self.MERGE_METRICS, (n_rows, n_superseded, len(fold)))),
         )
-        return n_applied
+        return keys[DELETED_COL].count(False), n_applied
 
     def _stored_seqs(self, path: str, manifest: dict, rows: list, dead: set[str]) -> dict:
         """Batch id → the seq of its live stored version, for the batch
@@ -1288,31 +1275,22 @@ class Warehouse:
         for field in flat.schema.fields:
             if field.name == SEQ_COL or field.name in schema:
                 continue
-            if isinstance(field.dataType, T.BooleanType):
-                logical = "boolean"
-            elif isinstance(
-                field.dataType,
-                (T.DoubleType, T.FloatType, T.LongType, T.IntegerType,
-                 T.ShortType, T.ByteType, T.DecimalType),
-            ):
-                logical = "number"
-            else:
-                logical = "string"
-            schema[field.name] = logical
+            schema[field.name] = _logical_of(field.dataType)
             added.append(field.name)
         return added
 
-    def _freeze_schema(self, flat: DataFrame) -> dict[str, str]:
+    def _freeze_schema(self, flat: DataFrame) -> dict[str, str] | None:
         """First-doc-wins schema freeze (R7; reference index.js:55-68).
 
         The first (lowest-seq) document of the type defines the
         column set and logical types; fields it lacks — even ones
         other docs in the same batch have — never become columns
-        (reference README.md:300-304). Exactly one row is collected.
+        (reference README.md:300-304). Exactly one row is collected;
+        an empty frame freezes nothing (None).
         """
         first = flat.orderBy(F.col(SEQ_COL).asc()).limit(1).collect()
         if not first:
-            return {}
+            return None
         row = first[0].asDict()
         schema: dict[str, str] = {}
         for field in flat.schema.fields:
@@ -1324,29 +1302,29 @@ class Warehouse:
             schema[name] = _logical_of(field.dataType)
         return schema
 
-    def compact(
-        self, doc_type: str = DEFAULT_TYPE, max_files_per_bucket: int = MAX_FILES_PER_BUCKET
-    ) -> int:
+    def compact(self, doc_type: str = DEFAULT_TYPE) -> int:
         """Compact fragmented bucket directories (operational kernel).
 
-        Every micro-batch merge adds new part files to its affected
-        buckets, so a hot bucket accumulates small files over time —
-        the classic small-files problem that degrades scan throughput
-        at scale. This rewrites every bucket whose CURRENT VERSION
-        references more than ``max_files_per_bucket`` parquet parts
-        down to ~one file and commits it as a new manifest version.
-        Content is unchanged — compaction only re-clusters bytes — and
-        the superseded fragments stay on disk for older snapshots
-        until ``vacuum()`` reclaims them: the OPTIMIZE/VACUUM split
-        Delta makes, for the same reason (never disturb a concurrent
+        Every micro-batch merge appends a part file to each bucket it
+        writes and marks the rows it supersedes dead, so a hot bucket
+        accumulates small files and dead rows — the classic
+        small-files problem that degrades scan throughput at scale.
+        This rewrites every bucket whose CURRENT VERSION references
+        more than one part file or any dead row to one file of its
+        live rows, and commits it as a new manifest version. Content
+        is unchanged — compaction only re-clusters bytes — and the
+        superseded fragments stay on disk for older snapshots until
+        ``vacuum()`` reclaims them: the OPTIMIZE/VACUUM split Delta
+        makes, for the same reason (never disturb a concurrent
         reader). Returns the number of buckets rewritten.
         """
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
         if manifest is None:
             return 0
+        dead = self._dead(manifest)
         prev = {int(b): fs for b, fs in manifest["buckets"].items()}
-        todo = sorted(b for b, fs in prev.items() if len(fs) > max_files_per_bucket)
+        todo = sorted(b for b, fs in prev.items() if len(fs) > 1 or dead.get(str(b)))
         if not todo:
             return 0
 
@@ -1387,10 +1365,13 @@ class Warehouse:
         absent id is a no-op and is NOT counted.
 
         Scale: the seq probe reads per-file footer maxima, with no
-        scan. The merge is ``_merge_conformed``'s merge-on-read append:
-        it writes only the incoming rows and marks the versions they
-        supersede dead, and the delete count is the number of
-        tombstones it matched to a live stored row — no extra probe.
+        scan. The merge is the feed's (``_merge_flat``): it writes only
+        the incoming rows and marks the versions they supersede dead,
+        retries a lost commit up to ``merge_retries`` times, and counts
+        the live rows and matched tombstones from the keys it collects
+        — no extra probe. A retried merge keeps its stamp, so an id a
+        racing writer committed at the same or a higher seq keeps that
+        writer's row.
         """
         if "id" not in df.columns:
             raise ValueError("merge_into frame needs an 'id' column")
@@ -1414,24 +1395,9 @@ class Warehouse:
             tombstones = self.spark.range(0).select(
                 F.lit("").alias("id"), F.lit(0).cast("long").alias(SEQ_COL)
             )
-        flat = live.withColumn(SEQ_COL, F.lit(base_seq + 1))
-        if doc_type not in self.schemas:
-            self.schemas[doc_type] = self._freeze_schema(flat)
-        elif self.evolve_schema:
-            self._evolve_schema(flat, doc_type)
-        struct = schema_to_struct(self.schemas[doc_type])
-        conformed = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
-        try:
-            conformed = self._enforce_constraints(conformed, doc_type)
-            n = conformed.count()
-            n_del = self._merge_conformed(conformed, tombstones, doc_type)
-            for follower in self.followers:
-                follower(self, doc_type, conformed, tombstones)
-        finally:
-            conformed.unpersist(blocking=False)
+        n = self._merge_flat(live.withColumn(SEQ_COL, F.lit(base_seq + 1)), tombstones, doc_type)
         self._save_schemas()
-        self.register_view(doc_type)
-        return n + n_del
+        return n
 
     def delete_where(
         self, condition, doc_type: str = DEFAULT_TYPE
@@ -2137,7 +2103,7 @@ class Warehouse:
                     continue
                 rec = per.get(fn)
                 if rec is not None:
-                    actual = _parquet_id_range(fp)
+                    actual = _parquet_range(fp, "id")
                     if actual is not None and list(actual) != list(rec):
                         stat_mismatch.append(fp)
         misplaced = 0

@@ -204,7 +204,7 @@ def dml_stress(spark, base_sf: str, workdir: str, copies: int) -> list[str]:
 
     # 1. OPTIMIZE: rewrites exactly the fragmented buckets, nothing else.
     t0 = time.monotonic()
-    n_rw = wh.compact(max_files_per_bucket=1)
+    n_rw = wh.compact()
     t_compact = time.monotonic() - t0
     files1, _ = _bucket_files(wh)
     total1 = sum(len(v) for v in files1.values())

@@ -117,6 +117,32 @@ def test_cli_compact_flag(spark, tmp_path, capsys):
     assert "8" in capsys.readouterr().out
 
 
+def test_cli_compact_flag_compacts_after_pages(spark, tmp_path, capsys):
+    """After a spool and three pages of updates every touched bucket
+    holds several files and dead rows; --compact rewrites each to one
+    file of live rows."""
+    import json
+    import os
+
+    rng = random.Random(3)
+    wh_dir = str(tmp_path / "wh")
+    pages = [[envelope(i + 1, order_doc(i, rng)) for i in range(40)]] + [
+        [envelope(100 * n + i, order_doc(i * n, rng)) for i in range(10)] for n in (1, 2, 3)
+    ]
+    for n, envs in enumerate(pages):
+        feed = write_feed(str(tmp_path / f"p{n}"), envs)
+        args = ["--feed", feed, "--database", "cpages", "--warehouse-dir", wh_dir, "--quiet"]
+        assert main(args + (["--compact"] if n == 3 else [])) == 0
+    vdir = os.path.join(wh_dir, "cpages", "_cw_versions")
+    with open(os.path.join(vdir, max(os.listdir(vdir)))) as f:
+        head = json.load(f)
+    assert head["op"] == "compact"
+    assert head["dead"] == {} and all(len(fs) == 1 for fs in head["buckets"].values())
+    assert main(["--feed", feed, "--database", "cpages", "--warehouse-dir", wh_dir,
+                 "--quiet", "--sql", "SELECT count(*) AS n FROM cpages"]) == 0
+    assert "40" in capsys.readouterr().out
+
+
 def test_cli_zorder_flag(spark, tmp_path, capsys):
     """--zorder rewrites every discovered type's buckets ordered by
     the given columns as a new version; the warehouse stays queryable

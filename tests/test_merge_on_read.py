@@ -149,7 +149,7 @@ def test_merge_on_read_matches_dict_reference(spark, tmp_path):
     assert _ages(wh.table("branch")) == ages(refs[pre])
 
     # compact rewrites every bucket to one file and clears its dead set.
-    assert wh.compact(max_files_per_bucket=0) > 0
+    assert wh.compact() > 0
     m = _manifest(wh)
     assert m["dead"] == {} and all(len(fs) == 1 for fs in m["buckets"].values())
     assert _ages(wh.table()) == ages(refs[pre])
@@ -198,10 +198,12 @@ def test_merge_records_metrics_and_history_shows_them(spark, tmp_path, capsys):
     assert len(m["buckets"]["0"]) == 1 and m["dead"] == {}
     assert wh.table().count() == 12
 
-    wh.compact(max_files_per_bucket=0)
+    # A second file gives compact a bucket to rewrite.
+    _apply(wh, tmp_path, "post", [envelope(2000, _doc(1, 9))])
+    assert wh.compact() == 1
     hist = {r["version"]: r.asDict() for r in wh.history().collect()}
     assert hist[2]["rows_appended"] == 5 and hist[2]["rows_superseded"] == 4
-    assert hist[max(hist) - 1]["buckets_folded"] == 1
+    assert hist[max(hist) - 2]["buckets_folded"] == 1
     assert hist[max(hist)]["op"] == "compact" and hist[max(hist)]["rows_appended"] is None
     empty = write_feed(str(tmp_path / "empty"), [])
     assert main(["--feed", empty, "--database", "mormetrics", "--warehouse-dir", wh_dir,

@@ -3,9 +3,9 @@
 ``_prune_bucket_files`` is pure driver arithmetic over the manifest's
 recorded per-file id ranges and the batch's per-bucket id range (taken
 from the batch keys the merge collects), so its rule is tested here on
-hand-built manifests with no Spark session. The last test pins what
-the merge costs: the number of Spark jobs one merge into an existing
-table submits.
+hand-built manifests with no Spark session. The last tests pin what
+a merge costs: the Spark jobs an appending merge, a folding merge and
+``merge_into`` submit, and the one job a batch submits outside them.
 """
 
 from __future__ import annotations
@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 import random
 
+from couchwarehouse_spark.sources.changes import read_changes_feed
 from couchwarehouse_spark.warehouse import Warehouse
 
 from .fixtures import envelope, jobs_run_by, order_doc, write_feed
@@ -84,10 +85,26 @@ def test_buckets_outside_ranges_are_not_considered():
     assert untouched == {}
 
 
+def _count_merge_jobs(spark, wh) -> list[int]:
+    """Wrap ``wh._merge_conformed`` to record the Spark jobs of each
+    call; returns the (growing) list of counts."""
+    counts: list[int] = []
+    merge = wh._merge_conformed
+
+    def counted(*args):
+        out, n = jobs_run_by(spark, f"merge-{id(counts)}-{len(counts)}", lambda: merge(*args))
+        counts.append(n)
+        return out
+
+    wh._merge_conformed = counted
+    return counts
+
+
 def test_merge_into_existing_table_job_count(spark, tmp_path):
-    """A 50-change page merged into a 200-doc table: the id-range
-    aggregate, the driver-side prune and the write — at most 5 Spark
-    jobs in ``_merge_conformed`` (7 with the semi-join probes)."""
+    """A 50-change page merged into a 200-doc table: the key collect,
+    then the write (its shuffle map stage and its result stage) — 3
+    Spark jobs in ``_merge_conformed``; the prune and the stored-seq
+    read run on the driver."""
     rng = random.Random(5)
     wh = Warehouse(spark, str(tmp_path / "wh"), "prunejobs", n_buckets=4)
     wh.spool(write_feed(
@@ -101,15 +118,93 @@ def test_merge_into_existing_table_job_count(spark, tmp_path):
             for i in range(10)
         ]
     )
-    counts = []
-    merge = wh._merge_conformed
-
-    def counted(*args):
-        _, n = jobs_run_by(spark, f"merge-{len(counts)}", lambda: merge(*args))
-        counts.append(n)
-
-    wh._merge_conformed = counted
+    counts = _count_merge_jobs(spark, wh)
     wh.spool(write_feed(str(tmp_path / "f2"), page))
-    assert len(counts) == 1
-    assert counts[0] <= 5, counts
+    assert counts == [3]
     assert wh.table().count() == 200
+
+
+def test_folding_merge_job_count(spark, tmp_path):
+    """Pages of 40 upserts and 5 tombstones into a 4-bucket table: every
+    page touches every bucket, so the 4th page folds them. A fold reads
+    the folded buckets' files into the merge's one shuffle, so it
+    submits the same 3 jobs as an append."""
+    rng = random.Random(9)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "foldjobs", n_buckets=4)
+    wh.spool(write_feed(
+        str(tmp_path / "f0"), [envelope(i + 1, order_doc(i, rng)) for i in range(200)]
+    ))
+    live = set(range(200))
+    counts = _count_merge_jobs(spark, wh)
+    seq = 1000
+    folds = []
+    for n in range(1, 6):
+        envs = []
+        for i in rng.sample(range(260), 40):
+            seq += 1
+            envs.append(envelope(seq, order_doc(i, rng)))
+            live.add(i)
+        for i in rng.sample(sorted(live), 5):
+            seq += 1
+            envs.append(envelope(seq, None, doc_id=f"order{i:05d}", deleted=True))
+            live.discard(i)
+        wh.spool(write_feed(str(tmp_path / f"f{n}"), envs))
+        folds.append(wh._load_manifest(wh._table_path("_default"))["metrics"]["buckets_folded"])
+    assert folds == [0, 0, 0, 4, 0]
+    assert counts == [3] * 5
+    assert sorted(r["id"] for r in wh.table().collect()) == sorted(
+        f"order{i:05d}" for i in live
+    )
+
+
+def test_merge_into_job_count(spark, tmp_path):
+    """merge_into's live-row count comes from the merge's key collect:
+    the whole call submits the merge's 3 jobs and nothing else (the
+    seq probe reads parquet footers)."""
+    wh = Warehouse(spark, str(tmp_path / "wh"), "mijobs", n_buckets=4)
+    schema = "id string, total double, gone boolean"
+    wh.merge_into(
+        spark.createDataFrame([(f"o{i:03d}", float(i), False) for i in range(200)], schema),
+        delete_col="gone",
+    )
+    inc = spark.createDataFrame(
+        [(f"o{i * 7:03d}", -1.0, False) for i in range(30)]
+        + [(f"n{i:03d}", 1.0, False) for i in range(10)]
+        + [(f"o{i * 7 + 3:03d}", None, True) for i in range(10)],
+        schema,
+    )
+    n, n_jobs = jobs_run_by(spark, "merge-into", lambda: wh.merge_into(inc, delete_col="gone"))
+    assert n == 50  # 40 live rows, 10 deletes of stored ids
+    assert n_jobs == 3
+    assert wh.table().count() == 201  # o203 and n000-n009 are new
+
+
+def test_process_batch_probe_is_one_job(spark, tmp_path):
+    """Outside its per-type merges, one batch submits one Spark job: the
+    collect of its max seq, live types and tombstone flag."""
+    rng = random.Random(4)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "probejobs", n_buckets=4, split="type")
+    wh.spool(write_feed(
+        str(tmp_path / "f0"), [envelope(i + 1, order_doc(i, rng)) for i in range(20)]
+    ))
+    sc = spark.sparkContext
+    merge = wh._merge_type
+    merged = []
+
+    def merge_in_own_group(live, tombstones, doc_type):
+        sc.setJobGroup("probe-merges", "probe-merges")
+        try:
+            merged.append(doc_type)
+            return merge(live, tombstones, doc_type)
+        finally:
+            sc.setJobGroup("probe-batch", "probe-batch")
+
+    wh._merge_type = merge_in_own_group
+    page = [envelope(100 + i, order_doc(i, rng)) for i in range(5)] + [
+        envelope(200, None, doc_id="order00007", deleted=True)
+    ]
+    env = read_changes_feed(spark, write_feed(str(tmp_path / "f1"), page))
+    last, n_jobs = jobs_run_by(spark, "probe-batch", lambda: wh._process_batch(env))
+    assert last == page[-1]["seq"]
+    assert merged == ["order"]
+    assert n_jobs == 1

@@ -76,13 +76,13 @@ def test_seq_probe_scan_fallback_when_footer_stats_absent(spark, tmp_path):
 
     path = wh._table_path("_default")
     manifest = wh._load_manifest(path)
-    orig = W._parquet_seq_max
+    orig = W._parquet_range
     try:
-        W._parquet_seq_max = lambda fp: None  # simulate stat-less files
+        W._parquet_range = lambda fp, col: None  # simulate stat-less files
         wh._seq_stat_cache.clear()
         assert wh._state_max_seq(path, manifest) == _scan_max_seq(wh) == 2
     finally:
-        W._parquet_seq_max = orig
+        W._parquet_range = orig
 
 
 def test_delete_count_pruned_probe_is_exact(spark, tmp_path):

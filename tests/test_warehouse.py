@@ -176,6 +176,33 @@ def test_mango_selector_and_transform(spark, tmp_path):
     assert wh3.table().filter(F.col("id") == "person0003").collect()[0]["name"] == "PERSON 3"
 
 
+def test_selector_rejecting_a_types_first_batch_freezes_nothing(spark, tmp_path):
+    """A type none of whose docs pass the selector gets no schema and
+    no table; its first doc that passes freezes the schema (the
+    reference filters before a doc reaches the schema freeze,
+    index.js:55-68). Freezing the empty frame's schema collapsed every
+    later doc of the type into one NULL-id row."""
+    wh = Warehouse(
+        spark, str(tmp_path / "wh"), "selfirst", split="type", selector={"status": "paid"}
+    )
+
+    def doc(doc_id, doc_type, status):
+        return {"_id": doc_id, "_rev": "1-a", "type": doc_type, "status": status, "n": 1}
+
+    wh.spool(write_feed(str(tmp_path / "b1.jsonl"), [
+        envelope(1, doc("u1", "user", "new")),
+        envelope(2, doc("o1", "order", "paid")),
+    ]))
+    assert "user" not in wh.schemas
+    wh.spool(write_feed(str(tmp_path / "b2.jsonl"), [
+        envelope(3, doc("u2", "user", "paid")),
+        envelope(4, doc("u3", "user", "paid")),
+    ]))
+    assert set(wh.schemas["user"]) == {"id", "rev", "type", "status", "n"}
+    assert sorted(r["id"] for r in wh.table("user").collect()) == ["u2", "u3"]
+    assert [r["id"] for r in wh.table("order").collect()] == ["o1"]
+
+
 def test_design_docs_excluded(spark, tmp_path):
     """R9 — _design/* excluded from schema discovery and inserts."""
     rng = random.Random(9)
@@ -345,7 +372,7 @@ def test_random_replay_matches_dict_oracle(spark, tmp_path):
     for n, chunk in enumerate([envs[: cuts[0]], envs[cuts[0]: cuts[1]], envs[cuts[1]:]]):
         wh.spool(write_feed(str(tmp_path / f"feed{n}.jsonl"), chunk))
         if n == 0:
-            wh.compact(max_files_per_bucket=1)
+            wh.compact()
         elif n == 1:
             wh.vacuum(retain_versions=1, min_age_seconds=0)
 
@@ -571,7 +598,7 @@ def test_compact_reduces_files_preserves_content(spark, tmp_path):
     before_refs = referenced_per_bucket()
     assert any(n > 1 for n in before_refs.values()), "fixture must fragment"
 
-    n = wh.compact(max_files_per_bucket=1)
+    n = wh.compact()
     assert n >= 1
 
     after_refs = referenced_per_bucket()
@@ -590,7 +617,7 @@ def test_compact_reduces_files_preserves_content(spark, tmp_path):
     assert sorted((r["id"], r["status"]) for r in wh.table().collect()) == before_rows
     assert not os.path.isdir(path + "._tmp")
     # Second pass is a no-op.
-    assert wh.compact(max_files_per_bucket=1) == 0
+    assert wh.compact() == 0
 
 
 def test_query_substitutions_bind_as_parameters(spark, tmp_path):
@@ -1048,6 +1075,42 @@ def test_merge_retries_replay_against_winner(spark, tmp_path):
     assert ops.count("merge") >= 3  # initial + rival + retried commit
 
 
+def test_merge_into_retries_a_lost_commit(spark, tmp_path):
+    """merge_into goes through the feed's merge, so it honours
+    merge_retries: one lost commit is replayed, not raised."""
+    import pytest
+
+    from couchwarehouse_spark.warehouse import ConcurrentCommitError
+
+    schema = "id string, total double"
+    for retries in (0, 1):
+        wh = Warehouse(
+            spark, str(tmp_path / f"wh{retries}"), "miretry", n_buckets=2,
+            merge_retries=retries,
+        )
+        wh.merge_into(spark.createDataFrame([("a", 1.0), ("b", 2.0)], schema))
+        commit = wh._commit_manifest
+        lost = []
+
+        def lose_once(*args, **kwargs):
+            if not lost:
+                lost.append(1)
+                raise ConcurrentCommitError("injected")
+            return commit(*args, **kwargs)
+
+        wh._commit_manifest = lose_once
+        inc = spark.createDataFrame([("b", 5.0), ("c", 3.0)], schema)
+        if retries == 0:
+            with pytest.raises(ConcurrentCommitError):
+                wh.merge_into(inc)
+            continue
+        assert wh.merge_into(inc) == 2
+        assert lost == [1]
+        assert {r["id"]: r["total"] for r in wh.table().collect()} == {
+            "a": 1.0, "b": 5.0, "c": 3.0
+        }
+
+
 def test_schema_evolution_opt_in(spark, tmp_path):
     """evolve_schema=True (Delta mergeSchema): a later batch ADDS a
     column — null-backfilled for existing rows, visible from the
@@ -1359,7 +1422,7 @@ def test_random_maintenance_ops_preserve_content(spark, tmp_path):
         if op == "spool":
             spool_batch()
         elif op == "compact":
-            wh.compact(max_files_per_bucket=1)
+            wh.compact()
         elif op == "zorder":
             wh.optimize_zorder(["total"])
         elif op == "rebucket":
@@ -1645,7 +1708,7 @@ def test_random_dml_and_maintenance_model(spark, tmp_path):
             for k in expect:
                 model[k] = "archived"
         elif op == "compact":
-            wh.compact(max_files_per_bucket=1)
+            wh.compact()
         elif op == "vacuum":
             wh.vacuum(retain_versions=1, min_age_seconds=0)
         got = {r["id"]: r["status"] for r in wh.table().collect()}
@@ -1936,7 +1999,7 @@ def test_lookup_matches_table_through_history(spark, tmp_path):
     want = spool("recreate", [(5, "again"), (6, "upd"), (25, "base"), (26, "new")])
     assert want["order00005"][0]["newfield"] == "again5" and "order00007" not in want
 
-    wh.compact(max_files_per_bucket=1)
+    wh.compact()
     _assert_lookups_match_table(wh, seen)
     wh.rebucket(5)
     _assert_lookups_match_table(wh, seen)
@@ -1991,7 +2054,7 @@ def test_maintenance_rewrites_keep_evolved_columns(spark, tmp_path):
         wh.clone("_default", "rb")
         wh.clone("_default", "zo")
 
-        assert wh.compact(max_files_per_bucket=1) == 1
+        assert wh.compact() == 1
         assert wh.rebucket(3, doc_type="rb") == 1
         # Z-ordering BY the evolved column: it must be a known column.
         assert wh.optimize_zorder(["y"], doc_type="zo") == 1
