@@ -10,10 +10,11 @@ landing dir (``sources.http_changes``) before — and, under
 ``--feed`` is a pre-spooled directory. One delta vs the reference:
 ``--databaseType`` becomes per-target flags: the warehouse itself is
 the default target (parquet tables + Spark SQL), ``--sqlite PATH``
-adds the reference's sqlite target (one-shot egress, or per-batch
-follower under ``--monitor``), ``--es URL`` / ``$ESCONFIG`` the
-elasticsearch target (live ``_bulk``); postgresql/mysql ride the
-JDBC adapter (``sinks/jdbc.py``) where a driver jar exists.
+adds the reference's sqlite target and ``--es URL`` / ``$ESCONFIG``
+the elasticsearch target (live ``_bulk``): both follow each merged
+batch, spool or ``--monitor``, and catch up once when attached and
+after the maintenance flags (``sinks/follow.py``); postgresql/mysql
+ride the JDBC adapter (``sinks/jdbc.py``) where a driver jar exists.
 
 Usage::
 
@@ -156,12 +157,13 @@ def build_parser() -> argparse.ArgumentParser:
                         "semantics; fails loudly if the version was "
                         "vacuumed)")
     p.add_argument("--sqlite", default=None, metavar="PATH",
-                   help="after spooling, egress every table into this "
-                        "SQLite file (the reference's default target)")
+                   help="mirror every table into this SQLite file (the "
+                        "reference's default target), one merged batch "
+                        "at a time")
     p.add_argument("--es", default=os.environ.get("ESCONFIG"), metavar="URL",
-                   help="Elasticsearch base URL (default $ESCONFIG): bulk-"
-                        "index every table after spooling; with --monitor, "
-                        "mirror each merged batch continuously")
+                   help="Elasticsearch base URL (default $ESCONFIG): "
+                        "mirror every table into it over _bulk, one "
+                        "merged batch at a time")
     p.add_argument("--jdbc", default=os.environ.get("JDBCCONFIG"), metavar="URL",
                    help="JDBC URL (default $JDBCCONFIG), e.g. "
                         "jdbc:postgresql://host/db or jdbc:mysql://host/db: "
@@ -187,6 +189,10 @@ def main(argv: list[str] | None = None) -> int:
 
     doc_transform = _load_doc_transform(args.transform) if args.transform else None
 
+    def say(msg: str, err: bool = False) -> None:
+        if not args.quiet:
+            print(f"couchwarehouse: {msg}", file=sys.stderr if err else sys.stdout)
+
     from couchwarehouse_spark.session import get_spark
     from couchwarehouse_spark.warehouse import Warehouse
 
@@ -209,8 +215,7 @@ def main(argv: list[str] | None = None) -> int:
             print("couchwarehouse: --constraint wants NAME:EXPR", file=sys.stderr)
             return 1
         wh.add_constraint(cname, cexpr)
-        if not args.quiet:
-            print(f"couchwarehouse: CHECK constraint {cname}: {cexpr}")
+        say(f"CHECK constraint {cname}: {cexpr}")
 
     if args.mv:
         try:
@@ -222,9 +227,7 @@ def main(argv: list[str] | None = None) -> int:
                 file=sys.stderr,
             )
             return 1
-        from couchwarehouse_spark.sinks.materialized import (
-            sum_count_mv_follower,
-        )
+        from couchwarehouse_spark.sinks.materialized import sum_count_mv_follower
 
         wh.followers.append(sum_count_mv_follower(mv_name, mv_group, mv_value))
 
@@ -233,11 +236,8 @@ def main(argv: list[str] | None = None) -> int:
         # the restored state rather than the bad head version.
         for doc_type in wh.schemas:
             v = wh.restore(args.restore, doc_type)
-            if not args.quiet:
-                print(
-                    f"couchwarehouse: restored {wh.table_name(doc_type)} "
-                    f"to version {args.restore} (as new version {v})"
-                )
+            say(f"restored {wh.table_name(doc_type)} to version {args.restore} "
+                f"(as new version {v})")
 
     tailer_stop = threading.Event()
     if args.url:
@@ -282,19 +282,27 @@ def main(argv: list[str] | None = None) -> int:
                 daemon=True,
             ).start()
 
+    # The --sqlite/--es targets follow every merged batch; sync catches
+    # a target up to head when attached and after the maintenance ops.
+    targets = []
+    if args.sqlite:
+        from couchwarehouse_spark.sinks.sqlite import sqlite_follower
+
+        targets.append(sqlite_follower(args.sqlite))
+    if args.es:
+        from couchwarehouse_spark.sinks.elasticsearch import es_follower
+
+        targets.append(es_follower(args.es))
+
+    def sync_targets() -> None:
+        for target in targets:
+            for doc_type in wh.schemas:
+                target.sync(wh, doc_type)
+
+    sync_targets()
+    wh.followers.extend(targets)
+
     if args.monitor:
-        if args.sqlite:
-            # Continuous CouchDB→SQLite sync: mirror every merged
-            # micro-batch via the follower (the reference's sqlite
-            # databaseType in monitor mode) instead of a one-shot
-            # post-spool egress that monitor mode would never reach.
-            from couchwarehouse_spark.sinks.sqlite import sqlite_follower
-
-            wh.followers.append(sqlite_follower(args.sqlite))
-        if args.es:
-            from couchwarehouse_spark.sinks.elasticsearch import es_follower
-
-            wh.followers.append(es_follower(args.es))
         q = wh.start(args.feed, monitor=True, processing_time=args.processing_time)
         try:
             q.awaitTermination()
@@ -305,30 +313,20 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     last = wh.spool(args.feed)
-    if not args.quiet:
-        print(f"couchwarehouse: spooled through seq {last}")
+    say(f"spooled through seq {last}")
     if args.compact:
         for doc_type in wh.schemas:
             n = wh.compact(doc_type)
-            if n and not args.quiet:
-                print(f"couchwarehouse: compacted {n} buckets of {doc_type}")
+            if n:
+                say(f"compacted {n} buckets of {doc_type}")
     if args.delete_where:
         for doc_type in wh.schemas:
             try:
                 n = wh.delete_where(args.delete_where, doc_type)
             except Exception as err:  # type missing a referenced column
-                if not args.quiet:
-                    print(
-                        f"couchwarehouse: --delete-where skipped "
-                        f"{wh.table_name(doc_type)}: {err}",
-                        file=sys.stderr,
-                    )
+                say(f"--delete-where skipped {wh.table_name(doc_type)}: {err}", err=True)
                 continue
-            if not args.quiet:
-                print(
-                    f"couchwarehouse: deleted {n} row(s) from "
-                    f"{wh.table_name(doc_type)}"
-                )
+            say(f"deleted {n} row(s) from {wh.table_name(doc_type)}")
     if args.update_where:
         pred, sep, rest = args.update_where.partition("::")
         if not sep or not rest:
@@ -370,35 +368,18 @@ def main(argv: list[str] | None = None) -> int:
             try:
                 n = wh.update_where(pred, assigns, doc_type)
             except Exception as err:  # predicate references a missing column
-                if not args.quiet:
-                    print(
-                        f"couchwarehouse: --update-where skipped "
-                        f"{wh.table_name(doc_type)}: {err}",
-                        file=sys.stderr,
-                    )
+                say(f"--update-where skipped {wh.table_name(doc_type)}: {err}", err=True)
                 continue
-            if not args.quiet:
-                print(
-                    f"couchwarehouse: updated {n} row(s) of "
-                    f"{wh.table_name(doc_type)}"
-                )
+            say(f"updated {n} row(s) of {wh.table_name(doc_type)}")
     if args.clone:
         src_t, _, dst_t = args.clone.partition(":")
         if not dst_t:
             raise SystemExit("couchwarehouse: --clone needs SRC:DST")
         n = wh.clone(src_t, dst_t)
-        if not args.quiet:
-            print(
-                f"couchwarehouse: cloned {wh.table_name(src_t)} -> "
-                f"{wh.table_name(dst_t)} ({n} files linked)"
-            )
+        say(f"cloned {wh.table_name(src_t)} -> {wh.table_name(dst_t)} ({n} files linked)")
     if args.rebucket:
         n = wh.rebucket(args.rebucket)
-        if not args.quiet:
-            print(
-                f"couchwarehouse: rebucketed {n} table(s) to "
-                f"{args.rebucket} buckets"
-            )
+        say(f"rebucketed {n} table(s) to {args.rebucket} buckets")
     if args.zorder:
         zcols = [c.strip() for c in args.zorder.split(",") if c.strip()]
         for doc_type in wh.schemas:
@@ -408,33 +389,25 @@ def main(argv: list[str] | None = None) -> int:
             if not cols_t:
                 continue
             n = wh.optimize_zorder(cols_t, doc_type)
-            if n and not args.quiet:
-                print(
-                    f"couchwarehouse: z-ordered {n} buckets of "
-                    f"{wh.table_name(doc_type)} by {','.join(cols_t)}"
-                )
+            if n:
+                say(f"z-ordered {n} buckets of {wh.table_name(doc_type)} by {','.join(cols_t)}")
     if args.analyze:
         for doc_type in wh.schemas:
             n = wh.analyze(doc_type)
+            say(f"analyzed {n} new file(s) of {wh.table_name(doc_type)}")
             if not args.quiet:
-                print(
-                    f"couchwarehouse: analyzed {n} new file(s) of "
-                    f"{wh.table_name(doc_type)}"
-                )
                 wh.describe_stats(doc_type).show(truncate=False)
+    sync_targets()
     if args.fsck:
         bad = 0
         for doc_type in wh.schemas:
             rep = wh.fsck(doc_type).collect()[0]
-            if not args.quiet:
-                print(
-                    f"couchwarehouse: fsck {wh.table_name(doc_type)} "
-                    f"v{rep['version']}: files={rep['n_files']} "
-                    f"missing={rep['n_missing_files']} "
-                    f"stat_mismatch={rep['n_stat_mismatches']} "
-                    f"misplaced_rows={rep['n_misplaced_rows']} "
-                    f"ok={rep['ok']}"
-                )
+            say(
+                f"fsck {wh.table_name(doc_type)} v{rep['version']}: "
+                f"files={rep['n_files']} missing={rep['n_missing_files']} "
+                f"stat_mismatch={rep['n_stat_mismatches']} "
+                f"misplaced_rows={rep['n_misplaced_rows']} ok={rep['ok']}"
+            )
             if not rep["ok"]:
                 bad += 1
         if bad:
@@ -449,11 +422,8 @@ def main(argv: list[str] | None = None) -> int:
             n = wh.vacuum(
                 doc_type, retain_versions=args.vacuum, min_age_seconds=min_age
             )
-            if not args.quiet:
-                print(
-                    f"couchwarehouse: vacuumed {n} files of "
-                    f"{wh.table_name(doc_type)} (kept {max(1, args.vacuum)} versions)"
-                )
+            say(f"vacuumed {n} files of {wh.table_name(doc_type)} "
+                f"(kept {max(1, args.vacuum)} versions)")
     if args.mv and not args.quiet:
         mv_name = args.mv.split(":")[0]
         for doc_type in wh.schemas:
@@ -464,78 +434,6 @@ def main(argv: list[str] | None = None) -> int:
         for doc_type in wh.schemas:
             print(f"couchwarehouse: history of {wh.table_name(doc_type)}")
             wh.history(doc_type).show(50, truncate=False)
-    if args.sqlite or args.es:
-        # Tombstone set shared by both one-shot egress targets: ids
-        # whose LATEST envelope (by _cw_seq) is a deletion. Filtering
-        # on "any deleted change" would be wrong — CouchDB feeds
-        # legitimately contain delete-then-recreate histories, and the
-        # warehouse (merge_batch) resolves those to the recreate; the
-        # egress targets must agree or they silently diverge.
-        from pyspark.sql import functions as F
-
-        from couchwarehouse_spark.operators.upsert import latest_wins
-        from couchwarehouse_spark.sources.changes import read_changes_feed
-
-        env = read_changes_feed(spark, args.feed)
-        latest_deleted_ids = (
-            latest_wins(env.select("id", "_cw_seq", "deleted"))
-            .filter(F.col("deleted").isNotNull() & F.col("deleted"))
-            .select("id")
-            .withColumn("_cw_del", F.lit(True))
-        )
-    if args.sqlite:
-        # Reference default target: REPLACE-INTO egress of the merged
-        # state per table (lib/sqlite.js:60-110), stdlib sqlite3 —
-        # plus DELETE-by-id for latest-deleted feed ids, the parity
-        # path for the reference's per-change DELETE (lib/sqlite.js:
-        # 95-98). Without it a re-run against an existing sqlite file
-        # after deletions would leave stale rows queryable forever.
-        from couchwarehouse_spark.sinks.sqlite import SQLiteSink
-
-        sink = SQLiteSink(args.sqlite)
-        try:
-            for doc_type, schema in wh.schemas.items():
-                name = wh.table_name(doc_type)
-                full = {"id": "string", **schema}
-                sink.create_table(name, full)
-                n = sink.insert_bulk(name, wh.table(doc_type), full)
-                sink.insert_bulk(
-                    name, latest_deleted_ids, full, deleted_col="_cw_del"
-                )
-                # An already-caught-up spool returns None — appending a
-                # "0" row would rewind the newest-rowid checkpoint, so
-                # fall back to the warehouse's stored seq instead.
-                seq = last or wh.checkpoints.read(wh.db_name)
-                if seq is not None:
-                    sink.write_checkpoint(name, seq)
-                if not args.quiet:
-                    print(f"couchwarehouse: {n} rows -> sqlite table {name}")
-        finally:
-            sink.close()
-    if args.es:
-        # One-shot bulk index of the merged state (the reference's
-        # elasticsearch databaseType, lib/elasticsearch.js:16-44),
-        # PLUS delete actions for ids whose latest feed state is a
-        # deletion (latest_deleted_ids above) — without them a re-run
-        # over a feed containing deletions would leave stale documents
-        # searchable forever (ES delete of an absent id is a no-op, so
-        # this is idempotent), and with the naive "any deleted change"
-        # set a delete-then-recreate doc would be wrongly purged from
-        # ES while remaining in the warehouse. Index naming shared
-        # with the monitor-mode follower via es_index_name.
-        from couchwarehouse_spark.sinks.elasticsearch import (
-            es_index_name,
-            push_bulk_http,
-        )
-
-        for doc_type in wh.schemas:
-            index = es_index_name(doc_type)
-            push_bulk_http(wh.table(doc_type), index, args.es)
-            # Tombstones carry no type: route deletes to every index,
-            # exactly as the warehouse routes them to every table.
-            push_bulk_http(latest_deleted_ids, index, args.es, deleted_col="_cw_del")
-            if not args.quiet:
-                print(f"couchwarehouse: indexed {wh.table_name(doc_type)} -> {index}")
     if args.jdbc:
         # The reference's postgresql/mysql databaseType targets
         # (bin/couchwarehouse.bin.js:9, lib/postgresql.js,
@@ -560,8 +458,7 @@ def main(argv: list[str] | None = None) -> int:
                 mode="overwrite",
                 schema=full,
             )
-            if not args.quiet:
-                print(f"couchwarehouse: wrote {name} -> {args.jdbc}")
+            say(f"wrote {name} -> {args.jdbc}")
     if args.sql:
         wh.query(args.sql).show(50, truncate=False)
     return 0

@@ -12,13 +12,18 @@ Spark-first design (no row-at-a-time anything):
 * **latest-wins** — ``row_number() OVER (PARTITION BY id ORDER BY
   seq DESC) = 1``: one shuffle on the document id (high-cardinality,
   no skew), each id's state fits trivially in a window partition.
-* **delete propagation** — a broadcast ``LEFT ANTI`` join of state
-  against the batch's tombstone ids (tombstones per batch ≪ state).
-* **merge** — new state = latest-wins over (old state ∪ batch
-  upserts) minus tombstones. Idempotent by construction: replaying a
-  batch can't change the outcome because seq ordering decides.
-  At 100 TB the upgrade path is Delta/Iceberg ``MERGE`` which makes
-  this incremental instead of snapshot-rewrite; semantics identical.
+* **delete propagation** — tombstones join the batch's upserts as
+  ``(id, seq, deleted=true)`` rows in the same latest-wins window
+  (``merge_batch``), so a delete loses to a later re-create.
+* **merge** — merge-on-read (``Warehouse._merge_conformed``): a
+  batch appends only its winning rows to the buckets they hash to
+  and records the stored versions they supersede — and the rows its
+  tombstones delete — in the manifest's dead set, which every reader
+  drops. The batch's rows pass through ``merge_batch``'s one shuffle,
+  by bucket; a bucket already at ``MAX_FILES_PER_BUCKET`` files is
+  folded: its live rows join that shuffle and it is rewritten as one
+  file. Idempotent by seq: a replayed batch's rows lose to the stored
+  ones and change nothing.
 * **checkpoint** — the reference's log is only ever read at its last
   row, so each table keeps one JSON file holding its latest seq,
   replaced atomically (temp file, fsync, rename). No Spark job writes

@@ -24,6 +24,9 @@ import json
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from couchwarehouse_spark.operators.upsert import DELETED_COL
+from couchwarehouse_spark.sinks.follow import Mirror
+
 ES_META_COLUMNS = ("_id", "_rev", "_attachments")
 
 
@@ -176,40 +179,68 @@ def push_bulk_http(
 
 def es_index_name(doc_type: str, base: str = "couchwarehouse") -> str:
     """ONE naming rule for warehouse→ES egress: split-mode types get
-    per-type indices, the default type the base index. Shared by the
-    one-shot CLI egress and the monitor-mode follower so the two can
-    never write the same pipeline into different indices."""
+    per-type indices, the default type the base index."""
     return f"{base}_{doc_type}" if doc_type != "_default" else base
 
 
-def es_follower(url: str, index: str = "couchwarehouse"):
+# Holds one position doc per mirrored index, keyed by its name (the
+# reference's checkpoint doc, lib/elasticsearch.js:52-76).
+ES_META_INDEX = "couchwarehousemeta"
+
+
+def _es_request(method: str, url: str, body: dict | None = None):
+    """One JSON request over stdlib urllib: the parsed reply, or None
+    on a 404 (an absent doc or index)."""
+    import urllib.error
+    import urllib.request
+
+    data = None if body is None else json.dumps(body).encode()
+    req = urllib.request.Request(url, data, {"Content-Type": "application/json"}, method=method)
+    try:
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            return json.load(resp)
+    except urllib.error.HTTPError as err:
+        if err.code != 404:
+            raise
+        return None
+
+
+class _ESMirror(Mirror):
+    def __init__(self, url: str, index: str):
+        self.url = url.rstrip("/")
+        self.index = index
+
+    def _meta_url(self, doc_type: str) -> str:
+        return f"{self.url}/{ES_META_INDEX}/_doc/{es_index_name(doc_type, base=self.index)}"
+
+    def read_position(self, wh, doc_type: str) -> tuple | None:
+        src = (_es_request("GET", self._meta_url(doc_type)) or {}).get("_source", {})
+        return (src["version"], src["ts"]) if "version" in src else None
+
+    def write(self, wh, doc_type, rows, position, seq, reset) -> None:
+        index = es_index_name(doc_type, base=self.index)
+        if reset:
+            _es_request("DELETE", f"{self.url}/{index}")
+            _es_request("PUT", f"{self.url}/{index}")
+        if rows is not None:
+            push_bulk_http(rows, index, self.url, deleted_col=DELETED_COL)
+        doc = {"seq": seq, "version": position[0], "ts": position[1]}
+        _es_request("PUT", self._meta_url(doc_type), doc)
+
+
+def es_follower(url: str, index: str = "couchwarehouse") -> Mirror:
     """Warehouse follower: mirror every merged micro-batch into a live
     ES index over ``_bulk`` — the reference's elasticsearch
-    databaseType in monitor mode (lib/elasticsearch.js:16-44, one
-    index/delete action per change). Same seq-ordered live+tombstone
-    union the sqlite follower (and the merge itself) applies, so a
-    stale tombstone never deletes a newer document.
+    databaseType (lib/elasticsearch.js:16-44, one index/delete action
+    per change) — and PUT the table version it mirrors to a
+    ``couchwarehousemeta`` doc after each batch (see ``sinks.follow``).
 
     Usage::
 
         wh = Warehouse(spark, dir, "mydb",
                        followers=[es_follower("http://localhost:9200")])
     """
-    from couchwarehouse_spark.operators.upsert import SEQ_COL, latest_wins
-
-    def follow(wh, doc_type: str, conformed: DataFrame, tombstones: DataFrame) -> None:
-        live = conformed.withColumn("_cw_del", F.lit(False))
-        tomb = tombstones.select("id", SEQ_COL).withColumn("_cw_del", F.lit(True))
-        merged = live.unionByName(tomb, allowMissingColumns=True)
-        winners = latest_wins(merged, key="id", seq=SEQ_COL)
-        push_bulk_http(
-            winners.drop(SEQ_COL),
-            es_index_name(doc_type, base=index),
-            url,
-            deleted_col="_cw_del",
-        )
-
-    return follow
+    return _ESMirror(url, index)
 
 
 def full_text_search(df: DataFrame, text_col: str, query: str) -> DataFrame:

@@ -1,9 +1,9 @@
-"""JDBC sink/source adapters (S18) — the PostgreSQL/MySQL parity lane.
+"""JDBC sink adapter (S18) — the PostgreSQL/MySQL parity lane.
 
 The reference ships whole PG/MySQL drivers (reference
 lib/postgresql.js, lib/mysql.js) whose job is DDL + upsert + delete;
-in Spark the same parity is ``df.write.jdbc`` / ``spark.read.jdbc``
-(the BASELINE-sanctioned approach). These adapters only assemble
+in Spark the same parity is ``df.write.jdbc`` (the
+BASELINE-sanctioned approach). The adapter only assembles
 options; connectivity needs a JDBC driver jar on the classpath and a
 live database — neither exists in this container, so tests validate
 option assembly and the conformed-write contract against the parquet
@@ -19,7 +19,7 @@ automated here.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from couchwarehouse_spark.operators.document import LOGICAL_TO_SPARK
 
@@ -54,29 +54,3 @@ def write_jdbc(
         writer = writer.option("createTableColumnTypes", jdbc_column_types(schema))
     writer.jdbc(url, table, properties=props)
 
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    **props: str,
-) -> DataFrame:
-    """Read a JDBC table (S18). At scale ALWAYS pass the partition
-    bounds — without them the whole table arrives through one
-    connection on one task."""
-    reader = spark.read
-    if partition_column is not None:
-        return reader.jdbc(
-            url,
-            table,
-            column=partition_column,
-            lowerBound=lower_bound or 0,
-            upperBound=upper_bound or 1_000_000,
-            numPartitions=num_partitions,
-            properties=props,
-        )
-    return reader.jdbc(url, table, properties=props)

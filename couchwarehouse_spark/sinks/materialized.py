@@ -15,10 +15,12 @@ reader always sees a complete snapshot and a crashed refresh leaves
 the previous MV intact — the same commit discipline as the table's
 manifests, at aggregate (tiny) scale.
 
-If the MV ever lags the table by more than one version (follower
-detached, crash between table commit and MV write), the next refresh
-detects the gap and falls back to ONE full recompute — correctness
-never depends on an unbroken incremental chain.
+If the MV ever lags the table by a version that changed rows (follower
+detached, crash between table commit and MV write, an out-of-band
+delete/update/restore), the next refresh detects the gap and falls
+back to ONE full recompute — correctness never depends on an unbroken
+incremental chain. Versions that leave rows unchanged
+(``Warehouse.ROWS_UNCHANGED_OPS``) keep the chain intact.
 """
 
 from __future__ import annotations
@@ -47,16 +49,6 @@ def _mv_versions(path: str) -> list[int]:
     return sorted(out)
 
 
-def _readable(wh, table_path: str, version: int) -> set[int]:
-    """Versions whose manifest still loads (vacuum may have dropped
-    the MV's base)."""
-    try:
-        wh._load_manifest(table_path, version)
-        return {version}
-    except (ValueError, OSError):
-        return set()
-
-
 def read_mv(wh, name: str, doc_type: str = "_default") -> DataFrame:
     """The materialized aggregate's current snapshot (group_col,
     mv_sum, mv_count)."""
@@ -76,12 +68,7 @@ def sum_count_mv_follower(name: str, group_col: str, value_col: str):
     applied.
     """
 
-    def follower(wh, doc_type, conformed: DataFrame, tombstones: DataFrame):
-        path = wh._table_path(doc_type)
-        table_versions = wh._list_versions(path)
-        if not table_versions:
-            return
-        cur = table_versions[-1]
+    def follower(wh, doc_type, conformed: DataFrame, tombstones: DataFrame, cur: int, seq):
         mv_path = _mv_dir(wh, doc_type, name)
         mv_versions = _mv_versions(mv_path)
 
@@ -91,39 +78,12 @@ def sum_count_mv_follower(name: str, group_col: str, value_col: str):
                 F.count("*").alias("mv_count"),
             )
 
-        def content_changed_outside_batch(lo: int, hi: int) -> bool:
-            # Versions strictly between the MV base and the current
-            # merge must ALL be content-neutral ('compact' re-clusters
-            # bytes only). A missed 'merge' (follower detached for a
-            # batch) or an out-of-band 'restore'/'delete_where'/
-            # 'update_where' changed rows
-            # this batch's keys don't cover, so the retraction math no
-            # longer balances — recompute.
-            for v in table_versions:
-                if lo < v < hi:
-                    try:
-                        m = wh._load_manifest(path, v)
-                    except (ValueError, OSError):
-                        return True
-                    if m.get("op") != "compact":
-                        return True
-            return False
-
         prev = mv_versions[-1] if mv_versions else None
-        if (
-            prev is None
-            or prev not in table_versions
-            or prev >= cur
-            or content_changed_outside_batch(prev, cur)
-        ):
-            # Bootstrap, or the incremental chain broke (missed
-            # batches / vacuumed base version / an out-of-band restore):
-            # ONE full recompute.
-            out = agg_of(wh.table(doc_type=doc_type))
-        elif prev not in _readable(wh, path, prev):
-            # The MV's base table version was vacuumed out from under
-            # us (aggressive retention): time travel for the
-            # retraction read would fail — recompute instead.
+        if prev is None or not wh.rows_unchanged(doc_type, prev, cur - 1):
+            # Bootstrap, or a broken chain — a missed merge, a vacuumed
+            # base version (no time travel for the retraction read), or
+            # an out-of-band delete/update/restore of rows this batch's
+            # keys don't cover: ONE full recompute.
             out = agg_of(wh.table(doc_type=doc_type))
         else:
             prev_mv = wh.spark.read.parquet(os.path.join(mv_path, f"v{prev}"))
@@ -146,7 +106,7 @@ def sum_count_mv_follower(name: str, group_col: str, value_col: str):
                 F.col("mv_count").alias("_old_n"),
             )
             new_c = agg_of(
-                wh.table(doc_type=doc_type).join(keys, "id", "left_semi")
+                wh.table(version=cur, doc_type=doc_type).join(keys, "id", "left_semi")
             ).select(
                 group_col,
                 F.col("mv_sum").alias("_new_sum"),

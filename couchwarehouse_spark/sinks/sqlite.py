@@ -28,6 +28,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from couchwarehouse_spark.operators.upsert import DELETED_COL
+from couchwarehouse_spark.sinks.follow import Mirror
+
 CHECKPOINT_TABLE = "couchwarehouse_checkpoints"
 
 LOGICAL_TO_SQLITE = {
@@ -86,6 +89,11 @@ class SQLiteSink:
             f'CREATE TABLE IF NOT EXISTS "{CHECKPOINT_TABLE}" '
             "(tablename TEXT, seq TEXT, timestamp INTEGER DEFAULT (strftime('%s','now')))"
         )
+        # A follower's position (sinks.follow), added to older files.
+        have = {r[1] for r in self.con.execute(f'PRAGMA table_info("{CHECKPOINT_TABLE}")')}
+        for col, sql_type in (("version", "INTEGER"), ("version_ts", "REAL")):
+            if col not in have:
+                self.con.execute(f'ALTER TABLE "{CHECKPOINT_TABLE}" ADD COLUMN {col} {sql_type}')
         self.con.commit()
 
     # -- DDL (R10) ----------------------------------------------------
@@ -132,21 +140,34 @@ class SQLiteSink:
         return n
 
     # -- checkpoints (R14, lib/sqlite.js:138-170) ---------------------
-    def write_checkpoint(self, tablename: str, seq: str) -> None:
+    def write_checkpoint(
+        self, tablename: str, seq: str | None, position: tuple | None = None
+    ) -> None:
+        """Append a checkpoint row: the feed's ``seq`` token and, for a
+        follower, the (version, ts) of the table version it mirrors."""
+        version, ts = position or (None, None)
         with self.con:
             self.con.execute(
-                f'INSERT INTO "{CHECKPOINT_TABLE}" (tablename, seq) VALUES (?, ?)',
-                (tablename, str(seq)),
+                f'INSERT INTO "{CHECKPOINT_TABLE}" (tablename, seq, version, version_ts) '
+                "VALUES (?, ?, ?, ?)",
+                (tablename, None if seq is None else str(seq), version, ts),
             )
 
-    def read_checkpoint(self, tablename: str) -> str | None:
-        cur = self.con.execute(
-            f'SELECT seq FROM "{CHECKPOINT_TABLE}" WHERE tablename = ? '
-            "ORDER BY rowid DESC LIMIT 1",
+    def _latest_checkpoint(self, tablename: str) -> tuple | None:
+        return self.con.execute(
+            f'SELECT seq, version, version_ts FROM "{CHECKPOINT_TABLE}" '
+            "WHERE tablename = ? ORDER BY rowid DESC LIMIT 1",
             (tablename,),
-        )
-        row = cur.fetchone()
+        ).fetchone()
+
+    def read_checkpoint(self, tablename: str) -> str | None:
+        row = self._latest_checkpoint(tablename)
         return row[0] if row else None
+
+    def read_position(self, tablename: str) -> tuple | None:
+        """(version, ts) recorded by the newest checkpoint row, or None."""
+        row = self._latest_checkpoint(tablename)
+        return (row[1], row[2]) if row and row[1] is not None else None
 
     def query(self, sql: str, params: tuple = ()) -> list[tuple]:
         return list(self.con.execute(sql, params))
@@ -155,15 +176,35 @@ class SQLiteSink:
         self.con.close()
 
 
-def sqlite_follower(path: str):
+class _SQLiteMirror(Mirror):
+    def __init__(self, path: str):
+        self.path = path
+
+    def read_position(self, wh, doc_type: str) -> tuple | None:
+        sink = SQLiteSink(self.path)
+        try:
+            return sink.read_position(wh.table_name(doc_type))
+        finally:
+            sink.close()
+
+    def write(self, wh, doc_type, rows, position, seq, reset) -> None:
+        schema = {"id": "string", **wh.schemas[doc_type]}
+        table = wh.table_name(doc_type)
+        sink = SQLiteSink(self.path)
+        try:
+            sink.create_table(table, schema, reset=reset)
+            if rows is not None:
+                sink.insert_bulk(table, rows, schema, deleted_col=DELETED_COL)
+            sink.write_checkpoint(table, seq, position)
+        finally:
+            sink.close()
+
+
+def sqlite_follower(path: str) -> Mirror:
     """Warehouse follower: mirror every merged micro-batch into a
-    SQLite file — the reference's continuous CouchDB→SQLite sync
-    (per-batch insertBulk, lib/sqlite.js:60-110), driven by the SAME
-    conformed frame the warehouse merge applied. Latest-wins within
-    the batch is applied before REPLACE so an in-batch amendment
-    cannot be overwritten by its older version arriving later in the
-    iterator; cross-batch replays are idempotent because REPLACE and
-    DELETE are.
+    SQLite file (the reference's per-batch insertBulk, lib/sqlite.js:
+    60-110), recording the table version it mirrors in each batch's
+    ``couchwarehouse_checkpoints`` row (see ``sinks.follow``).
 
     Usage::
 
@@ -171,29 +212,4 @@ def sqlite_follower(path: str):
                        followers=[sqlite_follower("./mydb.sqlite")])
         wh.spool(feed)          # or monitor_warehouse(...) — streaming
     """
-    from pyspark.sql import functions as F
-
-    from couchwarehouse_spark.operators.upsert import SEQ_COL, latest_wins
-
-    def follow(wh, doc_type: str, conformed: DataFrame, tombstones: DataFrame) -> None:
-        schema = {"id": "string", **wh.schemas[doc_type]}
-        table = wh.table_name(doc_type)
-        sink = SQLiteSink(path)
-        try:
-            sink.create_table(table, schema)
-            # Same seq-ordered union the merge applies: a delete-then-
-            # recreate within one batch resolves to the recreate, and a
-            # stale tombstone can never kill a newer live row.
-            live = conformed.withColumn("_cw_del", F.lit(False))
-            tomb = tombstones.select("id", SEQ_COL).withColumn(
-                "_cw_del", F.lit(True)
-            )
-            merged = live.unionByName(tomb, allowMissingColumns=True)
-            winners = latest_wins(merged, key="id", seq=SEQ_COL)
-            sink.insert_bulk(
-                table, winners.drop(SEQ_COL), schema, deleted_col="_cw_del"
-            )
-        finally:
-            sink.close()
-
-    return follow
+    return _SQLiteMirror(path)

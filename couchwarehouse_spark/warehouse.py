@@ -196,11 +196,13 @@ class Warehouse:
         # buckets for a 1 TB table ⇒ ~1 GB rewrites).
         self.n_buckets = n_buckets
         # Sink followers: callables (wh, doc_type, conformed_batch,
-        # tombstones) invoked per merged micro-batch with the SAME
-        # conformed frame the merge applied — the reference's per-batch
-        # insertBulk fan-out to secondary targets (lib/sqlite.js:60,
-        # lib/elasticsearch.js:16). See sinks.sqlite.sqlite_follower.
+        # tombstones, version, seq) invoked per merged micro-batch with
+        # the SAME conformed frame the merge applied, the version it
+        # committed and the feed batch's seq token (``_batch_seq``,
+        # None outside a feed batch) — the reference's per-batch
+        # insertBulk fan-out (lib/sqlite.js:60, lib/elasticsearch.js:16).
         self.followers: list[Callable] = list(followers or [])
+        self._batch_seq: str | None = None
         # Retention policy for continuous ingest: every merged batch
         # commits a manifest version, so an unattended monitor would
         # accumulate manifests + superseded files without bound.
@@ -387,6 +389,7 @@ class Warehouse:
             # Fan out to every DOC-TYPE table — but never to clone()
             # branches, whose lineage is frozen at clone time.
             types |= set(self.schemas.keys()) - self.clone_types
+        self._batch_seq = last_seq
         try:
             for doc_type in sorted(types):
                 self._merge_type(live, tombstones, doc_type)
@@ -402,6 +405,7 @@ class Warehouse:
                     self.vacuum(doc_type, retain_versions=self.auto_vacuum)
             self._save_schemas()
         finally:
+            self._batch_seq = None
             env.unpersist()
         return last_seq
 
@@ -838,6 +842,25 @@ class Warehouse:
                 shutil.rmtree(full, ignore_errors=True)
         return deleted
 
+    # Ops that commit a version without changing the table's rows: they
+    # re-cluster bytes or record statistics only.
+    ROWS_UNCHANGED_OPS = frozenset({"compact", "zorder", "rebucket", "analyze"})
+
+    def rows_unchanged(self, doc_type: str, lo: int, hi: int) -> bool:
+        """True when table version ``hi`` holds exactly the rows of
+        version ``lo`` (0: before the first commit): ``lo <= hi``, both
+        are retained, and every version after ``lo`` was committed by
+        one of ``ROWS_UNCHANGED_OPS``."""
+        path = self._table_path(doc_type)
+        for v in range(max(lo, 1), hi + 1):
+            try:
+                op = self._load_manifest(path, v)["op"]
+            except (ValueError, OSError):
+                return False
+            if v > lo and op not in self.ROWS_UNCHANGED_OPS:
+                return False
+        return lo <= hi
+
     def history(self, doc_type: str = DEFAULT_TYPE) -> DataFrame:
         """The table's commit log (Delta's DESCRIBE HISTORY): one row
         per retained version with op, timestamp, file count and the
@@ -913,7 +936,9 @@ class Warehouse:
             # the default merge_retries=0 the conflict stays LOUD.
             for attempt in range(self.merge_retries + 1):
                 try:
-                    n_live, n_deleted = self._merge_conformed(conformed, tombstones, doc_type)
+                    n_live, n_deleted, version = self._merge_conformed(
+                        conformed, tombstones, doc_type
+                    )
                     break
                 except ConcurrentCommitError:
                     if attempt == self.merge_retries:
@@ -922,7 +947,7 @@ class Warehouse:
             # (still persisted), so secondary targets can never drift
             # from the warehouse's own semantics.
             for follower in self.followers:
-                follower(self, doc_type, conformed, tombstones)
+                follower(self, doc_type, conformed, tombstones, version, self._batch_seq)
         finally:
             conformed.unpersist(blocking=False)
         self.register_view(doc_type)
@@ -1117,11 +1142,11 @@ class Warehouse:
 
     def _merge_conformed(
         self, conformed: DataFrame, tombstones: DataFrame, doc_type: str
-    ) -> tuple[int, int]:
+    ) -> tuple[int, int, int]:
         """Merge-on-read upsert of one conformed batch and its
         tombstones, committed as ONE new manifest version; returns
         (the batch's live rows, the tombstones that deleted a stored
-        row).
+        row, the committed version).
 
         1. The batch's (id, seq, deleted, bucket) keys are collected —
            one job, no shuffle — and the driver keeps each id's latest.
@@ -1216,7 +1241,7 @@ class Warehouse:
         # id filters then prune at row-group granularity. The unadvanced
         # checkpoint replays a batch whose commit never landed —
         # idempotent by seq (step 3).
-        self._commit_rewrite(
+        version = self._commit_rewrite(
             path,
             manifest,
             "merge",
@@ -1227,7 +1252,7 @@ class Warehouse:
             n_buckets=n_cur,
             metrics=dict(zip(self.MERGE_METRICS, (n_rows, n_superseded, len(fold)))),
         )
-        return keys[DELETED_COL].count(False), n_applied
+        return keys[DELETED_COL].count(False), n_applied, version
 
     def _stored_seqs(self, path: str, manifest: dict, rows: list, dead: set[str]) -> dict:
         """Batch id → the seq of its live stored version, for the batch

@@ -111,17 +111,63 @@ class FakeES:
     def __init__(self):
         self.bodies: list[str] = []
         self.lock = threading.Lock()
+        # Position docs by path, and each index's reset point: the
+        # number of _bulk bodies received when it was last deleted.
+        self.docs: dict[str, dict] = {}
+        self.resets: dict[str, int] = {}
 
-    def actions(self) -> list[dict]:
+    def actions(self, since: int = 0) -> list[dict]:
         out = []
         with self.lock:
-            for body in self.bodies:
+            for body in self.bodies[since:]:
                 out.extend(json.loads(l) for l in body.splitlines() if l.strip())
         return out
+
+    def live_ids(self, index: str) -> set[str]:
+        """The ids the index holds: its _bulk actions replayed in order
+        since it was last deleted."""
+        acts = self.actions(self.resets.get(index, 0))
+        ids: set[str] = set()
+        for a in acts:
+            if "index" in a and a["index"]["_index"] == index:
+                ids.add(a["index"]["_id"])
+            elif "delete" in a and a["delete"]["_index"] == index:
+                ids.discard(a["delete"]["_id"])
+        return ids
 
 
 def _serve_es(fake: FakeES):
     class Handler(BaseHTTPRequestHandler):
+        def _reply(self, code: int, obj: dict) -> None:
+            reply = json.dumps(obj).encode()
+            self.send_response(code)
+            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Length", str(len(reply)))
+            self.end_headers()
+            self.wfile.write(reply)
+
+        def do_GET(self):
+            with fake.lock:
+                doc = fake.docs.get(self.path)
+            if doc is None:
+                self._reply(404, {"found": False})
+            else:
+                self._reply(200, {"found": True, "_source": doc})
+
+        def do_PUT(self):
+            # A position doc (/index/_doc/id) or an index creation (/index).
+            n = int(self.headers.get("Content-Length", 0))
+            body = self.rfile.read(n).decode()
+            if "/_doc/" in self.path:
+                with fake.lock:
+                    fake.docs[self.path] = json.loads(body)
+            self._reply(200, {"acknowledged": True})
+
+        def do_DELETE(self):
+            with fake.lock:
+                fake.resets[self.path.strip("/")] = len(fake.bodies)
+            self._reply(200, {"acknowledged": True})
+
         def do_POST(self):
             assert urllib.parse.urlparse(self.path).path == "/_bulk"
             assert self.headers["Content-Type"] == "application/x-ndjson"
