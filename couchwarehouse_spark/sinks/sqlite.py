@@ -90,18 +90,29 @@ class SQLiteSink:
             "(tablename TEXT, seq TEXT, timestamp INTEGER DEFAULT (strftime('%s','now')))"
         )
         # A follower's position (sinks.follow), added to older files.
-        have = {r[1] for r in self.con.execute(f'PRAGMA table_info("{CHECKPOINT_TABLE}")')}
-        for col, sql_type in (("version", "INTEGER"), ("version_ts", "REAL")):
-            if col not in have:
-                self.con.execute(f'ALTER TABLE "{CHECKPOINT_TABLE}" ADD COLUMN {col} {sql_type}')
+        self._add_columns(CHECKPOINT_TABLE, {"version": "INTEGER", "version_ts": "REAL"})
         self.con.commit()
+
+    def _add_columns(self, table: str, columns: Mapping[str, str]) -> None:
+        """``ALTER TABLE … ADD COLUMN`` each of ``columns`` (name → SQL
+        type) that ``table`` lacks."""
+        have = {r[1] for r in self.con.execute(f'PRAGMA table_info("{table}")')}
+        for col, sql_type in columns.items():
+            if col not in have:
+                self.con.execute(f'ALTER TABLE "{table}" ADD COLUMN "{col}" {sql_type}')
 
     # -- DDL (R10) ----------------------------------------------------
     def create_table(
         self, table: str, schema: Mapping[str, str], reset: bool = False
     ) -> None:
+        """Create ``table`` for ``schema``; an existing table gains the
+        columns an evolved schema (``Warehouse(evolve_schema=True)``)
+        added since it was created."""
         for stmt in sqlite_create_table_sql(table, schema, reset=reset):
             self.con.execute(stmt)
+        self._add_columns(
+            table, {c: LOGICAL_TO_SQLITE.get(t, "TEXT") for c, t in schema.items()}
+        )
         self.con.commit()
 
     # -- bulk upsert (reference insertBulk, lib/sqlite.js:60-110) -----
@@ -204,12 +215,15 @@ def sqlite_follower(path: str) -> Mirror:
     """Warehouse follower: mirror every merged micro-batch into a
     SQLite file (the reference's per-batch insertBulk, lib/sqlite.js:
     60-110), recording the table version it mirrors in each batch's
-    ``couchwarehouse_checkpoints`` row (see ``sinks.follow``).
+    ``couchwarehouse_checkpoints`` row (see ``sinks.follow``). The
+    spool and the stream parse a batch the same way, with the
+    warehouse's ``doc_transform`` and ``feed_schema``, so the file
+    holds the same rows whichever lane fed it.
 
     Usage::
 
         wh = Warehouse(spark, dir, "mydb",
                        followers=[sqlite_follower("./mydb.sqlite")])
-        wh.spool(feed)          # or monitor_warehouse(...) — streaming
+        wh.spool(feed)          # or wh.start(feed_dir) — streamed
     """
     return _SQLiteMirror(path)

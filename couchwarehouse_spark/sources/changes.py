@@ -1,17 +1,24 @@
-"""Changes-feed source: batch replay of a CouchDB ``_changes`` feed (R1).
+"""Changes-feed source: the one envelope parse both ingest lanes share (R1).
 
 The reference spools the feed in one long HTTP request and processes
 it in batches (reference index.js:75-140); the wire format is one
 JSON envelope per change — ``{seq, id, changes[{rev}], deleted?,
 doc}`` (reference test/samplechanges.txt:2, FIXTURES.md §D).
 
-Here the feed is a JSON-lines file/directory (a spooled dump or a
-landing zone that a streaming job tails — see streaming.ingest).
-Reading it is one ``spark.read.json`` scan: schema inference unions
-fields across doc types, which is fine because the warehouse's
-frozen-schema conformance (operators.document.conform_frame) is what
-decides each table's columns — exactly the reference's split between
-"whatever arrives" and "what the table stores".
+Here the feed is a JSON-lines file/directory (a spooled dump, or a
+landing zone that a streaming job tails — see streaming.ingest). The
+batch spool (:func:`read_changes_feed`) and every streamed
+micro-batch read the envelope with the one declared
+:data:`ENVELOPE_SCHEMA`, ``doc`` still a JSON string, and hand it to
+the same :func:`parse_changes`, which honours both of the warehouse's
+hooks: the per-doc ``doc_transform`` (the reference runs one
+``'batch'`` handler with it for spool and monitor, index.js:46-49,
+87-105, 147-148) and the declared ``feed_schema``. Schema inference
+over the docs unions fields across doc types, which is fine because
+the warehouse's frozen-schema conformance
+(operators.document.conform_frame) is what decides each table's
+columns — exactly the reference's split between "whatever arrives"
+and "what the table stores".
 """
 
 from __future__ import annotations
@@ -23,18 +30,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from couchwarehouse_spark.operators.document import seq_number_col
+from couchwarehouse_spark.operators.document import extract_seq_number, seq_number_col
 
 DESIGN_DOC_RE = "^_design"
 
-
-def _envelope_ddl(doc_schema: str) -> str:
-    """Full ``_changes`` envelope DDL around a declared doc schema."""
-    return (
-        "seq string, id string, deleted boolean, "
-        "changes array<struct<rev: string>>, "
-        f"doc struct<{doc_schema}>"
-    )
+# Envelope wire format (FIXTURES.md §D; reference test/samplechanges.txt:2).
+# ``doc`` stays a JSON string at the boundary: ``parse_changes`` gives it
+# structure, and a seq token — CouchDB 2.x ``"3-g1AA…"`` or 1.x ``3`` —
+# is always read as a string.
+ENVELOPE_SCHEMA = T.StructType(
+    [
+        T.StructField("seq", T.StringType()),
+        T.StructField("id", T.StringType()),
+        T.StructField("deleted", T.BooleanType()),
+        T.StructField("doc", T.StringType()),
+    ]
+)
 
 
 def infer_json_schema(spark: SparkSession, frame: DataFrame) -> T.StructType:
@@ -50,22 +61,20 @@ def infer_json_schema(spark: SparkSession, frame: DataFrame) -> T.StructType:
     return DataFrame(spark._jsparkSession.read().json(lines), spark).schema
 
 
-def read_changes_feed(
+def parse_changes(
     spark: SparkSession,
-    path: str,
+    env: DataFrame,
     doc_transform: Callable[[dict], dict] | None = None,
     doc_schema: str | None = None,
 ) -> DataFrame:
-    """Read a JSON-lines changes feed into an envelope DataFrame.
-
-    Output columns: the feed's own (``seq``, ``id``, ``deleted``,
-    ``doc`` struct, …) plus ``_cw_seq`` — the numeric prefix of the
-    seq token (R15) used for latest-wins ordering.
+    """Parse an :data:`ENVELOPE_SCHEMA` frame's ``doc`` strings into a
+    struct column and add ``_cw_seq``, the numeric prefix of the seq
+    token (R15) used for latest-wins ordering.
 
     ``doc_transform`` is the reference's per-document transform hook
     (R5, reference index.js:46-49): a ``dict → dict`` Python function
     applied to every ``doc`` before anything else sees it. It runs in
-    an Arrow-batched ``mapInPandas`` over the raw JSON lines — the
+    an Arrow-batched ``mapInPandas`` over the doc strings — the
     documented UDF slow path; prefer the frame-level transform on
     :class:`~couchwarehouse_spark.warehouse.Warehouse` when the
     transform is expressible in columns (the README's example —
@@ -73,63 +82,52 @@ def read_changes_feed(
 
     ``doc_schema`` (strict mode): a DDL string for the transformed
     ``doc`` struct, e.g. ``"_id string, name string"``. When given,
-    the transform lane parses envelopes with ONE ``from_json``
-    projection — no RDD round-trip, no inference scan — the shape to
-    use when the doc type is known (the warehouse's frozen schema can
-    supply it). When omitted, the lane infers the full-union schema
-    from the transformed lines with :func:`infer_json_schema` (one
-    extra scan that runs the transform a second time), then parses
-    them with that schema.
+    the docs are parsed with ONE ``from_json`` projection and no Spark
+    job. When omitted, the schema is the union
+    :func:`infer_json_schema` infers over every doc of ``env`` — one
+    job, which runs the transform once more — so a field carried by
+    any doc becomes a struct field (first-doc-only inference would
+    null it out, and the latest-wins merge would then overwrite stored
+    values).
     """
-    if doc_transform is None:
-        if doc_schema is not None:
-            # Strict mode, no-transform lane: a declared doc schema
-            # skips the JSON inference scan entirely — one read of the
-            # feed instead of two. At 100 TB feeds the inference pass
-            # is a full extra scan; production spools should always
-            # declare the envelope.
-            env = spark.read.schema(_envelope_ddl(doc_schema)).json(path)
-        else:
-            env = spark.read.json(path)
-    else:
+    if doc_transform is not None:
         import pandas as pd
-
-        lines = spark.read.text(path)
 
         def _tx(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
             for pdf in batches:
-                out = []
-                for line in pdf["value"]:
-                    if not line.strip():
-                        continue
-                    envelope = json.loads(line)
-                    if envelope.get("doc") is not None:
-                        envelope["doc"] = doc_transform(envelope["doc"])
-                    out.append(json.dumps(envelope))
-                yield pd.DataFrame({"value": out})
+                pdf["doc"] = [
+                    None if d is None else json.dumps(doc_transform(json.loads(d)))
+                    for d in pdf["doc"]
+                ]
+                yield pdf
 
-        transformed = lines.mapInPandas(_tx, "value string")
-        schema = (
-            _envelope_ddl(doc_schema)
-            if doc_schema is not None
-            else infer_json_schema(spark, transformed)
+        env = env.mapInPandas(_tx, env.schema)
+    if doc_schema is None:
+        doc_schema = infer_json_schema(
+            spark, env.select(F.coalesce(F.col("doc"), F.lit("{}")).alias("value"))
         )
-        env = transformed.select(F.from_json("value", schema).alias("e")).select("e.*")
+    return env.withColumn("doc", F.from_json("doc", doc_schema)).withColumn(
+        "_cw_seq", seq_number_col("seq")
+    )
 
-    # Null-fill any missing envelope column — an EMPTY feed (a
-    # maintenance-only CLI run, a fully caught-up monitor poll) infers
-    # no columns at all, and a tombstone-only page lacks ``doc``; both
-    # must flow through as zero/partial envelopes, not crash on an
-    # unresolved ``seq``.
-    if "seq" not in env.columns:
-        env = env.withColumn("seq", F.lit(None).cast("string"))
-    if "id" not in env.columns:
-        env = env.withColumn("id", F.lit(None).cast("string"))
-    if "deleted" not in env.columns:
-        env = env.withColumn("deleted", F.lit(None).cast("boolean"))
-    if "doc" not in env.columns:  # tombstone-only feed page
-        env = env.withColumn("doc", F.lit(None).cast("struct<_id: string>"))
-    return env.withColumn("_cw_seq", seq_number_col("seq"))
+
+def read_changes_feed(
+    spark: SparkSession,
+    path: str,
+    doc_transform: Callable[[dict], dict] | None = None,
+    doc_schema: str | None = None,
+    since: str | None = None,
+) -> DataFrame:
+    """Read a JSON-lines changes feed into a parsed envelope DataFrame
+    (``seq``, ``id``, ``deleted``, ``doc`` struct, ``_cw_seq``) — the
+    declared envelope read, then :func:`parse_changes`. ``since``, a
+    seq token, keeps only the later changes, and does so BEFORE the doc
+    parse, so inference sees only the changes a resumed spool applies.
+    """
+    env = spark.read.schema(ENVELOPE_SCHEMA).json(path)
+    if since is not None:
+        env = env.filter(seq_number_col("seq") > extract_seq_number(since))
+    return parse_changes(spark, env, doc_transform, doc_schema)
 
 
 def filter_design_docs(env: DataFrame) -> DataFrame:
@@ -153,13 +151,8 @@ def split_envelopes(env: DataFrame, split_field: str | None) -> DataFrame:
     """
     if split_field is None:
         type_col = F.lit("_default")
-    else:
-        doc_fields = [
-            f.name
-            for f in env.schema["doc"].dataType.fields
-        ] if hasattr(env.schema["doc"].dataType, "fields") else []
-        if split_field in doc_fields:
-            type_col = F.col(f"doc.{split_field}")
-        else:  # batch carries no doc with the split field (e.g. all tombstones)
-            type_col = F.lit(None).cast("string")
+    elif split_field in env.schema["doc"].dataType.fieldNames():
+        type_col = F.col(f"doc.{split_field}")
+    else:  # batch carries no doc with the split field (e.g. all tombstones)
+        type_col = F.lit(None).cast("string")
     return env.withColumn("_cw_type", type_col)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from couchwarehouse_spark.operators.document import extract_seq_number, seq_number_col
+from couchwarehouse_spark.sources.changes import ENVELOPE_SCHEMA
 
 
 class IngestProgress(StreamingQueryListener):
@@ -51,8 +52,6 @@ def feed_position(spark: SparkSession, feed_dir: str) -> int:
     """Max sequence number currently in the landing zone — the
     reference's ``since=now&limit=1`` probe (index.js:218-229) sizing
     the progress bar."""
-    from couchwarehouse_spark.streaming.ingest import ENVELOPE_SCHEMA
-
     head = (
         spark.read.schema(ENVELOPE_SCHEMA)
         .json(feed_dir)

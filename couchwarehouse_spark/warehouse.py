@@ -10,8 +10,8 @@ Spark-first shape: the whole batch path is declarative DataFrame ops
 (one json scan → filter → flatten projection → window dedup → write);
 the only Python-per-row code is the optional per-doc transform hook,
 and schema freezing collects exactly ONE row per doc type. For
-continuous sync the same ``_process_batch`` runs under Structured
-Streaming ``foreachBatch`` (streaming.ingest), which is the
+continuous sync the same envelope parse and ``_process_batch`` run
+under Structured Streaming ``foreachBatch`` (streaming.ingest), the
 micro-batch analog of the reference's 'batch' event loop
 (reference index.js:105-125).
 
@@ -228,11 +228,11 @@ class Warehouse:
         # should never silently mask a protocol violation.
         self.merge_retries = merge_retries
         # Strict-mode feed contract: a DDL string for the doc struct
-        # (e.g. "_id string, total double"). When set, every spool
-        # parses the feed with ONE schema-declared read — no JSON
-        # inference scan (at production feed sizes inference is a
-        # full extra pass over the feed). None = infer (the
-        # reference's schemaless posture).
+        # (e.g. "_id string, total double"). When set, every spool and
+        # every streamed micro-batch parses its docs with it — no JSON
+        # inference job (at production feed sizes inference is a full
+        # extra pass over the docs). None = infer (the reference's
+        # schemaless posture).
         self.feed_schema = feed_schema
         self.schemas: dict[str, dict[str, str]] = {}
         # Tables created by clone(): branches, not doc types — the
@@ -328,18 +328,16 @@ class Warehouse:
 
         Resumes from the last checkpoint unless the store is fresh
         (reference index.js:240-243); returns the new last-seq token.
+        The feed is parsed as a streamed micro-batch is
+        (``sources.changes.parse_changes``), with both hooks.
         """
         env = read_changes_feed(
             self.spark,
             feed_path,
             doc_transform=self.doc_transform,
             doc_schema=self.feed_schema,
+            since=self.checkpoints.read(self.db_name),
         )
-        since = self.checkpoints.read(self.db_name)
-        if since is not None:
-            from couchwarehouse_spark.operators.document import extract_seq_number
-
-            env = env.filter(F.col(SEQ_COL) > extract_seq_number(since))
         last = self._process_batch(env)
         if last is not None:
             self.checkpoints.write(self.db_name, last)

@@ -256,3 +256,35 @@ def test_mv_stays_incremental_across_analyze(spark, tmp_path, monkeypatch):
     assert set(mv) == set(full)
     for k, (n, total) in full.items():
         assert mv[k][0] == n and abs(mv[k][1] - total) < 1e-6
+
+
+def test_sqlite_follower_adds_evolved_columns(spark, tmp_path, monkeypatch):
+    """Under ``evolve_schema`` a batch that adds a column is applied to
+    the sqlite file in place — the table gains the column — with no
+    full export."""
+    docs = _docs(4, 81)
+    out = str(tmp_path / "out.sqlite")
+    wh = Warehouse(spark, str(tmp_path / "wh"), "fevo", evolve_schema=True,
+                   followers=[sqlite_follower(out)])
+    wh.spool(write_feed(str(tmp_path / "f1"), [envelope(i + 1, d) for i, d in enumerate(docs[:3])]))
+    resets = []
+    write = type(wh.followers[0]).write
+
+    def spy(self, wh, doc_type, rows, position, seq, reset):
+        resets.append(reset)
+        return write(self, wh, doc_type, rows, position, seq, reset)
+
+    monkeypatch.setattr(type(wh.followers[0]), "write", spy)
+    wh.spool(write_feed(str(tmp_path / "f2"), [envelope(4, dict(docs[3], newcol="nc"))]))
+    assert resets == [False]
+    assert "newcol" in wh.schemas["_default"]
+    table = wh.table()
+    con = sqlite3.connect(out)
+    try:
+        quoted = ", ".join(f'"{c}"' for c in table.columns)
+        got = con.execute(f'SELECT {quoted} FROM "fevo"').fetchall()
+    finally:
+        con.close()
+    assert len(got) == 4
+    as_sqlite = [tuple(int(v) if isinstance(v, bool) else v for v in r) for r in table.collect()]
+    assert sorted(as_sqlite) == sorted(got)

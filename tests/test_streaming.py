@@ -102,7 +102,8 @@ def test_infer_json_schema_equals_file_read(spark, tmp_path):
 
 def test_parse_docs_submits_one_job(spark, tmp_path):
     """A micro-batch's doc parse submits one Spark job: the schema
-    inference over the batch's docs."""
+    inference over the batch's docs — and none with a declared doc
+    schema."""
     from couchwarehouse_spark.streaming.ingest import ENVELOPE_SCHEMA, _parse_docs
 
     from .fixtures import jobs_run_by
@@ -122,6 +123,16 @@ def test_parse_docs_submits_one_job(spark, tmp_path):
     ]
     assert [(r["id"], r["doc"], r["_cw_seq"]) for r in rows if r["deleted"]] == [
         ("order00002", None, 7)
+    ]
+
+    declared, n_jobs = jobs_run_by(
+        spark, "parse-docs-declared",
+        lambda: _parse_docs(spark, batch, doc_schema="_id string, total double"),
+    )
+    assert n_jobs == 0
+    assert declared.schema["doc"].dataType.fieldNames() == ["_id", "total"]
+    assert sorted(r["doc"]["_id"] for r in declared.collect() if not r["deleted"]) == [
+        f"order{i:05d}" for i in range(6)
     ]
 
 
