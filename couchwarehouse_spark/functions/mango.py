@@ -31,9 +31,14 @@ class MangoError(ValueError):
     bad query JSON, reference index.js:204-214)."""
 
 
+def _flat_name(field: str) -> str:
+    """The flattened column a dotted selector field addresses."""
+    return field.replace(".", "_")
+
+
 def _field_col(field: str, flattened: bool) -> Column:
     if flattened:
-        return F.col(field.replace(".", "_"))
+        return F.col(_flat_name(field))
     # dotted path → nested struct access
     return F.col(field)
 
@@ -189,6 +194,23 @@ def _or_all(parts: list[Column]) -> Column:
     out = parts[0]
     for p in parts[1:]:
         out = out | p
+    return out
+
+
+def selector_fields(selector: Mapping) -> set[str]:
+    """The flattened column names a selector's field conditions read
+    (through ``$and``/``$or``/``$nor``/``$not``), as
+    ``compile_selector`` addresses them: a caller whose frame may lack
+    one can supply it as a NULL column first."""
+    out: set[str] = set()
+    for key, val in selector.items():
+        if key in ("$and", "$or", "$nor"):
+            for sub in val:
+                out |= selector_fields(sub)
+        elif key == "$not":
+            out |= selector_fields(val)
+        elif not key.startswith("$"):
+            out.add(_flat_name(key))
     return out
 
 

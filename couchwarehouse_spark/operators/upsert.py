@@ -7,23 +7,27 @@ The reference loads each changes batch in one transaction with
 (lib/sqlite.js:95-98). Checkpoints append ``(tablename, seq)`` rows
 and resume from the latest one (lib/sqlite.js:138-170).
 
-Spark-first design (no row-at-a-time anything):
+Design (no row-at-a-time anything):
 
-* **latest-wins** — ``row_number() OVER (PARTITION BY id ORDER BY
-  seq DESC) = 1``: one shuffle on the document id (high-cardinality,
-  no skew), each id's state fits trivially in a window partition.
+* **latest-wins** — over a table, ``latest_wins``: ``row_number()
+  OVER (PARTITION BY id ORDER BY seq DESC) = 1``, one shuffle on the
+  document id. Over a micro-batch, which the merge holds on the
+  driver as Arrow columns, ``latest_rows``: one stable sort by (id,
+  seq descending) and a kernel mask of each id's first row.
 * **delete propagation** — tombstones join the batch's upserts as
-  ``(id, seq, deleted=true)`` rows in the same latest-wins window
+  ``(id, seq, deleted=true)`` rows in the same latest-wins
   (``merge_batch``), so a delete loses to a later re-create.
-* **merge** — merge-on-read (``Warehouse._merge_conformed``): a
-  batch appends only its winning rows to the buckets they hash to
-  and records the stored versions they supersede — and the rows its
-  tombstones delete — in the manifest's dead set, which every reader
-  drops. The batch's rows pass through ``merge_batch``'s one shuffle,
-  by bucket; a bucket already at ``MAX_FILES_PER_BUCKET`` files is
-  folded: its live rows join that shuffle and it is rewritten as one
-  file. Idempotent by seq: a replayed batch's rows lose to the stored
-  ones and change nothing.
+* **merge** — merge-on-read (``Warehouse._merge_conformed``): the
+  batch is collected once, and on the driver its winning rows are
+  appended, one id-sorted part file per bucket they hash to, while
+  the stored versions they supersede — and the rows its tombstones
+  delete — are recorded in the manifest's dead set, which every
+  reader drops. No shuffle and no Spark write job. A bucket already
+  at ``MAX_FILES_PER_BUCKET`` files is folded: pyarrow reads its live
+  rows, ``merge_batch`` merges them with the batch's rows for that
+  bucket, and it is rewritten as one file, one bucket at a time.
+  Idempotent by seq: a replayed batch's rows lose to the stored ones
+  and change nothing.
 * **checkpoint** — the reference's log is only ever read at its last
   row, so each table keeps one JSON file holding its latest seq,
   replaced atomically (temp file, fsync, rename). No Spark job writes
@@ -34,10 +38,14 @@ from __future__ import annotations
 
 import json
 import os
+from typing import TYPE_CHECKING
 from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 SEQ_COL = "_cw_seq"  # numeric change-sequence attached by the ingest layer
 
@@ -73,40 +81,72 @@ def apply_deletes(state: DataFrame, tombstone_ids: DataFrame, key: str = "id") -
 DELETED_COL = "_cw_deleted"
 
 
+def latest_rows(
+    table: pa.Table, key: str | list[str] = "id", seq: str = SEQ_COL
+) -> pa.Table:
+    """Each ``key``'s highest-``seq`` row of an Arrow table, sorted by
+    ``key``: one stable sort by (key, seq descending), then a kernel
+    mask of the rows that open a run of equal keys — no per-row Python.
+    A list ``key`` is a composite key, sorted column by column. NULL
+    keys form one run. On a seq tie the row that comes first in
+    ``table`` wins."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = [key] if isinstance(key, str) else list(key)
+    order = table.sort_by([(k, "ascending") for k in keys] + [(seq, "descending")])
+    if order.num_rows < 2:
+        return order
+    opens = None
+    for k in keys:
+        col = order[k]
+        prev, cur = col.slice(0, len(col) - 1), col.slice(1)
+        # NULL-safe "differs": NULL next to a value differs, two NULLs don't.
+        differs = pc.if_else(
+            pc.and_(pc.is_valid(prev), pc.is_valid(cur)),
+            pc.not_equal(prev, cur),
+            pc.xor(pc.is_null(prev), pc.is_null(cur)),
+        )
+        opens = differs if opens is None else pc.or_(opens, differs)
+    return order.filter(pa.chunked_array([[True], *opens.chunks], pa.bool_()))
+
+
 def merge_batch(
-    state: DataFrame | None,
-    upserts: DataFrame,
-    tombstones: DataFrame | None,
-    key: str | list[str] = "id",
+    state: pa.Table | None,
+    upserts: pa.Table,
+    tombstones: pa.Table | None,
+    key: str = "id",
     seq: str = SEQ_COL,
-) -> DataFrame:
-    """One changes-batch merge: seq-ordered upserts and deletes.
+) -> pa.Table:
+    """One changes-batch merge, on Arrow tables: seq-ordered upserts
+    and deletes.
 
     Matches the reference's per-batch semantics (lib/sqlite.js:57-112)
     while staying correct under replay and re-creation: tombstones are
     unioned in as ``(key, seq, deleted=true)`` rows and compete in the
-    same latest-wins window, so a delete at seq 40 loses to a
-    re-created doc at seq 50 (CouchDB emits exactly this sequence when
-    a doc is deleted and recreated). A plain anti-join would delete
-    the recreated row; this doesn't.
+    same latest-wins (``latest_rows``), so a delete at seq 40 loses to
+    a re-created doc at seq 50 (CouchDB emits exactly this sequence
+    when a doc is deleted and recreated). A plain anti-join would
+    delete the recreated row; this doesn't.
 
-    ``state`` rows keep their stored seq, so merging is idempotent:
-    replaying an already-applied batch changes nothing. A list ``key``
-    is a composite key; the rows are hash-partitioned by its leading
-    column, the window's one shuffle, so every row sharing that column
-    (a warehouse bucket) lands in one task.
+    ``state`` rows keep their stored seq and come first, so merging is
+    idempotent: replaying an already-applied batch changes nothing.
+    Columns a side lacks (a tombstone carries only its key and seq)
+    read as NULLs. The result is sorted by ``key``.
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    merged = upserts.withColumn(DELETED_COL, F.lit(False))
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def flagged(t: pa.Table, deleted: bool) -> pa.Table:
+        return t.append_column(DELETED_COL, pa.repeat(deleted, t.num_rows))
+
+    parts = [flagged(upserts, False)]
     if tombstones is not None:
-        tomb = tombstones.select(*keys, seq).withColumn(DELETED_COL, F.lit(True))
-        merged = merged.unionByName(tomb, allowMissingColumns=True)
+        parts.append(flagged(tombstones, True))
     if state is not None:
-        merged = state.withColumn(DELETED_COL, F.lit(False)).unionByName(
-            merged, allowMissingColumns=True
-        )
-    winners = latest_wins(merged.repartition(keys[0]), key=keys, seq=seq)
-    return winners.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
+        parts.insert(0, flagged(state, False))
+    winners = latest_rows(pa.concat_tables(parts, promote_options="default"), key, seq)
+    return winners.filter(pc.invert(winners[DELETED_COL])).drop_columns([DELETED_COL])
 
 
 def snapshot_diff(

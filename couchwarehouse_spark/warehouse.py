@@ -6,14 +6,17 @@ the feed, discover first-doc schemas per type, conform, upsert,
 propagate deletes, checkpoint — then expose everything to SQL
 (reference README.md:14 "your database can be queried using SQL").
 
-Spark-first shape: the whole batch path is declarative DataFrame ops
-(one json scan → filter → flatten projection → window dedup → write);
-the only Python-per-row code is the optional per-doc transform hook,
-and schema freezing collects exactly ONE row per doc type. For
-continuous sync the same envelope parse and ``_process_batch`` run
-under Structured Streaming ``foreachBatch`` (streaming.ingest), the
-micro-batch analog of the reference's 'batch' event loop
-(reference index.js:105-125).
+Shape: the batch path is declarative DataFrame ops (one json scan →
+filter → flatten projection → conform) up to ONE Arrow collect of the
+conformed batch per doc type; the merge's latest-wins, its key read
+and its part-file write then run on the driver with pyarrow kernels —
+the batch is already there, and a Spark shuffle and write job would
+cost more than the rows. The only Python-per-row code is the optional
+per-doc transform hook, and schema freezing collects exactly ONE row
+per doc type. For continuous sync the same envelope parse and
+``_process_batch`` run under Structured Streaming ``foreachBatch``
+(streaming.ingest), the micro-batch analog of the reference's 'batch'
+event loop (reference index.js:105-125).
 
 Scale: tables are hash-bucket-partitioned on ``id`` (parquet
 ``_cw_bucket=K`` directories), and a merge is MERGE-ON-READ: a batch
@@ -34,13 +37,16 @@ a consistent view while version N+1 commits (old files are retained
 until an explicit ``vacuum``). A crash mid-commit leaves orphan part
 files that no manifest references — invisible to readers, reclaimed
 by ``vacuum`` — and the unadvanced checkpoint replays the batch
-idempotently. State never transits the driver; the widest shuffle is
-one hash partition on the document id.
+idempotently. Table state transits the driver only a bucket at a time,
+when a merge folds it, so the bucket count bounds the driver's memory;
+whole-table rewrites (compact, delete_where, update_where, rebucket,
+Z-order) stay Spark reads and writes.
 """
 
 from __future__ import annotations
 
 import functools
+import itertools
 import json
 import os
 import shutil
@@ -50,8 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from couchwarehouse_spark.functions.mango import compile_selector
+from couchwarehouse_spark.functions.mango import compile_selector, selector_fields
 from couchwarehouse_spark.operators.document import (
+    LOGICAL_TO_SPARK,
     conform_frame,
     flatten_frame,
     schema_to_struct,
@@ -61,6 +68,7 @@ from couchwarehouse_spark.operators.upsert import (
     DELETED_COL,
     SEQ_COL,
     CheckpointStore,
+    latest_rows,
     merge_batch,
     write_json_atomic,
 )
@@ -121,15 +129,20 @@ def _dead_key(seq: int, doc_id: str | None) -> str:
 
 _DEAD_KEY_SQL = f"concat_ws(':', cast({SEQ_COL} AS string), id)"
 
+# Numbers the process's scratch dirs (``Warehouse._scratch_dir``); one
+# counter for every Warehouse of the process, so two on one table never
+# draw the same name.
+_SCRATCH_COUNTER = itertools.count()
 
-def _not_in_sql(keys, expr: str = _DEAD_KEY_SQL) -> str:
-    """``<expr> NOT IN (<keys as SQL string literals>)`` — one
+
+def _not_in_sql(keys) -> str:
+    """``<dead key> NOT IN (<keys as SQL string literals>)`` — one
     predicate string, parsed once by ``F.expr``; Catalyst turns the
     literal list into a hash set."""
     lits = ", ".join(
         "'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys
     )
-    return f"{expr} NOT IN ({lits})"
+    return f"{_DEAD_KEY_SQL} NOT IN ({lits})"
 
 
 def _dead_digest(keys) -> str:
@@ -188,6 +201,7 @@ class Warehouse:
         self.transform = transform
         self.doc_transform = doc_transform
         self.selector_col = compile_selector(selector) if selector else None
+        self.selector_fields = selector_fields(selector) if selector else set()
         self.verbose = verbose
         # Bucket count for incremental merge: ids are stable under
         # pmod(xxhash64(id), n_buckets), so a micro-batch touches (and
@@ -248,8 +262,6 @@ class Warehouse:
         if constraint_mode not in ("error", "quarantine"):
             raise ValueError(f"unknown constraint_mode {constraint_mode!r}")
         self.constraint_mode = constraint_mode
-        import itertools as _it
-        self._scratch_counter = _it.count()
         # Per-file max(_cw_seq) footer reads, cached by absolute path —
         # part files are immutable once a manifest references them, so
         # an entry never goes stale; new commits add new file names.
@@ -684,12 +696,11 @@ class Warehouse:
         path: str,
         manifest: dict,
         files: list[str] | None = None,
-        schema: T.StructType | None = None,
     ) -> DataFrame:
         """THE read of committed part files: ``files`` (default: the
-        whole snapshot) of one manifest, with the manifest's schema —
-        or an explicit ``schema`` — plus ``_cw_bucket`` as the
-        partition column under ``basePath``. No footer is sampled for
+        whole snapshot) of one manifest, with the manifest's schema,
+        plus ``_cw_bucket`` as the partition column under
+        ``basePath``. No footer is sampled for
         a schema: under evolution one snapshot mixes files written
         before and after a column was added, and a schema-less read
         would take whichever footer comes first — dropping the column
@@ -698,8 +709,7 @@ class Warehouse:
         committed (Delta's schema-per-log-entry). Rows the manifest's
         dead set names are filtered out, so every reader sees one live
         row per id."""
-        if schema is None:
-            schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
         read_schema = T.StructType(
             list(schema.fields) + [T.StructField("_cw_bucket", T.IntegerType())]
         )
@@ -894,7 +904,18 @@ class Warehouse:
         if self.transform is not None:
             flat = self.transform(flat)
         if self.selector_col is not None:
-            flat = flat.filter(self.selector_col)
+            # A selector field no doc of the batch carries reads as a
+            # typed NULL, as a conformed column does when the doc lacks
+            # it; the helper columns go before conform, so evolution
+            # never adopts them.
+            have = {c.lower() for c in flat.columns}
+            frozen = self.schemas.get(doc_type, {})
+            absent = {
+                f: F.lit(None).cast(LOGICAL_TO_SPARK[frozen.get(f, "string")])
+                for f in self.selector_fields
+                if f.lower() not in have
+            }
+            flat = flat.withColumns(absent).filter(self.selector_col).drop(*absent)
         self._merge_flat(flat, tombstones, doc_type)
 
     def _merge_flat(self, flat: DataFrame, tombstones: DataFrame, doc_type: str) -> int:
@@ -916,11 +937,11 @@ class Warehouse:
             self._evolve_schema(flat, doc_type)
         struct = schema_to_struct(self.schemas[doc_type])
 
-        # Persisted: the merge reads this frame twice (its key collect
-        # and its write), and followers read it again — without a
-        # persist the flatten/transform/selector/conform pipeline
-        # would run once per read. Released in the finally below so a
-        # failed write cannot leak the cached frame for the session.
+        # Persisted: CHECK constraints, the merge's collect and the
+        # followers each read this frame — without a persist the
+        # flatten/transform/selector/conform pipeline would run once
+        # per read. Released in the finally below so a failed merge
+        # cannot leak the cached frame for the session.
         conformed = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
         try:
             conformed = self._enforce_constraints(conformed, doc_type)
@@ -1021,10 +1042,10 @@ class Warehouse:
         self, path: str, tmp: str
     ) -> tuple[dict[int, list[str]], dict[int, dict[str, list | None]]]:
         """Move a scratch write's part files into the live bucket dirs.
-        Spark part-file names embed a per-job UUID, so the moves can
-        never collide with (or overwrite) a committed file; nothing
-        existing is touched, so readers of the current version are
-        unaffected. Each moved file's footer is read ONCE here to
+        Part-file names embed a UUID (Spark's per job, the merge's per
+        file), so the moves can never collide with (or overwrite) a
+        committed file; nothing existing is touched, so readers of the
+        current version are unaffected. Each moved file's footer is read ONCE here to
         record its id min/max in the manifest. Returns (bucket id →
         moved file names, bucket id → per-file id-range stats)."""
         moved: dict[int, list[str]] = {}
@@ -1062,18 +1083,20 @@ class Warehouse:
         ``path + "._tmp"`` name was a concurrency bug: two writers
         racing the same table would rmtree/publish EACH OTHER's
         in-flight part files (the commit protocol only guards the
-        manifest name, not a shared scratch). PID + monotonic counter
-        make collisions impossible within the single-host contract;
-        vacuum reclaims any ._tmp.* a crashed writer leaves behind."""
-        n = next(self._scratch_counter)
-        return f"{path}._tmp.{os.getpid()}.{n}"
+        manifest name, not a shared scratch). PID + the process-wide
+        counter make collisions among live writers impossible within
+        the single-host contract; vacuum reclaims any ._tmp.* a crashed
+        writer leaves behind, and a writer that reuses a crashed one's
+        pid overwrites it (Spark's overwrite mode, or
+        ``_write_bucket_files``'s clear)."""
+        return f"{path}._tmp.{os.getpid()}.{next(_SCRATCH_COUNTER)}"
 
     def _commit_rewrite(
         self,
         path: str,
         manifest: dict | None,
         op: str,
-        frame: DataFrame,
+        frame,
         replaced,
         dead: dict[int, list[str]] | None = None,
         schema_json: str | None = None,
@@ -1081,22 +1104,27 @@ class Warehouse:
         metrics: dict | None = None,
     ) -> int:
         """THE data-writing commit, shared by every op that writes part
-        files: write ``frame`` (which carries ``_cw_bucket``) to a
-        scratch dir, slide the uniquely-named part files into the live
-        bucket dirs (``_publish_tmp``), then COMMIT by atomically
-        publishing the version after ``manifest`` (None: a fresh table,
-        base 0). Each bucket in ``replaced`` holds only the new files
-        and loses its dead set: the op read its live rows (through
-        ``_read_parts``) and rewrote them. Every other bucket keeps its
-        files, stats and dead set — zero I/O, not even a rename — and
-        gains any new files the write produced there (an append) plus
-        the ``dead`` names superseded in it. A bucket left with no file
-        gets no entry. A crash anywhere before the manifest lands
-        leaves the table at ``manifest``'s version: the published files
-        are unreferenced orphans ``vacuum()`` reclaims. Returns the
+        files: write ``frame`` to a scratch dir — a DataFrame carrying
+        ``_cw_bucket`` through Spark's write partitioned by bucket (the
+        table rewrites), or the merge's ``(bucket, Arrow rows)`` pairs
+        on the driver (``_write_bucket_files``) — slide the uniquely-named part
+        files into the live bucket dirs (``_publish_tmp``), then COMMIT
+        by atomically publishing the version after ``manifest`` (None:
+        a fresh table, base 0). Each bucket in ``replaced`` holds only
+        the new files and loses its dead set: the op read its live rows
+        and rewrote them. Every other bucket keeps its files, stats and
+        dead set — zero I/O, not even a rename — and gains any new
+        files the write produced there (an append) plus the ``dead``
+        names superseded in it. A bucket left with no file gets no
+        entry. A crash anywhere before the manifest lands leaves the
+        table at ``manifest``'s version: the published files are
+        unreferenced orphans ``vacuum()`` reclaims. Returns the
         committed version."""
         tmp = self._scratch_dir(path)
-        frame.write.mode("overwrite").partitionBy("_cw_bucket").parquet(tmp)
+        if isinstance(frame, DataFrame):
+            frame.write.mode("overwrite").partitionBy("_cw_bucket").parquet(tmp)
+        else:
+            self._write_bucket_files(tmp, frame)
         moved, moved_stats = self._publish_tmp(path, tmp)
         base = manifest or {"version": 0, "buckets": {}, "stats": {}}
         replaced = {int(b) for b in replaced}
@@ -1146,28 +1174,40 @@ class Warehouse:
         (the batch's live rows, the tombstones that deleted a stored
         row, the committed version).
 
-        1. The batch's (id, seq, deleted, bucket) keys are collected —
-           one job, no shuffle — and the driver keeps each id's latest.
-        2. On the driver, with no Spark job: the keys give each
-           bucket's id range, which picks the files that could hold a
-           batch id (``_prune_bucket_files``); pyarrow reads only their
-           ``id`` and ``_cw_seq`` columns, keeps the rows whose id is in
-           the batch and drops the dead ones (``_stored_seqs``).
+        1. The batch is collected once — one job, no shuffle: every
+           conformed column, the seq, ``_cw_bucket`` (``_bucket_of``)
+           and a deleted flag, with the tombstones unioned in, as an
+           Arrow table typed by the frozen schema. The rest runs on the
+           driver with no Spark job; ``latest_rows`` keeps each id's
+           latest row, sorted by (bucket, id) — the merge's one sort.
+        2. Those rows give each bucket's id range, which picks the
+           files that could hold a batch id (``_prune_bucket_files``);
+           pyarrow reads only their ``id`` and ``_cw_seq`` columns,
+           keeps the rows whose id is in the batch and drops the dead
+           ones (``_stored_seqs``).
         3. An id whose latest batch seq is ≤ its stored seq (or whose
            latest batch row is itself a dead version) is a replay
            loser: its batch rows are dropped, so they neither write nor
            mark anything. Otherwise the stored version joins the dead
            set, and the row is appended unless it is a tombstone.
         4. A bucket that gets an appended row while already holding
-           ``MAX_FILES_PER_BUCKET`` files is folded: its live rows join
-           the merge as ``state``, and its dead set is dropped.
-        5. ``merge_batch`` keeps each (bucket, id)'s latest row with one
-           shuffle, by bucket, and one ``_commit_rewrite`` writes one new
-           file per written bucket; every other file is carried by
-           reference, and the manifest gets the new dead names and the
+           ``MAX_FILES_PER_BUCKET`` files is folded: its live rows,
+           read with pyarrow under the current frozen schema, are
+           merged with the bucket's batch rows by ``merge_batch``, and
+           its dead set is dropped.
+        5. ``_commit_rewrite`` writes one id-sorted file per written
+           bucket on the driver, a bucket at a time (a folded bucket's
+           rows are read, merged and written before the next bucket's),
+           publishes them, carries every other file by reference and
+           commits the manifest with the new dead names and the
            ``MERGE_METRICS``.
 
         A replayed batch loses every row, so it changes no row."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         path = self._table_path(doc_type)
         manifest = self._load_manifest(path)
         # Hash with the CURRENT VERSION's bucket count — after a
@@ -1176,31 +1216,45 @@ class Warehouse:
         # wrong buckets and write files no reader looks for.
         n_cur = self._manifest_buckets_n(manifest)
         bucket = self._bucket_of("id", n_cur)
-        # Seq is stored as a long: merge_into stamps an int literal, and
-        # an appended file must read under the table's declared schema.
-        seq = F.col(SEQ_COL).cast("long")
-        upserts = conformed.withColumns({SEQ_COL: seq, "_cw_bucket": bucket})
-        tombs = tombstones.select("id", seq.alias(SEQ_COL), bucket.alias("_cw_bucket"))
-        keys = (
-            upserts.select("id", SEQ_COL, F.lit(False).alias(DELETED_COL), "_cw_bucket")
-            .unionByName(tombs.withColumn(DELETED_COL, F.lit(True)))
-            .toArrow()
-            .to_pydict()
+        # The stored layout: the CURRENT frozen schema + seq, as a long
+        # (merge_into stamps an int literal). A fold reads older files
+        # under it, so a column this batch just evolved reads as NULL.
+        stored = T.StructType(
+            list(schema_to_struct(self.schemas[doc_type]).fields)
+            + [T.StructField(SEQ_COL, T.LongType())]
         )
-        latest: dict = {}
-        for row in zip(keys["id"], keys[SEQ_COL], keys[DELETED_COL], keys["_cw_bucket"]):
-            if row[0] not in latest or row[1] > latest[row[0]][1]:
-                latest[row[0]] = row
+        file_schema = to_arrow_schema(stored)
+        batch_schema = file_schema.append(pa.field("_cw_bucket", pa.int32())).append(
+            pa.field(DELETED_COL, pa.bool_())
+        )
+        seq = F.col(SEQ_COL).cast("long")
+        tombs = tombstones.select(
+            "id", seq.alias(SEQ_COL), bucket.alias("_cw_bucket"), F.lit(True).alias(DELETED_COL)
+        )
+        batch = (
+            conformed.withColumns({SEQ_COL: seq, "_cw_bucket": bucket, DELETED_COL: F.lit(False)})
+            .unionByName(tombs, allowMissingColumns=True)
+            .toArrow()
+            .select(batch_schema.names)
+            .cast(batch_schema)
+        )
+        # One sort owns the (bucket, id) order: the winners come out
+        # grouped by bucket and id-sorted inside each, as the part files
+        # are written.
+        latest = latest_rows(batch, ["_cw_bucket", "id"])
         dead = {k for ks in self._dead(manifest or {}).values() for k in ks}
-        stored = self._stored_seqs(path, manifest, list(latest.values()), dead) if manifest else {}
-        losers: list[str] = []
+        stored_seqs = self._stored_seqs(path, manifest, latest, dead) if manifest else {}
+        won: list[bool] = []
         new_dead: dict[int, list[str]] = {}
         appended: set[int] = set()
         n_rows = n_superseded = n_applied = 0
-        for doc_id, seq, deleted, b in latest.values():
-            old = stored.get(doc_id)
-            if (old is not None and seq <= old) or _dead_key(seq, doc_id) in dead:
-                losers.append(doc_id)
+        for doc_id, doc_seq, deleted, b in zip(
+            *(latest[c].to_pylist() for c in ("id", SEQ_COL, DELETED_COL, "_cw_bucket"))
+        ):
+            old = stored_seqs.get(doc_id)
+            lost = (old is not None and doc_seq <= old) or _dead_key(doc_seq, doc_id) in dead
+            won.append(not lost)
+            if lost:
                 continue
             if old is not None:
                 new_dead.setdefault(b, []).append(_dead_key(old, doc_id))
@@ -1209,82 +1263,131 @@ class Warehouse:
             if not deleted:
                 n_rows += 1
                 appended.add(b)
-        if losers:
-            # Every batch row of a losing id loses (its latest does), and
-            # the filter never reaches a folded bucket's stored rows.
-            won = F.expr(f"coalesce({_not_in_sql(losers, 'id')}, true)")
-            upserts, tombs = upserts.filter(won), tombs.filter(won)
+        latest = latest.filter(pa.array(won, pa.bool_()))
         files = (manifest or {"buckets": {}})["buckets"]
         fold = sorted(
             b for b in appended if len(files.get(str(b), [])) >= self.MAX_FILES_PER_BUCKET
         )
-        state = None
-        if fold:
-            # The CURRENT frozen schema + seq, not the manifest's: a
-            # batch that just evolved the schema reads the new column
-            # as NULL from every older file.
-            state = self._read_parts(
-                path,
-                manifest,
-                [os.path.join(path, f"_cw_bucket={b}", fn) for b in fold for fn in files[str(b)]],
-                schema=T.StructType(
-                    list(schema_to_struct(self.schemas[doc_type]).fields)
-                    + [T.StructField(SEQ_COL, T.LongType())]
-                ),
-            )
-            for b in fold:
-                new_dead.pop(b, None)
-        frame = merge_batch(state, upserts, tombs, key=["_cw_bucket", "id"])
-        # Rows id-sorted inside each file: the parquet reader's pushed
-        # id filters then prune at row-group granularity. The unadvanced
-        # checkpoint replays a batch whose commit never landed —
-        # idempotent by seq (step 3).
+        for b in fold:
+            new_dead.pop(b, None)
+
+        def written_buckets():
+            # One bucket at a time, so the driver holds the batch and at
+            # most one folded bucket's live rows: a bucket's winning
+            # upserts as they are, or, when it folds, merged with its
+            # stored rows (which its tombstones can delete).
+            ids = latest["_cw_bucket"].to_numpy()
+            cuts = [0, *(np.flatnonzero(np.diff(ids)) + 1), len(ids)] if len(ids) else []
+            for lo, hi in zip(cuts, cuts[1:]):
+                b = int(ids[lo])
+                if b not in appended:
+                    continue  # tombstones only: nothing to write
+                part = latest.slice(lo, hi - lo).drop_columns(["_cw_bucket"])
+                is_tomb = part[DELETED_COL]
+                rows = part.filter(pc.invert(is_tomb)).drop_columns([DELETED_COL])
+                if b in fold:
+                    state = self._read_live_rows(
+                        [os.path.join(path, f"_cw_bucket={b}", fn) for fn in files[str(b)]],
+                        file_schema,
+                        dead,
+                    )
+                    rows = merge_batch(state, rows, part.filter(is_tomb).drop_columns([DELETED_COL]))
+                yield b, rows
+
+        # The unadvanced checkpoint replays a batch whose commit never
+        # landed — idempotent by seq (step 3).
         version = self._commit_rewrite(
             path,
             manifest,
             "merge",
-            frame.sortWithinPartitions("_cw_bucket", "id"),
+            written_buckets(),
             fold,
             dead=new_dead,
-            schema_json=frame.drop("_cw_bucket").schema.json(),
+            schema_json=stored.json(),
             n_buckets=n_cur,
             metrics=dict(zip(self.MERGE_METRICS, (n_rows, n_superseded, len(fold)))),
         )
-        return keys[DELETED_COL].count(False), n_applied, version
+        return batch[DELETED_COL].combine_chunks().false_count, n_applied, version
 
-    def _stored_seqs(self, path: str, manifest: dict, rows: list, dead: set[str]) -> dict:
-        """Batch id → the seq of its live stored version, for the batch
-        ``rows`` of ``_merge_conformed`` (id, seq, deleted, bucket),
-        read on the driver with no Spark job: only the ``id`` and
-        ``_cw_seq`` columns of the files ``_prune_bucket_files`` keeps,
-        filtered to the batch's ids inside pyarrow, so Python touches
-        only matching rows; versions named in ``dead`` are skipped.
-        State holds one live version per id."""
+    @staticmethod
+    def _write_bucket_files(tmp: str, buckets) -> None:
+        """The merge's part-file write, on the driver: one parquet file
+        per ``(bucket, id-sorted Arrow rows)`` pair of ``buckets``,
+        under ``tmp/_cw_bucket=K/`` — the layout a Spark write
+        partitioned by bucket leaves for ``_publish_tmp``. Each pair is
+        written before the next is drawn, so a lazy ``buckets`` holds
+        one bucket's rows at a time. Each name holds a fresh uuid, so
+        concurrent writers never collide. The footers carry row-group
+        statistics (lookup pruning, ``_parquet_range``, ``fsck``) and no
+        Arrow schema: every reader declares the table's. A ``tmp`` left
+        by a crashed writer whose pid this process reuses is cleared
+        first, so none of its files is published."""
+        import uuid
+
+        import pyarrow.parquet as pq
+
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        for b, rows in buckets:
+            bdir = os.path.join(tmp, f"_cw_bucket={b}")
+            os.makedirs(bdir)
+            pq.write_table(
+                rows,
+                os.path.join(bdir, f"part-{uuid.uuid4().hex}.parquet"),
+                store_schema=False,
+                use_dictionary=False,
+            )
+
+    @staticmethod
+    def _read_live_rows(files: list[str], schema, dead: set[str], filters=None):
+        """THE driver-side read of part files: pyarrow opens ``files``
+        under the declared Arrow ``schema`` (which holds ``id`` and
+        ``_cw_seq``; a column a file lacks reads as typed NULLs, as in
+        ``_read_parts``), applies ``filters`` — row-group statistics
+        skip what cannot match — and drops the row versions ``dead``
+        names. One chunk: createDataFrame drops the rows that follow
+        two or more empty record batches (pyarrow yields one per file
+        or scan batch that a filter empties)."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        ids: dict[int, list] = {}
-        for doc_id, _, _, b in rows:
-            ids.setdefault(b, []).append(doc_id)
-        ranges = {}
-        for b, bucket_ids in ids.items():
-            present = [i for i in bucket_ids if i is not None]
-            ranges[b] = (min(present), max(present)) if present else (None, None)
+        rows = pq.read_table(files, schema=schema, filters=filters, partitioning=None)
+        if dead and rows.num_rows:
+            # ``_dead_key`` per row: "<seq>:<id>", or "<seq>" for a NULL id.
+            seq = pc.cast(rows[SEQ_COL], pa.string())
+            key = pc.coalesce(pc.binary_join_element_wise(seq, rows["id"], ":"), seq)
+            rows = rows.filter(pc.invert(pc.is_in(key, value_set=pa.array(list(dead), pa.string()))))
+        return rows.combine_chunks()
+
+    def _stored_seqs(self, path: str, manifest: dict, latest, dead: set[str]) -> dict:
+        """Batch id → the seq of its live stored version, for the Arrow
+        table ``latest`` of ``_merge_conformed`` (one row per batch id,
+        with its ``_cw_bucket``), read on the driver with no Spark job:
+        only the ``id`` and ``_cw_seq`` columns of the files
+        ``_prune_bucket_files`` keeps, filtered to the batch's ids
+        inside pyarrow, so Python touches only matching rows; versions
+        named in ``dead`` are skipped. State holds one live version per
+        id."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        ranges = {
+            r["_cw_bucket"]: (r["id_min"], r["id_max"])
+            for r in latest.group_by("_cw_bucket")
+            .aggregate([("id", "min"), ("id", "max")])
+            .to_pylist()
+        }
         read_files, _ = self._prune_bucket_files(path, manifest, ranges)
         if not read_files:
             return {}
-        found = pq.read_table(
+        found = self._read_live_rows(
             read_files,
-            schema=pa.schema([("id", pa.string()), (SEQ_COL, pa.int64())]),
-            filters=pc.field("id").isin([r[0] for r in rows]),
-            partitioning=None,
-        ).to_pydict()
-        return {
-            doc_id: seq
-            for doc_id, seq in zip(found["id"], found[SEQ_COL])
-            if _dead_key(seq, doc_id) not in dead
-        }
+            pa.schema([("id", pa.string()), (SEQ_COL, pa.int64())]),
+            dead,
+            filters=pc.field("id").isin(latest["id"].combine_chunks()),
+        )
+        return dict(zip(found["id"].to_pylist(), found[SEQ_COL].to_pylist()))
 
     def _evolve_schema(self, flat: DataFrame, doc_type: str) -> list[str]:
         """Widen the frozen schema with columns this batch introduces
@@ -2320,8 +2423,6 @@ class Warehouse:
         path = self._table_path(doc_type)
         manifest = self._committed_manifest(path)
         b = self._bucket_of_id(doc_id, self._manifest_buckets_n(manifest))
-        import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
         stored = T.StructType.fromJson(json.loads(manifest["schema"]))
@@ -2332,18 +2433,12 @@ class Warehouse:
             for fn in manifest["buckets"].get(str(b), [])
             if per.get(fn) is None or per[fn][0] <= doc_id <= per[fn][1]
         ]
-        rows = pq.read_table(
+        rows = self._read_live_rows(
             files,
-            schema=to_arrow_schema(stored),
+            to_arrow_schema(stored),
+            set(self._dead(manifest).get(str(b), [])),
             filters=[("id", "=", doc_id)],
-            partitioning=None,
-        )
-        dead = set(self._dead(manifest).get(str(b), []))
-        live = [_dead_key(seq, doc_id) not in dead for seq in rows[SEQ_COL].to_pylist()]
-        # One chunk: createDataFrame drops the rows that follow two or
-        # more empty record batches (pyarrow yields one per file or scan
-        # batch that the id filter empties).
-        rows = rows.filter(pa.array(live, pa.bool_())).drop_columns([SEQ_COL]).combine_chunks()
+        ).drop_columns([SEQ_COL])
         return self.spark.createDataFrame(rows, schema)
 
     def query(

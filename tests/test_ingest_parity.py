@@ -171,12 +171,14 @@ ORDER_FEED_DDL = (
 )
 
 
-@pytest.mark.parametrize("feed_schema, want_jobs", [(None, 5), (ORDER_FEED_DDL, 4)])
+@pytest.mark.parametrize(
+    "feed_schema, want_jobs", [(None, 3), (ORDER_FEED_DDL, 2)], ids=["inferred", "feed_schema"]
+)
 def test_stream_batch_job_count(spark, tmp_path, feed_schema, want_jobs):
     """The stream's batch body on a 1 000-change page against a
-    3 000-doc preload: the doc-schema inference, the batch probe, the
-    merge's key collect and its shuffled write (2 jobs) — and no
-    inference job under a ``feed_schema``."""
+    3 000-doc preload: the doc-schema inference, the batch probe and
+    the merge's batch collect — and no inference job under a
+    ``feed_schema``. The merge writes its part files on the driver."""
     from perfbench import gen
 
     pre = gen.orders_feed(1, 3000)
@@ -192,3 +194,18 @@ def test_stream_batch_job_count(spark, tmp_path, feed_schema, want_jobs):
     assert n_jobs == want_jobs
     assert wh.checkpoints.read("orders") == pages.last_seq
     assert wh.table().count() == len(pages.expected)
+
+
+def test_cold_spool_job_count(spark, tmp_path):
+    """A cold spool of a 3 000-doc feed: the doc-schema inference, the
+    batch probe, the schema freeze and the merge's batch collect."""
+    from perfbench import gen
+
+    pre = gen.orders_feed(1, 3000)
+    pre_path = str(tmp_path / "preload.jsonl")
+    gen.write_lines(pre_path, pre.lines)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "orders")
+    last, n_jobs = jobs_run_by(spark, "cold-spool", lambda: wh.spool(pre_path))
+    assert n_jobs == 4
+    assert last == f"{pre.last_seq}-g"
+    assert wh.table().count() == 3000

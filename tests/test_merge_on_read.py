@@ -278,6 +278,36 @@ def test_crash_between_publish_and_commit(spark, tmp_path, n_pages):
     assert _ages(wh.table()) == want
 
 
+def test_merge_clears_a_stale_scratch_dir_of_a_reused_pid(spark, tmp_path, monkeypatch):
+    """A crashed writer whose pid this process now holds left its
+    scratch dir behind, with a part file in it. The merge that draws
+    that name clears it first: it neither fails nor publishes the
+    stale file."""
+    import itertools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from couchwarehouse_spark import warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"), "stale", n_buckets=1)
+    wh.spool(write_feed(str(tmp_path / "f0"), [envelope(i + 1, _doc(i, 0)) for i in range(4)]))
+    path = wh._table_path("_default")
+    stale = f"{path}._tmp.{os.getpid()}.7"
+    os.makedirs(os.path.join(stale, "_cw_bucket=0"))
+    pq.write_table(
+        pa.table({"id": ["ghost"], "_cw_seq": pa.array([99], pa.int64())}),
+        os.path.join(stale, "_cw_bucket=0", "part-stale.parquet"),
+    )
+    monkeypatch.setattr(warehouse, "_SCRATCH_COUNTER", itertools.count(7))
+
+    wh.spool(write_feed(str(tmp_path / "f1"), [envelope(10, _doc(1, 5))]))
+    assert _ages(wh.table()) == {"person0000": 0, "person0001": 5, "person0002": 0, "person0003": 0}
+    assert not os.path.exists(stale)
+    assert "part-stale.parquet" not in {fn for fns in _manifest(wh)["buckets"].values() for fn in fns}
+    assert not any(f.endswith("part-stale.parquet") for f in _disk_files(path))
+
+
 def test_lookup_finds_an_id_in_the_last_of_several_covering_files(spark, tmp_path):
     """Files with no recorded id range all cover every id, so pyarrow
     yields an empty record batch per file before the one holding the

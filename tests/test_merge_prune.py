@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import random
 
+import pyarrow.parquet as pq
+
 from couchwarehouse_spark.sources.changes import read_changes_feed
 from couchwarehouse_spark.warehouse import Warehouse
 
@@ -101,10 +103,10 @@ def _count_merge_jobs(spark, wh) -> list[int]:
 
 
 def test_merge_into_existing_table_job_count(spark, tmp_path):
-    """A 50-change page merged into a 200-doc table: the key collect,
-    then the write (its shuffle map stage and its result stage) — 3
-    Spark jobs in ``_merge_conformed``; the prune and the stored-seq
-    read run on the driver."""
+    """A 50-change page merged into a 200-doc table: the batch collect
+    is the one Spark job in ``_merge_conformed``; the prune, the
+    stored-seq read, latest-wins and the part-file write run on the
+    driver."""
     rng = random.Random(5)
     wh = Warehouse(spark, str(tmp_path / "wh"), "prunejobs", n_buckets=4)
     wh.spool(write_feed(
@@ -120,15 +122,17 @@ def test_merge_into_existing_table_job_count(spark, tmp_path):
     )
     counts = _count_merge_jobs(spark, wh)
     wh.spool(write_feed(str(tmp_path / "f2"), page))
-    assert counts == [3]
+    assert counts == [1]
     assert wh.table().count() == 200
 
 
-def test_folding_merge_job_count(spark, tmp_path):
+def test_folding_merge_job_count(spark, tmp_path, monkeypatch):
     """Pages of 40 upserts and 5 tombstones into a 4-bucket table: every
     page touches every bucket, so the 4th page folds them. A fold reads
-    the folded buckets' files into the merge's one shuffle, so it
-    submits the same 3 jobs as an append."""
+    the folded buckets' live rows with pyarrow on the driver, so it
+    submits the same 1 job as an append — and it reads, merges and
+    writes them a bucket at a time, so the driver never holds two
+    folded buckets' rows."""
     rng = random.Random(9)
     wh = Warehouse(spark, str(tmp_path / "wh"), "foldjobs", n_buckets=4)
     wh.spool(write_feed(
@@ -136,8 +140,22 @@ def test_folding_merge_job_count(spark, tmp_path):
     ))
     live = set(range(200))
     counts = _count_merge_jobs(spark, wh)
+    events: list[tuple[str, str]] = []
+    read, write = wh._read_live_rows, pq.write_table
+
+    def logged_read(files, schema, dead, filters=None):
+        if filters is None:  # a fold's read of a whole bucket
+            events.extend(("read", os.path.basename(os.path.dirname(f))) for f in files[:1])
+        return read(files, schema, dead, filters)
+
+    def logged_write(rows, where, **kwargs):
+        events.append(("write", os.path.basename(os.path.dirname(where))))
+        return write(rows, where, **kwargs)
+
+    wh._read_live_rows = logged_read
+    monkeypatch.setattr(pq, "write_table", logged_write)
     seq = 1000
-    folds = []
+    folds, page_events = [], []
     for n in range(1, 6):
         envs = []
         for i in rng.sample(range(260), 40):
@@ -150,16 +168,22 @@ def test_folding_merge_job_count(spark, tmp_path):
             live.discard(i)
         wh.spool(write_feed(str(tmp_path / f"f{n}"), envs))
         folds.append(wh._load_manifest(wh._table_path("_default"))["metrics"]["buckets_folded"])
+        page_events.append(events[:])
+        events.clear()
     assert folds == [0, 0, 0, 4, 0]
-    assert counts == [3] * 5
+    assert counts == [1] * 5
+    bucket_dirs = [f"_cw_bucket={b}" for b in range(4)]
+    assert page_events[3] == [(op, d) for d in bucket_dirs for op in ("read", "write")]
+    for n in (0, 1, 2, 4):
+        assert page_events[n] == [("write", d) for d in bucket_dirs]
     assert sorted(r["id"] for r in wh.table().collect()) == sorted(
         f"order{i:05d}" for i in live
     )
 
 
 def test_merge_into_job_count(spark, tmp_path):
-    """merge_into's live-row count comes from the merge's key collect:
-    the whole call submits the merge's 3 jobs and nothing else (the
+    """merge_into's live-row count comes from the merge's batch
+    collect: the whole call submits that 1 job and nothing else (the
     seq probe reads parquet footers)."""
     wh = Warehouse(spark, str(tmp_path / "wh"), "mijobs", n_buckets=4)
     schema = "id string, total double, gone boolean"
@@ -175,7 +199,7 @@ def test_merge_into_job_count(spark, tmp_path):
     )
     n, n_jobs = jobs_run_by(spark, "merge-into", lambda: wh.merge_into(inc, delete_col="gone"))
     assert n == 50  # 40 live rows, 10 deletes of stored ids
-    assert n_jobs == 3
+    assert n_jobs == 1
     assert wh.table().count() == 201  # o203 and n000-n009 are new
 
 

@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 from couchwarehouse_spark.multimodal import (
     FEATURE_DIM,
     _fake_features,
@@ -12,6 +14,7 @@ from couchwarehouse_spark.multimodal import (
 )
 from couchwarehouse_spark.operators.upsert import (
     SEQ_COL,
+    latest_rows,
     latest_wins,
     merge_batch,
 )
@@ -25,27 +28,74 @@ def _frame(spark, rows):
     return spark.createDataFrame(rows, f"id string, v string, {SEQ_COL} long")
 
 
+def _table(rows):
+    return pa.table(
+        {
+            "id": [r[0] for r in rows],
+            "v": [r[1] for r in rows],
+            SEQ_COL: pa.array([r[2] for r in rows], pa.int64()),
+        }
+    )
+
+
 def test_latest_wins_picks_highest_seq(spark):
     df = _frame(spark, [("a", "v1", 1), ("a", "v2", 5), ("a", "v3", 3), ("b", "x", 2)])
     got = {r["id"]: r["v"] for r in latest_wins(df).collect()}
     assert got == {"a": "v2", "b": "x"}
 
 
-def test_merge_batch_upsert_delete_recreate(spark):
-    state = _frame(spark, [("a", "old", 1), ("b", "keep", 2)])
-    upserts = _frame(spark, [("a", "new", 10), ("c", "created", 11)])
-    tombs = spark.createDataFrame([("b", 12), ("c", 5)], f"id string, {SEQ_COL} long")
+def test_merge_batch_upsert_delete_recreate():
+    state = _table([("a", "old", 1), ("b", "keep", 2)])
+    upserts = _table([("a", "new", 10), ("c", "created", 11)])
+    tombs = pa.table({"id": ["b", "c"], SEQ_COL: pa.array([12, 5], pa.int64())})
     # b deleted at seq 12 (after its state seq 2) → gone.
     # c tombstone at seq 5 but re-created at seq 11 → survives.
-    got = {r["id"]: r["v"] for r in merge_batch(state, upserts, tombs).collect()}
+    got = {r["id"]: r["v"] for r in merge_batch(state, upserts, tombs).to_pylist()}
     assert got == {"a": "new", "c": "created"}
 
 
-def test_merge_batch_idempotent_replay(spark):
-    state = _frame(spark, [("a", "v", 5)])
-    replay = _frame(spark, [("a", "v", 5)])  # same batch again
-    got = merge_batch(state, replay, None).collect()
+def test_merge_batch_idempotent_replay():
+    state = _table([("a", "v", 5)])
+    replay = _table([("a", "v", 5)])  # same batch again
+    got = merge_batch(state, replay, None).to_pylist()
     assert len(got) == 1 and got[0]["v"] == "v"
+
+
+def test_latest_rows_matches_a_loop():
+    """The kernel latest-wins against a per-row loop: each id's
+    highest-seq row, NULL ids forming one group, the result id-sorted
+    with the NULL group last."""
+    import random
+
+    rng = random.Random(3)
+    for n in (0, 1, 2, 50, 400):
+        ids = [rng.choice(["a", "b", "c", None, f"x{rng.randrange(30)}"]) for _ in range(n)]
+        seqs = rng.sample(range(10 * n + 1), n)
+        want: dict = {}
+        for i, s in zip(ids, seqs):
+            if i not in want or s > want[i]:
+                want[i] = s
+        got = latest_rows(pa.table({"id": pa.array(ids, pa.string()), SEQ_COL: seqs}))
+        assert got.to_pylist() == [
+            {"id": i, SEQ_COL: want[i]}
+            for i in sorted(want, key=lambda k: (k is None, k or ""))
+        ]
+
+
+def test_latest_rows_composite_key():
+    """A list key keeps each (group, id)'s highest-seq row, sorted by
+    group then id: an id in two groups keeps a row in each."""
+    t = pa.table({
+        "g": [1, 0, 1, 0, 1],
+        "id": ["b", "a", "a", "a", "b"],
+        SEQ_COL: pa.array([4, 1, 2, 3, 5], pa.int64()),
+    })
+    got = latest_rows(t, ["g", "id"]).to_pylist()
+    assert got == [
+        {"g": 0, "id": "a", SEQ_COL: 3},
+        {"g": 1, "id": "a", SEQ_COL: 2},
+        {"g": 1, "id": "b", SEQ_COL: 5},
+    ]
 
 
 def test_multimodal_feature_determinism(spark):

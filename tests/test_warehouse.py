@@ -2137,18 +2137,20 @@ def test_table_reads_and_rewrites_have_one_path():
     """One read path, one rewrite commit — an ``ast`` scan of
     warehouse.py: Spark reads parquet only in ``_read_parts`` (every
     committed table read) and ``quarantined`` (the dead-letter dir,
-    not a table); pyarrow reads part files only on the driver's two
-    key-addressed paths, ``lookup`` and the merge's key read
-    (``_stored_seqs``); only
-    ``_commit_rewrite`` writes a scratch dir and publishes it; and no
-    op commits an 'adopt' manifest."""
+    not a table); pyarrow reads part files only in ``_read_live_rows``,
+    the driver's one read (for ``lookup``, the merge's stored seqs and
+    a fold), and writes them only in ``_write_bucket_files`` (the
+    merge's); only ``_commit_rewrite`` writes a scratch dir and
+    publishes it; and no op commits an 'adopt' manifest."""
     import ast
 
     from couchwarehouse_spark import warehouse
 
     with open(warehouse.__file__) as f:
         tree = ast.parse(f.read())
-    watched = {"self.spark.read", "pq.read_table", "self._scratch_dir", "self._publish_tmp"}
+    watched = {
+        "self.spark.read", "pq.read_table", "pq.write_table", "self._scratch_dir", "self._publish_tmp"
+    }
     used_in: dict[str, set[str]] = {name: set() for name in watched}
     constants: set[str] = set()
 
@@ -2165,7 +2167,8 @@ def test_table_reads_and_rewrites_have_one_path():
 
     visit(tree, "<module>")
     assert used_in["self.spark.read"] == {"_read_parts", "quarantined"}
-    assert used_in["pq.read_table"] == {"lookup", "_stored_seqs"}
+    assert used_in["pq.read_table"] == {"_read_live_rows"}
+    assert used_in["pq.write_table"] == {"_write_bucket_files"}
     assert used_in["self._scratch_dir"] == {"_commit_rewrite"}
     assert used_in["self._publish_tmp"] == {"_commit_rewrite"}
     assert "adopt" not in constants
