@@ -28,6 +28,7 @@ from __future__ import annotations
 import argparse
 import importlib.util
 import json
+import logging
 import os
 import sys
 import threading
@@ -177,6 +178,22 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _log_to_stdout(quiet: bool) -> None:
+    """The package's one logging channel (``couchwarehouse_spark``) on
+    stdout, as the CLI's own lines are, unless ``--quiet``. A handler a
+    previous call attached goes first: it holds that call's stdout."""
+    log = logging.getLogger("couchwarehouse_spark")
+    for h in [h for h in log.handlers if getattr(h, "cli_stdout", False)]:
+        log.removeHandler(h)
+    if quiet:
+        return
+    handler = logging.StreamHandler(sys.stdout)
+    handler.cli_stdout = True
+    handler.setFormatter(logging.Formatter("couchwarehouse: %(message)s"))
+    log.addHandler(handler)
+    log.setLevel(logging.INFO)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
@@ -192,6 +209,8 @@ def main(argv: list[str] | None = None) -> int:
     def say(msg: str, err: bool = False) -> None:
         if not args.quiet:
             print(f"couchwarehouse: {msg}", file=sys.stderr if err else sys.stdout)
+
+    _log_to_stdout(args.quiet)
 
     from couchwarehouse_spark.session import get_spark
     from couchwarehouse_spark.warehouse import Warehouse

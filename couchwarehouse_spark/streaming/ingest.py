@@ -8,16 +8,17 @@ The reference's two modes map directly (reference index.js:75-170):
 * **monitor** (repeated longpolls) → processing-time trigger — keep
   tailing as new feed pages land.
 
-Either way a micro-batch goes through the SAME envelope parse and the
-SAME ``Warehouse._process_batch`` as the batch spool: it is read with
-``sources.changes.ENVELOPE_SCHEMA`` and parsed by
-``sources.changes.parse_changes`` with the warehouse's own
-``doc_transform`` and ``feed_schema`` — ``foreachBatch`` is the
-reference's ``'batch'`` event (reference index.js:105-125) with
-exactly-once bookkeeping from the streaming checkpoint (D2:
-offsets/commits under ``checkpointLocation``; the warehouse's own
-CheckpointStore mirrors the reference's couchwarehouse_checkpoints
-table on top).
+Either way a micro-batch goes through the SAME driver-side
+``Warehouse._process_batch`` as the batch spool: its envelopes, read
+with ``sources.changes.ENVELOPE_SCHEMA`` (``doc`` as JSON text), come
+to the driver in one ``toArrow`` — the micro-batch's one Spark job —
+and are parsed, routed, inferred, flattened, conformed and merged
+there with the warehouse's own ``doc_transform`` and ``feed_schema``.
+``foreachBatch`` is the reference's ``'batch'`` event (reference
+index.js:105-125) with exactly-once bookkeeping from the streaming
+checkpoint (D2: offsets/commits under ``checkpointLocation``; the
+warehouse's own CheckpointStore mirrors the reference's
+couchwarehouse_checkpoints table on top).
 
 The feed source here is a JSON-lines landing directory (what a real
 deployment's HTTP tailer writes page by page).
@@ -25,15 +26,20 @@ deployment's HTTP tailer writes page by page).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from couchwarehouse_spark.sources.changes import ENVELOPE_SCHEMA, parse_changes
+from couchwarehouse_spark.sources.changes import ENVELOPE_ARROW, ENVELOPE_SCHEMA
 from couchwarehouse_spark.warehouse import Warehouse
 
-# The stream's doc parse, resolved by this name at each micro-batch
-# (perfbench/tracing.py wraps it here as the stream's parse layer).
-_parse_docs = parse_changes
+
+def _parse_docs(batch_df: DataFrame) -> pa.Table:
+    """A micro-batch's envelopes on the driver: Spark's JSON reader
+    parses the landed lines in the one ``toArrow`` (perfbench/tracing.py
+    wraps this name as the stream's parse layer). A ``toArrow`` may hand
+    large strings over: the envelope types are cast to."""
+    return batch_df.toArrow().select(ENVELOPE_ARROW.names).cast(ENVELOPE_ARROW)
 
 
 def read_changes_stream(
@@ -53,11 +59,10 @@ def read_changes_stream(
 
 
 def _sync_batch(warehouse: Warehouse, batch_df: DataFrame) -> None:
-    """One micro-batch: parse it with the warehouse's hooks, merge it,
-    and advance the warehouse checkpoint. An empty batch merges
-    nothing and leaves the checkpoint alone."""
-    env = _parse_docs(warehouse.spark, batch_df, warehouse.doc_transform, warehouse.feed_schema)
-    last = warehouse._process_batch(env)
+    """One micro-batch: bring its envelopes to the driver, merge them
+    with the warehouse's hooks, and advance the warehouse checkpoint.
+    An empty batch merges nothing and leaves the checkpoint alone."""
+    last = warehouse._process_batch(_parse_docs(batch_df))
     if last is not None:
         warehouse.checkpoints.write(warehouse.db_name, last)
 

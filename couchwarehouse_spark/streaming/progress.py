@@ -7,13 +7,15 @@ lib/sqlite.js:172-179). Spark-side equivalents:
 
 * ``IngestProgress`` — a ``StreamingQueryListener`` accumulating
   per-batch row counts and emitting the reference's dot-per-batch
-  heartbeat (opt-in print).
+  heartbeat (opt-in, on the ``couchwarehouse_spark`` logger).
 * ``feed_position`` — the probe: max seq currently in the landing
   zone vs the warehouse checkpoint → how far behind the sync is
   (the progress-bar numerator/denominator).
 """
 
 from __future__ import annotations
+
+import logging
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +41,7 @@ class IngestProgress(StreamingQueryListener):
         self.batches += 1
         self.rows += event.progress.numInputRows
         if self.heartbeat:
-            print(".", end="", flush=True)
+            logging.getLogger("couchwarehouse_spark").info(".")
 
     def onQueryIdle(self, event):  # noqa: N802
         pass

@@ -6,17 +6,22 @@ the feed, discover first-doc schemas per type, conform, upsert,
 propagate deletes, checkpoint — then expose everything to SQL
 (reference README.md:14 "your database can be queried using SQL").
 
-Shape: the batch path is declarative DataFrame ops (one json scan →
-filter → flatten projection → conform) up to ONE Arrow collect of the
-conformed batch per doc type; the merge's latest-wins, its key read
-and its part-file write then run on the driver with pyarrow kernels —
-the batch is already there, and a Spark shuffle and write job would
-cost more than the rows. The only Python-per-row code is the optional
-per-doc transform hook, and schema freezing collects exactly ONE row
-per doc type. For continuous sync the same envelope parse and
-``_process_batch`` run under Structured Streaming ``foreachBatch``
-(streaming.ingest), the micro-batch analog of the reference's 'batch'
-event loop (reference index.js:105-125).
+Shape: an ingest page that fits the driver never enters the JVM. The
+batch spool reads its feed's lines in Python; a streamed micro-batch
+makes one ``toArrow`` of its envelopes (streaming.ingest). From there
+both run ``_process_batch`` on the driver: parse each doc (orjson),
+route it to its type, infer each type's doc schema from its own docs
+(Spark's JSON inference rules), freeze or evolve the table schema,
+flatten and conform into an Arrow table typed by the frozen schema
+(operators.document), and merge — latest-wins, key read and part-file
+write with pyarrow kernels. A page with no Spark hook submits no Spark
+job. Spark sees a page only through the hooks that are Spark code (the
+frame-level ``transform``, CHECK constraints, followers), on a
+``createDataFrame`` of the Arrow page, and only when they are set; the
+per-doc ``doc_transform`` is a plain call. For continuous sync the same
+``_process_batch`` runs under Structured Streaming ``foreachBatch``, the
+micro-batch analog of the reference's 'batch' event loop (reference
+index.js:105-125).
 
 Scale: tables are hash-bucket-partitioned on ``id`` (parquet
 ``_cw_bucket=K`` directories), and a merge is MERGE-ON-READ: a batch
@@ -48,22 +53,30 @@ from __future__ import annotations
 import functools
 import itertools
 import json
+import logging
 import os
 import shutil
 from collections.abc import Callable, Mapping
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from couchwarehouse_spark.functions.mango import compile_selector, selector_fields
+from couchwarehouse_spark.functions.mango import compile_arrow_selector
+from couchwarehouse_spark.operators.bucketing import xxhash64, xxhash64_ids
 from couchwarehouse_spark.operators.document import (
-    LOGICAL_TO_SPARK,
-    conform_frame,
-    flatten_frame,
+    logical_of_arrow,
     schema_to_struct,
+    struct_of_spark,
     usable_table_name,
 )
+
+# The ingest lane's flatten and conform, resolved by these names at each
+# batch (perfbench/tracing.py wraps them here as the document layers).
+from couchwarehouse_spark.operators.document import conform_table as conform_frame
+from couchwarehouse_spark.operators.document import flatten_docs as flatten_frame
 from couchwarehouse_spark.operators.upsert import (
     DELETED_COL,
     SEQ_COL,
@@ -73,12 +86,13 @@ from couchwarehouse_spark.operators.upsert import (
     write_json_atomic,
 )
 from couchwarehouse_spark.sources.changes import (
-    filter_design_docs,
+    DEFAULT_TYPE,
+    TOMBSTONE_ARROW,
+    parse_page,
     read_changes_feed,
-    split_envelopes,
 )
 
-DEFAULT_TYPE = "_default"  # reference index.js:52
+log = logging.getLogger("couchwarehouse_spark")
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -129,6 +143,7 @@ def _dead_key(seq: int, doc_id: str | None) -> str:
 
 _DEAD_KEY_SQL = f"concat_ws(':', cast({SEQ_COL} AS string), id)"
 
+
 # Numbers the process's scratch dirs (``Warehouse._scratch_dir``); one
 # counter for every Warehouse of the process, so two on one table never
 # draw the same name.
@@ -154,12 +169,29 @@ def _dead_digest(keys) -> str:
     return hashlib.sha1("\n".join(sorted(keys)).encode()).hexdigest()[:16] if keys else ""
 
 
-def _logical_of(dtype: T.DataType) -> str:
-    if isinstance(dtype, T.BooleanType):
-        return "boolean"
-    if isinstance(dtype, T.NumericType):
-        return "number"
-    return "string"
+@functools.lru_cache(maxsize=16)
+def _declared_struct(ddl: str):
+    """The doc struct a ``feed_schema`` DDL declares, parsed by Spark
+    once per DDL."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    return struct_of_spark(_parse_datatype_string(ddl))
+
+
+def _collect_arrow(df: DataFrame) -> pa.Table:
+    """One ``toArrow`` of ``df`` with the types the driver lane reads:
+    string, numeric and boolean columns as they are, every other column
+    as Spark's string cast of it; large strings as strings."""
+    atomic = (T.StringType, T.NumericType, T.BooleanType, T.NullType)
+    table = df.select(
+        [
+            F.col(f"`{f.name}`") if isinstance(f.dataType, atomic) else F.col(f"`{f.name}`").cast("string").alias(f.name)
+            for f in df.schema.fields
+        ]
+    ).toArrow()
+    return table.cast(
+        pa.schema([f.with_type(pa.string()) if pa.types.is_large_string(f.type) else f for f in table.schema])
+    )
 
 
 class Warehouse:
@@ -171,8 +203,8 @@ class Warehouse:
     applied to each type's flattened frame before schema freezing
     (R5, fast path); ``doc_transform`` = dict→dict per-doc hook (R5,
     reference-exact slow path); ``selector`` = Mango filter compiled
-    to a Catalyst predicate (R4); ``reset`` = drop state and start
-    from seq 0 (R19).
+    evaluated on each type's flattened page (R4); ``reset`` = drop
+    state and start from seq 0 (R19).
     """
 
     def __init__(
@@ -200,8 +232,7 @@ class Warehouse:
         self.split = split
         self.transform = transform
         self.doc_transform = doc_transform
-        self.selector_col = compile_selector(selector) if selector else None
-        self.selector_fields = selector_fields(selector) if selector else set()
+        self.selector_mask = compile_arrow_selector(selector) if selector else None
         self.verbose = verbose
         # Bucket count for incremental merge: ids are stable under
         # pmod(xxhash64(id), n_buckets), so a micro-batch touches (and
@@ -243,9 +274,9 @@ class Warehouse:
         self.merge_retries = merge_retries
         # Strict-mode feed contract: a DDL string for the doc struct
         # (e.g. "_id string, total double"). When set, every spool and
-        # every streamed micro-batch parses its docs with it — no JSON
-        # inference job (at production feed sizes inference is a full
-        # extra pass over the docs). None = infer (the reference's
+        # every streamed micro-batch reads its docs as ``from_json``
+        # with it would — no inference pass over the docs. None = infer
+        # each type's doc schema from its docs (the reference's
         # schemaless posture).
         self.feed_schema = feed_schema
         self.schemas: dict[str, dict[str, str]] = {}
@@ -335,74 +366,49 @@ class Warehouse:
         shutil.rmtree(self.warehouse_dir, ignore_errors=True)
         self.schemas = {}
 
+
     def spool(self, feed_path: str) -> str | None:
         """Batch-replay a spooled changes feed into the warehouse (R1).
 
         Resumes from the last checkpoint unless the store is fresh
         (reference index.js:240-243); returns the new last-seq token.
-        The feed is parsed as a streamed micro-batch is
-        (``sources.changes.parse_changes``), with both hooks.
+        The feed's lines are read on the driver, with no Spark job, and
+        parsed as a streamed micro-batch is (``_process_batch``).
         """
-        env = read_changes_feed(
-            self.spark,
-            feed_path,
-            doc_transform=self.doc_transform,
-            doc_schema=self.feed_schema,
-            since=self.checkpoints.read(self.db_name),
-        )
-        last = self._process_batch(env)
+        last = self._process_batch(read_changes_feed(feed_path, since=self.checkpoints.read(self.db_name)))
         if last is not None:
             self.checkpoints.write(self.db_name, last)
             if self.verbose:
                 self.message()
         return last
 
-    def _process_batch(self, env: DataFrame) -> str | None:
+    def _process_batch(self, env: pa.Table) -> str | None:
         """Conform + merge one envelope batch (the 'batch' event body,
-        reference index.js:105-125). Returns the batch's max seq token."""
-        import pyarrow.compute as pc
-
-        env = filter_design_docs(env)
-        env = split_envelopes(env, self.split)
-        # One JSON parse, many consumers: this batch is read by the
-        # batch probe (max seq, live types, tombstones) and every
-        # per-type merge — without a persist each action re-parses the
-        # feed from disk. Micro-batches are bounded, and persist()
-        # spills to disk, so this holds at scale too.
-        env = env.persist()
-
-        # Tombstones: deletes apply to every type's table — CouchDB
-        # tombstones carry no body, so no type (reference
-        # lib/sqlite.js:95-98 deletes by id in whichever table).
-        deleted = F.col("deleted").isNotNull() & F.col("deleted")
-        is_live = (~deleted | F.col("deleted").isNull()) & F.col("doc").isNotNull()
-        tombstones = env.filter(deleted).select("id", SEQ_COL)
-        live = env.filter(is_live)
-
-        # One narrow collect, not an aggregate (3 jobs): the batch's
-        # max-seq token, its live doc types and whether it deletes
-        # anything are read on the driver from O(batch) small values —
-        # the merge's key collect holds as many.
-        probe = env.select(
-            "seq", SEQ_COL, F.when(is_live, F.col("_cw_type")).alias("type"), deleted.alias("d")
-        ).toArrow()
-        top = pc.max(probe[SEQ_COL])
-        last_seq = (
-            probe.filter(pc.equal(probe[SEQ_COL], top))["seq"][0].as_py() if top.is_valid else None
-        )
-        types = set(pc.unique(probe["type"]).drop_null().to_pylist())
+        reference index.js:105-125) on the driver: ``parse_page`` parses,
+        routes and infers it, each type's docs are flattened, and each
+        type merges its page and the tombstones. The envelopes are
+        released once flattened (a caller that passes them without
+        keeping them frees them before the merges). Returns the batch's
+        max seq token."""
+        declared = None if self.feed_schema is None else _declared_struct(self.feed_schema)
+        page = parse_page(env, self.split, self.doc_transform, declared)
+        del env
+        flats = {t: flatten_frame(page.doc_chunks(t), docs.struct) for t, docs in page.types.items()}
+        tombstones, last_seq = page.tombstones, page.last_seq
+        del page
+        types = set(flats)
         # Tombstones must reach EVERY existing table, including types
         # with no live doc in this batch (a batch of pure deletes) —
         # CouchDB tombstones carry no type (reference lib/sqlite.js:95-98
         # deletes by id wherever the row lives).
-        if pc.any(probe["d"]).as_py():
+        if tombstones.num_rows:
             # Fan out to every DOC-TYPE table — but never to clone()
             # branches, whose lineage is frozen at clone time.
             types |= set(self.schemas.keys()) - self.clone_types
         self._batch_seq = last_seq
         try:
             for doc_type in sorted(types):
-                self._merge_type(live, tombstones, doc_type)
+                self._merge_type(flats.pop(doc_type, None), tombstones, doc_type)
                 if self.auto_vacuum is not None:
                     # Default grace, NOT zero: redundant HA ingestors
                     # (tests/test_multiprocess_race.py) may race this
@@ -416,39 +422,24 @@ class Warehouse:
             self._save_schemas()
         finally:
             self._batch_seq = None
-            env.unpersist()
         return last_seq
 
     def _bucket_of(self, col, n_buckets: int | None = None) -> "F.Column":
-        """THE bucket formula — one definition shared by merge pruning,
-        the writers and ``fsck`` (``_bucket_of_id`` is its driver-side
-        evaluation for point lookups), so they can never drift apart.
+        """THE bucket formula of Spark's rewrites and ``fsck``;
+        ``_bucket_of_id`` and the merge evaluate the same formula on the
+        driver (``operators.bucketing.xxhash64``).
         ``n_buckets`` overrides the warehouse default with a specific
         VERSION's recorded count (manifests are authoritative once a
         table exists — see ``rebucket``)."""
         c = F.col(col) if isinstance(col, str) else col
         return F.pmod(F.xxhash64(c), F.lit(n_buckets or self.n_buckets)).cast("int")
 
-    def _bucket_of_id(self, doc_id: str, n_buckets: int) -> int:
-        """``_bucket_of`` evaluated on the driver for one id, with no
-        Spark plan: ``F.xxhash64`` on a string column is Spark's
-        ``XXH64.hashUTF8String(utf8, 42)``, so calling that same JVM
-        function and taking the non-negative remainder (Python's ``%``
-        is ``pmod`` for a positive divisor) gives the bucket the
-        column formula puts the row in — one hash implementation, not
-        two."""
-        xxh64, utf8 = self._jvm_xxh64
-        return xxh64.hashUTF8String(utf8.fromString(doc_id), 42) % n_buckets
-
-    @functools.cached_property
-    def _jvm_xxh64(self):
-        """(XXH64, UTF8String) JVM class handles, resolved once: each
-        package step of a py4j class path is a gateway round trip."""
-        jvm = self.spark._jvm
-        return (
-            jvm.org.apache.spark.sql.catalyst.expressions.XXH64,
-            jvm.org.apache.spark.unsafe.types.UTF8String,
-        )
+    @staticmethod
+    def _bucket_of_id(doc_id: str | None, n_buckets: int) -> int:
+        """``_bucket_of`` evaluated on the driver for one id:
+        ``xxhash64`` is Spark's hash of a string column, and Python's
+        ``%`` is ``pmod`` for a positive divisor."""
+        return xxhash64(doc_id) % n_buckets
 
     def _manifest_buckets_n(self, manifest: dict | None) -> int:
         """The bucket count a manifest's layout was written with (every
@@ -898,36 +889,33 @@ class Warehouse:
             + ", ".join(f"{k} long" for k in self.MERGE_METRICS),
         )
 
-    def _merge_type(self, live: DataFrame, tombstones: DataFrame, doc_type: str) -> None:
-        sub = live.filter(F.col("_cw_type") == doc_type).select(SEQ_COL, "doc.*")
-        flat = flatten_frame(sub)
-        if self.transform is not None:
-            flat = self.transform(flat)
-        if self.selector_col is not None:
-            # A selector field no doc of the batch carries reads as a
-            # typed NULL, as a conformed column does when the doc lacks
-            # it; the helper columns go before conform, so evolution
-            # never adopts them.
-            have = {c.lower() for c in flat.columns}
-            frozen = self.schemas.get(doc_type, {})
-            absent = {
-                f: F.lit(None).cast(LOGICAL_TO_SPARK[frozen.get(f, "string")])
-                for f in self.selector_fields
-                if f.lower() not in have
-            }
-            flat = flat.withColumns(absent).filter(self.selector_col).drop(*absent)
+    def _merge_type(self, flat: pa.Table | None, tombstones: pa.Table, doc_type: str) -> None:
+        """Merge one type's flattened page and the page's tombstones,
+        after the frame-level ``transform`` (on a DataFrame of the page,
+        only when set) and the selector. A type with no doc in the page
+        (``flat`` None: tombstones fanned out to it) merges an empty
+        page."""
+        if flat is None:
+            flat = pa.table({SEQ_COL: pa.array([], pa.int64())})
+        else:
+            if self.transform is not None:
+                flat = _collect_arrow(self.transform(self.spark.createDataFrame(flat.combine_chunks())))
+            if self.selector_mask is not None:
+                flat = flat.filter(self.selector_mask(flat))
         self._merge_flat(flat, tombstones, doc_type)
 
-    def _merge_flat(self, flat: DataFrame, tombstones: DataFrame, doc_type: str) -> int:
-        """THE merge of one flattened batch (with ``_cw_seq``) and its
-        tombstones, shared by the feed and ``merge_into``: freeze or
-        evolve the schema, conform, enforce CHECK constraints, merge
-        (retrying on a lost commit), feed the followers, register the
-        view. Returns the rows applied: the batch's live rows plus the
-        tombstones that deleted a stored row. A type whose schema is
-        not frozen yet and whose batch has no row (a selector rejected
-        them all) is left alone: its first row that passes freezes it,
-        as the reference's first matching doc does (index.js:55-68)."""
+    def _merge_flat(self, flat: pa.Table, tombstones: pa.Table, doc_type: str) -> int:
+        """THE merge of one flattened Arrow batch (with ``_cw_seq``) and
+        its tombstones (``id``, ``_cw_seq``), shared by the feed and
+        ``merge_into``: freeze or evolve the schema, conform, enforce
+        CHECK constraints, merge (retrying on a lost commit), feed the
+        followers, register the view. Returns the rows applied: the
+        batch's live rows plus the tombstones that deleted a stored row.
+        A type whose schema is not frozen yet and whose batch has no row
+        (a selector rejected them all) is left alone: its first row that
+        passes freezes it, as the reference's first matching doc does
+        (index.js:55-68). Spark sees the batch only for the hooks that
+        are Spark code: CHECK constraints and followers, when set."""
         if doc_type not in self.schemas:
             schema = self._freeze_schema(flat)
             if schema is None:
@@ -935,40 +923,35 @@ class Warehouse:
             self.schemas[doc_type] = schema
         elif self.evolve_schema:
             self._evolve_schema(flat, doc_type)
-        struct = schema_to_struct(self.schemas[doc_type])
-
-        # Persisted: CHECK constraints, the merge's collect and the
-        # followers each read this frame — without a persist the
-        # flatten/transform/selector/conform pipeline would run once
-        # per read. Released in the finally below so a failed merge
-        # cannot leak the cached frame for the session.
-        conformed = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
-        try:
-            conformed = self._enforce_constraints(conformed, doc_type)
-            # Opt-in optimistic-concurrency retry (merge_retries > 0):
-            # a losing HA ingestor re-merges the SAME conformed batch
-            # against the winner's new head — _merge_conformed re-reads
-            # the latest manifest on entry, and latest-wins by seq makes
-            # the replay idempotent, so retrying is exactly Delta's
-            # commit-loop semantics. The loser's first-attempt part
-            # files become unreferenced orphans vacuum() reclaims. With
-            # the default merge_retries=0 the conflict stays LOUD.
-            for attempt in range(self.merge_retries + 1):
-                try:
-                    n_live, n_deleted, version = self._merge_conformed(
-                        conformed, tombstones, doc_type
-                    )
-                    break
-                except ConcurrentCommitError:
-                    if attempt == self.merge_retries:
-                        raise
-            # Followers see the exact conformed frame the merge applied
-            # (still persisted), so secondary targets can never drift
-            # from the warehouse's own semantics.
+        conformed = conform_frame(flat, self.schemas[doc_type], keep=[SEQ_COL])
+        if self.constraints.get(doc_type):
+            frame = self.spark.createDataFrame(conformed.combine_chunks())
+            checked = self._enforce_constraints(frame, doc_type)
+            if checked is not frame:  # quarantine mode diverted rows
+                conformed = _collect_arrow(checked).cast(conformed.schema)
+        # Opt-in optimistic-concurrency retry (merge_retries > 0): a
+        # losing HA ingestor re-merges the SAME conformed batch against
+        # the winner's new head — _merge_conformed re-reads the latest
+        # manifest on entry, and latest-wins by seq makes the replay
+        # idempotent, so retrying is exactly Delta's commit-loop
+        # semantics. The loser's first-attempt part files become
+        # unreferenced orphans vacuum() reclaims. With the default
+        # merge_retries=0 the conflict stays LOUD.
+        for attempt in range(self.merge_retries + 1):
+            try:
+                n_live, n_deleted, version = self._merge_conformed(conformed, tombstones, doc_type)
+                break
+            except ConcurrentCommitError:
+                if attempt == self.merge_retries:
+                    raise
+        if self.followers:
+            # Followers see the exact conformed rows the merge applied,
+            # so secondary targets can never drift from the warehouse's
+            # own semantics.
+            rows = self.spark.createDataFrame(conformed.combine_chunks())
+            tombs = self.spark.createDataFrame(tombstones.combine_chunks())
             for follower in self.followers:
-                follower(self, doc_type, conformed, tombstones, version, self._batch_seq)
-        finally:
-            conformed.unpersist(blocking=False)
+                follower(self, doc_type, rows, tombs, version, self._batch_seq)
         self.register_view(doc_type)
         return n_live + n_deleted
 
@@ -1167,19 +1150,19 @@ class Warehouse:
     MERGE_METRICS = ("rows_appended", "rows_superseded", "buckets_folded")
 
     def _merge_conformed(
-        self, conformed: DataFrame, tombstones: DataFrame, doc_type: str
+        self, conformed: pa.Table, tombstones: pa.Table, doc_type: str
     ) -> tuple[int, int, int]:
         """Merge-on-read upsert of one conformed batch and its
         tombstones, committed as ONE new manifest version; returns
         (the batch's live rows, the tombstones that deleted a stored
         row, the committed version).
 
-        1. The batch is collected once — one job, no shuffle: every
-           conformed column, the seq, ``_cw_bucket`` (``_bucket_of``)
-           and a deleted flag, with the tombstones unioned in, as an
-           Arrow table typed by the frozen schema. The rest runs on the
-           driver with no Spark job; ``latest_rows`` keeps each id's
-           latest row, sorted by (bucket, id) — the merge's one sort.
+        1. The conformed Arrow batch gets ``_cw_bucket`` (``_bucket_of``
+           evaluated on the driver) and a deleted flag, with the
+           tombstones unioned in, typed by the frozen schema. All of the
+           merge runs on the driver with no Spark job; ``latest_rows``
+           keeps each id's latest row, sorted by (bucket, id) — the
+           merge's one sort.
         2. Those rows give each bucket's id range, which picks the
            files that could hold a batch id (``_prune_bucket_files``);
            pyarrow reads only their ``id`` and ``_cw_seq`` columns,
@@ -1204,8 +1187,6 @@ class Warehouse:
 
         A replayed batch loses every row, so it changes no row."""
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
         path = self._table_path(doc_type)
@@ -1215,7 +1196,6 @@ class Warehouse:
         # merge that hashed with the wrong count would look in the
         # wrong buckets and write files no reader looks for.
         n_cur = self._manifest_buckets_n(manifest)
-        bucket = self._bucket_of("id", n_cur)
         # The stored layout: the CURRENT frozen schema + seq, as a long
         # (merge_into stamps an int literal). A fold reads older files
         # under it, so a column this batch just evolved reads as NULL.
@@ -1227,17 +1207,24 @@ class Warehouse:
         batch_schema = file_schema.append(pa.field("_cw_bucket", pa.int32())).append(
             pa.field(DELETED_COL, pa.bool_())
         )
-        seq = F.col(SEQ_COL).cast("long")
-        tombs = tombstones.select(
-            "id", seq.alias(SEQ_COL), bucket.alias("_cw_bucket"), F.lit(True).alias(DELETED_COL)
+        live = conformed.select(file_schema.names).cast(file_schema)
+        tombs = tombstones.select(["id", SEQ_COL]).cast(TOMBSTONE_ARROW)
+        batch = pa.concat_tables(
+            [
+                live.append_column(DELETED_COL, pa.repeat(False, live.num_rows)),
+                pa.table(
+                    {
+                        f.name: tombs[f.name] if f.name in tombs.column_names else pa.nulls(tombs.num_rows, f.type)
+                        for f in file_schema
+                    }
+                ).append_column(DELETED_COL, pa.repeat(True, tombs.num_rows)),
+            ]
         )
-        batch = (
-            conformed.withColumns({SEQ_COL: seq, "_cw_bucket": bucket, DELETED_COL: F.lit(False)})
-            .unionByName(tombs, allowMissingColumns=True)
-            .toArrow()
-            .select(batch_schema.names)
-            .cast(batch_schema)
+        buckets = np.concatenate(
+            [np.zeros(0, np.int64)]
+            + [np.mod(xxhash64_ids(ids.to_pylist()), n_cur) for ids in batch["id"].chunks]
         )
+        batch = batch.add_column(len(file_schema), "_cw_bucket", pa.array(buckets, pa.int32())).cast(batch_schema)
         # One sort owns the (bucket, id) order: the winners come out
         # grouped by bucket and id-sorted inside each, as the part files
         # are written.
@@ -1307,7 +1294,7 @@ class Warehouse:
             n_buckets=n_cur,
             metrics=dict(zip(self.MERGE_METRICS, (n_rows, n_superseded, len(fold)))),
         )
-        return batch[DELETED_COL].combine_chunks().false_count, n_applied, version
+        return live.num_rows, n_applied, version
 
     @staticmethod
     def _write_bucket_files(tmp: str, buckets) -> None:
@@ -1389,44 +1376,47 @@ class Warehouse:
         )
         return dict(zip(found["id"].to_pylist(), found[SEQ_COL].to_pylist()))
 
-    def _evolve_schema(self, flat: DataFrame, doc_type: str) -> list[str]:
+    def _evolve_schema(self, flat: pa.Table, doc_type: str) -> list[str]:
         """Widen the frozen schema with columns this batch introduces
         (``evolve_schema=True`` only — Delta's mergeSchema). New
-        columns APPEND with the logical type their Spark dtype maps
-        to; existing columns are never retyped or dropped, so every
+        columns APPEND with the logical type of their flattened Arrow
+        type; existing columns are never retyped or dropped, so every
         already-written file stays readable and conformance semantics
-        for known columns are unchanged. Returns the added names."""
+        for known columns are unchanged. The batch's columns are its
+        type's own docs' fields, so a type never adopts another type's
+        fields. Returns the added names."""
         schema = self.schemas[doc_type]
         added = []
-        for field in flat.schema.fields:
+        for field in flat.schema:
             if field.name == SEQ_COL or field.name in schema:
                 continue
-            schema[field.name] = _logical_of(field.dataType)
+            schema[field.name] = logical_of_arrow(field.type)
             added.append(field.name)
         return added
 
-    def _freeze_schema(self, flat: DataFrame) -> dict[str, str] | None:
+    @staticmethod
+    def _freeze_schema(flat: pa.Table) -> dict[str, str] | None:
         """First-doc-wins schema freeze (R7; reference index.js:55-68).
 
-        The first (lowest-seq) document of the type defines the
-        column set and logical types; fields it lacks — even ones
-        other docs in the same batch have — never become columns
-        (reference README.md:300-304). Exactly one row is collected;
-        an empty frame freezes nothing (None).
+        The first (lowest-seq; a NULL seq sorts first, as Spark's
+        ascending order puts it) row of the type defines the column set
+        and logical types; fields it lacks — even ones other docs in the
+        same batch have — never become columns (reference
+        README.md:300-304). An empty batch freezes nothing (None).
         """
-        first = flat.orderBy(F.col(SEQ_COL).asc()).limit(1).collect()
-        if not first:
+        if flat.num_rows == 0:
             return None
-        row = first[0].asDict()
-        schema: dict[str, str] = {}
-        for field in flat.schema.fields:
-            name = field.name
-            if name == SEQ_COL:
-                continue
-            if row.get(name) is None:
-                continue  # absent (or null — dropped, see flatten_doc)
-            schema[name] = _logical_of(field.dataType)
-        return schema
+        seq = flat[SEQ_COL]
+        if seq.null_count:
+            first = pc.index(pc.is_null(seq), True).as_py()
+        else:
+            first = pc.index(seq, pc.min(seq)).as_py()
+        row = flat.slice(first, 1)
+        return {
+            f.name: logical_of_arrow(f.type)
+            for f in flat.schema
+            if f.name != SEQ_COL and row[f.name][0].is_valid
+        }
 
     def compact(self, doc_type: str = DEFAULT_TYPE) -> int:
         """Compact fragmented bucket directories (operational kernel).
@@ -1491,7 +1481,8 @@ class Warehouse:
         absent id is a no-op and is NOT counted.
 
         Scale: the seq probe reads per-file footer maxima, with no
-        scan. The merge is the feed's (``_merge_flat``): it writes only
+        scan, and the frame is collected once, as Arrow. The merge is
+        the feed's (``_merge_flat``): it writes only
         the incoming rows and marks the versions they supersede dead,
         retries a lost commit up to ``merge_retries`` times, and counts
         the live rows and matched tombstones from the keys it collects
@@ -1508,20 +1499,17 @@ class Warehouse:
             # Metadata-only seq probe (footer maxima recorded per
             # immutable file) — not a full scan of the seq column.
             base_seq = self._state_max_seq(path, manifest)
+        # ONE collect: freeze, conform and merge are the feed's, on the
+        # driver.
+        batch = _collect_arrow(df.withColumn(SEQ_COL, F.lit(base_seq + 1).cast("long")))
         if delete_col is not None:
-            deleted = F.coalesce(F.col(delete_col), F.lit(False))
-            live = df.filter(~deleted).drop(delete_col)
-            tombstones = (
-                df.filter(deleted)
-                .select("id")
-                .withColumn(SEQ_COL, F.lit(base_seq + 1))
-            )
+            deleted = pc.fill_null(batch[delete_col], False)
+            live = batch.filter(pc.invert(deleted)).drop_columns([delete_col])
+            tombstones = batch.filter(deleted).select(["id", SEQ_COL])
         else:
-            live = df
-            tombstones = self.spark.range(0).select(
-                F.lit("").alias("id"), F.lit(0).cast("long").alias(SEQ_COL)
-            )
-        n = self._merge_flat(live.withColumn(SEQ_COL, F.lit(base_seq + 1)), tombstones, doc_type)
+            live = batch
+            tombstones = TOMBSTONE_ARROW.empty_table()
+        n = self._merge_flat(live, tombstones, doc_type)
         self._save_schemas()
         return n
 
@@ -1748,11 +1736,7 @@ class Warehouse:
             *[c for c in offenders.columns if c.startswith("_cw_")]
         )
         offenders.write.mode("append").parquet(qdir)
-        if self.verbose:
-            print(
-                f"couchwarehouse: quarantined {sum(violated.values())} "
-                f"row(s) of {doc_type} -> {qdir}"
-            )
+        log.info("quarantined %d row(s) of %s -> %s", sum(violated.values()), doc_type, qdir)
         return conformed.filter(all_pass)
 
     def quarantined(self, doc_type: str = DEFAULT_TYPE) -> DataFrame:
@@ -2504,10 +2488,8 @@ class Warehouse:
     def message(self) -> None:
         """R18 — tell the user how to query (reference lib/sqlite.js:172-179)."""
         for doc_type in self.schemas:
-            print(
-                f"couchwarehouse: table {self.table_name(doc_type)!r} ready — "
-                f'query with spark.sql("SELECT * FROM {self.table_name(doc_type)} LIMIT 10")'
-            )
+            name = self.table_name(doc_type)
+            log.info('table %r ready — query with spark.sql("SELECT * FROM %s LIMIT 10")', name, name)
 
 
 def _pid_alive(pid: int) -> bool:

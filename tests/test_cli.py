@@ -44,6 +44,7 @@ def test_cli_spools_and_queries(spark, tmp_path, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "spooled through seq" in out
+    assert "table 'clidb_order' ready" in out  # message(), on the package logger
     assert "8" in out  # the --sql result shows the 8 orders
 
 

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from couchwarehouse_spark.operators.document import (
@@ -129,3 +131,50 @@ def test_seq_number_col(spark):
     df = spark.createDataFrame([("47-1abc2",), ("100-zz",)], "seq string")
     vals = [r[0] for r in df.select(seq_number_col("seq")).collect()]
     assert vals == [47, 100]
+
+
+# -- the driver lane's casts against Spark's own -----------------------------
+
+_EDGE_DOUBLES = [
+    0.1, 100.0, 1e7, 9999999.0, 1e-3, 0.00099999, 2.0**-24, 2.0**-1074, 2.0**60,
+    2.0**53 + 2, 12345678901234567890.0, 1.7976931348623157e308, 123456789.123, -0.0,
+]
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.floats(allow_nan=False, allow_infinity=False), min_size=1, max_size=60))
+def test_double_text_matches_spark_cast(spark, values):
+    """``java_double`` writes a double as Spark's cast to string does
+    (the JVM's ``Double.toString``), digit for digit — powers of two,
+    integers past 2**53 and subnormals included."""
+    import pandas as pd
+
+    from couchwarehouse_spark.operators.document import java_double
+
+    values = values + _EDGE_DOUBLES
+    df = spark.createDataFrame(pd.DataFrame({"d": values}))
+    want = [r[0] for r in df.select(F.col("d").cast("string")).collect()]
+    assert [java_double(v) for v in values] == want
+
+
+_CAST_TEXT = st.text(alphabet=" \t+-.0123456789eEfdDxXpPaAInNtTyYsSlL_", max_size=8)
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(_CAST_TEXT, min_size=1, max_size=60))
+def test_text_casts_match_spark_try_cast(spark, values):
+    """``string_to_double`` and ``string_to_boolean`` give Spark's
+    ``try_cast`` of a string to DOUBLE and BOOLEAN."""
+    import math
+
+    import pandas as pd
+
+    from couchwarehouse_spark.operators.document import string_to_boolean, string_to_double
+
+    values = values + ["1e400", "0x1p3", "1d", " 12 ", "Infinity", "-inf", "nan", "yes", " T "]
+    df = spark.createDataFrame(pd.DataFrame({"s": values}))
+    rows = df.select(F.col("s").try_cast("double"), F.col("s").try_cast("boolean")).collect()
+    for v, (d, b) in zip(values, rows):
+        got = string_to_double(v)
+        assert (got is None and d is None) or (got == d or (math.isnan(got) and math.isnan(d))), v
+        assert string_to_boolean(v) == b, v

@@ -17,6 +17,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+from couchwarehouse_spark.operators.document import extract_seq_number
 from couchwarehouse_spark.sources.changes import read_changes_feed
 from couchwarehouse_spark.sources.http_changes import (
     ChangesHTTPClient,
@@ -218,11 +219,10 @@ def test_landed_pages_feed_the_spark_reader(fake_couch, tmp_path, spark):
     _, url = fake_couch
     landing = str(tmp_path / "feed")
     spool_to_dir(ChangesHTTPClient(url, "mydb", batch_size=7), landing)
-    env = read_changes_feed(spark, landing)
-    rows = env.select("id", "deleted", "_cw_seq").collect()
-    assert len(rows) == 26
-    assert sum(1 for r in rows if r["deleted"]) == 1
-    assert max(r["_cw_seq"] for r in rows) == 26
+    env = read_changes_feed(landing)
+    assert env.num_rows == 26
+    assert env["deleted"].to_pylist().count(True) == 1
+    assert max(extract_seq_number(x) for x in env["seq"].to_pylist()) == 26
 
 
 def test_cli_url_tails_http_into_warehouse(fake_couch, tmp_path, spark, capsys):

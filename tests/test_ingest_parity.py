@@ -1,11 +1,13 @@
-"""The batch spool and the stream share one envelope parse
-(``sources.changes.parse_changes``): the same landing dir gives the
-same warehouse through ``Warehouse.spool`` and ``Warehouse.start``,
-with or without the ``doc_transform`` and ``feed_schema`` hooks.
+"""The batch spool and the stream share one driver-side batch parse
+(``sources.changes.parse_page``): the same landing dir gives the same
+warehouse through ``Warehouse.spool`` and ``Warehouse.start``, with or
+without the ``doc_transform`` and ``feed_schema`` hooks; a spooled page
+submits no Spark job and a streamed one only its ``toArrow``.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import random
 
@@ -172,13 +174,12 @@ ORDER_FEED_DDL = (
 
 
 @pytest.mark.parametrize(
-    "feed_schema, want_jobs", [(None, 3), (ORDER_FEED_DDL, 2)], ids=["inferred", "feed_schema"]
+    "feed_schema, want_jobs", [(None, 1), (ORDER_FEED_DDL, 1)], ids=["inferred", "feed_schema"]
 )
 def test_stream_batch_job_count(spark, tmp_path, feed_schema, want_jobs):
     """The stream's batch body on a 1 000-change page against a
-    3 000-doc preload: the doc-schema inference, the batch probe and
-    the merge's batch collect — and no inference job under a
-    ``feed_schema``. The merge writes its part files on the driver."""
+    3 000-doc preload: the ``toArrow`` of its envelopes, and nothing
+    else — the parse, inference, conform and merge run on the driver."""
     from perfbench import gen
 
     pre = gen.orders_feed(1, 3000)
@@ -190,15 +191,16 @@ def test_stream_batch_job_count(spark, tmp_path, feed_schema, want_jobs):
     wh.spool(pre_path)
 
     batch = spark.read.schema(ENVELOPE_SCHEMA).json(str(tmp_path / "feed"))
-    _, n_jobs = jobs_run_by(spark, f"stream-batch-{want_jobs}", lambda: ingest._sync_batch(wh, batch))
+    _, n_jobs = jobs_run_by(spark, f"stream-batch-{feed_schema is None}", lambda: ingest._sync_batch(wh, batch))
     assert n_jobs == want_jobs
     assert wh.checkpoints.read("orders") == pages.last_seq
     assert wh.table().count() == len(pages.expected)
 
 
 def test_cold_spool_job_count(spark, tmp_path):
-    """A cold spool of a 3 000-doc feed: the doc-schema inference, the
-    batch probe, the schema freeze and the merge's batch collect."""
+    """A cold spool of a 3 000-doc feed submits no Spark job: the lines
+    are read, parsed, inferred, frozen, conformed and merged on the
+    driver."""
     from perfbench import gen
 
     pre = gen.orders_feed(1, 3000)
@@ -206,6 +208,60 @@ def test_cold_spool_job_count(spark, tmp_path):
     gen.write_lines(pre_path, pre.lines)
     wh = Warehouse(spark, str(tmp_path / "wh"), "orders")
     last, n_jobs = jobs_run_by(spark, "cold-spool", lambda: wh.spool(pre_path))
-    assert n_jobs == 4
+    assert n_jobs == 0
     assert last == f"{pre.last_seq}-g"
     assert wh.table().count() == 3000
+
+
+def test_spooled_page_py4j_round_trips(spark, tmp_path, monkeypatch):
+    """A spooled 1 000-change page over a 3 000-doc preload makes at
+    most 100 py4j round trips (1 332 when the page was parsed and
+    merged through Spark): what is left is ``register_view``'s
+    DataFrame for the new version."""
+    from perfbench import gen
+
+    pre = gen.orders_feed(1, 3000)
+    pages = gen.sync_pages(1, pre, 1, 1000)
+    pre_path, page_path = str(tmp_path / "preload.jsonl"), str(tmp_path / "page.jsonl")
+    gen.write_lines(pre_path, pre.lines)
+    gen.write_lines(page_path, pre.lines + pages.pages[0])
+    wh = Warehouse(spark, str(tmp_path / "wh"), "orders")
+    wh.spool(pre_path)
+
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        # Memory commands release JVM objects that Python garbage
+        # collection let go, whichever earlier code made them.
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    gc.collect()
+    monkeypatch.setattr(client, "send_command", counting)
+    assert wh.spool(page_path) == pages.last_seq
+    monkeypatch.undo()
+    assert 0 < len(sent) <= 100, len(sent)
+    assert wh.table().count() == len(pages.expected)
+
+
+@pytest.mark.parametrize("lane", ["spool", "start"])
+def test_split_evolve_adopts_only_the_types_own_fields(spark, tmp_path, lane):
+    """Under ``split`` + ``evolve_schema``, two pages that mix order and
+    product docs leave each table with its own docs' fields only: a
+    type's schema is inferred from that type's docs, not the page's."""
+    feed_dir = str(tmp_path / "feed")
+    rng = random.Random(77)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "evo", split="type", evolve_schema=True)
+    for n in range(2):
+        _write_feed_page(feed_dir, f"p{n}.json", [
+            envelope(2 * n + 1, order_doc(n, rng)),
+            envelope(2 * n + 2, product_doc(n, rng)),
+        ])
+        getattr(wh, lane)(feed_dir)
+    product = {"id", "rev"} | set(product_doc(0, rng)) - {"_id", "_rev"}
+    assert set(wh.schemas["product"]) == product
+    assert set(wh.table("product").columns) == product
+    assert "currency" in wh.schemas["order"] and "price" not in wh.schemas["order"]

@@ -1,12 +1,18 @@
-"""Unit tests for the Mango selector → Column compiler (R4) — full
-operator surface against in-memory frames.
+"""Unit tests for the Mango selector compilers (R4) — full operator
+surface against in-memory frames. Every case runs through both: the
+Catalyst ``Column`` (``compile_selector``) and the Arrow mask
+(``compile_arrow_selector``, the ingest lane's) must keep the same rows.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from couchwarehouse_spark.functions.mango import MangoError, compile_selector
+from couchwarehouse_spark.functions.mango import (
+    MangoError,
+    compile_arrow_selector,
+    compile_selector,
+)
 
 
 @pytest.fixture(scope="module")
@@ -22,8 +28,19 @@ def people(spark):
     )
 
 
-def ids(df, sel, **kw):
-    return sorted(r["id"] for r in df.filter(compile_selector(sel, **kw)).collect())
+def ids(df, sel):
+    """The ids ``sel`` keeps, the same through both compilers."""
+    got = sorted(r["id"] for r in df.filter(compile_selector(sel)).collect())
+    table = df.toArrow()
+    assert sorted(table.filter(compile_arrow_selector(sel)(table))["id"].to_pylist()) == got
+    return got
+
+
+def raises_in_both(sel):
+    with pytest.raises(MangoError):
+        compile_selector(sel)
+    with pytest.raises(MangoError):
+        compile_arrow_selector(sel)
 
 
 def test_implicit_eq_and_and(people):
@@ -67,11 +84,7 @@ def test_logical_operators(people):
 def test_dotted_paths_flattened(people):
     # dotted → flattened column name when flattened=True (default)
     df = people.withColumnRenamed("city", "address_city")
-    got = sorted(
-        r["id"]
-        for r in df.filter(compile_selector({"address.city": "york"})).collect()
-    )
-    assert got == [1, 3]
+    assert ids(df, {"address.city": "york"}) == [1, 3]
 
 
 def test_empty_selector_matches_all(people):
@@ -79,12 +92,9 @@ def test_empty_selector_matches_all(people):
 
 
 def test_errors():
-    with pytest.raises(MangoError):
-        compile_selector({"selector": {"a": 1}})  # wrapper, reference index.js:210-213
-    with pytest.raises(MangoError):
-        compile_selector({"a": {"$bogus": 1}})
-    with pytest.raises(MangoError):
-        compile_selector({"$bogus": [{"a": 1}]})
+    raises_in_both({"selector": {"a": 1}})  # wrapper, reference index.js:210-213
+    raises_in_both({"a": {"$bogus": 1}})
+    raises_in_both({"$bogus": [{"a": 1}]})
 
 
 @pytest.fixture(scope="module")
@@ -102,8 +112,7 @@ def carts(spark):
 
 def test_mod(people):
     assert ids(people, {"age": {"$mod": [20, 0]}}) == [3, 4]
-    with pytest.raises(MangoError):
-        compile_selector({"age": {"$mod": 3}})
+    raises_in_both({"age": {"$mod": 3}})
 
 
 def test_all(carts):
@@ -117,8 +126,7 @@ def test_elem_match_and_all_match(carts):
     # $allMatch: vacuously true on empty arrays (CouchDB semantics)
     assert ids(carts, {"prices": {"$allMatch": {"$lt": 10}}}) == [1, 3, 4]
     assert ids(carts, {"items": {"$elemMatch": {"$beginsWith": "p"}}}) == [1, 3]
-    with pytest.raises(MangoError):
-        compile_selector({"prices": {"$elemMatch": {"$bogus": 1}}})
+    raises_in_both({"prices": {"$elemMatch": {"$bogus": 1}}})
 
 
 def test_elem_match_struct_fields(spark):
@@ -126,13 +134,7 @@ def test_elem_match_struct_fields(spark):
         [(1, [(5.0, "a")]), (2, [(20.0, "b"), (1.0, "a")]), (3, [])],
         "id long, basket array<struct<price: double, sku: string>>",
     )
-    got = sorted(
-        r["id"]
-        for r in orders.filter(
-            compile_selector({"basket": {"$elemMatch": {"price": {"$gt": 10}}}})
-        ).collect()
-    )
-    assert got == [2]
+    assert ids(orders, {"basket": {"$elemMatch": {"price": {"$gt": 10}}}}) == [2]
 
 
 def test_type_and_begins_with(people, carts):
@@ -141,5 +143,21 @@ def test_type_and_begins_with(people, carts):
     assert ids(people, {"age": {"$type": "number"}}) == [1, 2, 3, 4]
     assert ids(carts, {"items": {"$type": "array"}}) == [1, 2, 3, 4]
     assert ids(people, {"name": {"$beginsWith": "c"}}) == [3]
-    with pytest.raises(MangoError):
-        compile_selector({"age": {"$type": "wat"}})
+    raises_in_both({"age": {"$type": "wat"}})
+
+
+def test_array_operators_with_null_elements(spark):
+    """NULL elements and NULL arrays follow SQL's three-valued
+    ``exists``/``forall``/``array_contains`` in both compilers — seen
+    through ``$not``, which keeps the rows whose result is NULL."""
+    df = spark.createDataFrame(
+        [(1, [1.0, None]), (2, [None]), (3, [20.0, None]), (4, []), (5, None), (6, [2.0])],
+        "id long, p array<double>",
+    )
+    for sel in (
+        {"p": {"$elemMatch": {"$gt": 10}}},
+        {"p": {"$allMatch": {"$lt": 10}}},
+        {"p": {"$all": [1.0]}},
+    ):
+        ids(df, sel)
+        ids(df, {"$not": sel})

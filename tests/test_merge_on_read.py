@@ -35,7 +35,7 @@ def _doc(i: int, age: int) -> dict:
 def _apply(wh, tmp_path, name, envs):
     """Merge one page of envelopes as one batch, bypassing the
     checkpoint filter, so replays and stale changes reach the merge."""
-    wh._process_batch(read_changes_feed(wh.spark, write_feed(str(tmp_path / name), envs)))
+    wh._process_batch(read_changes_feed(write_feed(str(tmp_path / name), envs)))
 
 
 def _ref_apply(state: dict, envs: list[dict]) -> None:

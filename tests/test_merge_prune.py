@@ -103,10 +103,10 @@ def _count_merge_jobs(spark, wh) -> list[int]:
 
 
 def test_merge_into_existing_table_job_count(spark, tmp_path):
-    """A 50-change page merged into a 200-doc table: the batch collect
-    is the one Spark job in ``_merge_conformed``; the prune, the
-    stored-seq read, latest-wins and the part-file write run on the
-    driver."""
+    """A 50-change page merged into a 200-doc table submits no Spark
+    job in ``_merge_conformed``: the batch is already Arrow, and the
+    prune, the stored-seq read, latest-wins and the part-file write run
+    on the driver."""
     rng = random.Random(5)
     wh = Warehouse(spark, str(tmp_path / "wh"), "prunejobs", n_buckets=4)
     wh.spool(write_feed(
@@ -122,7 +122,7 @@ def test_merge_into_existing_table_job_count(spark, tmp_path):
     )
     counts = _count_merge_jobs(spark, wh)
     wh.spool(write_feed(str(tmp_path / "f2"), page))
-    assert counts == [1]
+    assert counts == [0]
     assert wh.table().count() == 200
 
 
@@ -130,7 +130,7 @@ def test_folding_merge_job_count(spark, tmp_path, monkeypatch):
     """Pages of 40 upserts and 5 tombstones into a 4-bucket table: every
     page touches every bucket, so the 4th page folds them. A fold reads
     the folded buckets' live rows with pyarrow on the driver, so it
-    submits the same 1 job as an append — and it reads, merges and
+    submits no Spark job, as an append — and it reads, merges and
     writes them a bucket at a time, so the driver never holds two
     folded buckets' rows."""
     rng = random.Random(9)
@@ -171,7 +171,7 @@ def test_folding_merge_job_count(spark, tmp_path, monkeypatch):
         page_events.append(events[:])
         events.clear()
     assert folds == [0, 0, 0, 4, 0]
-    assert counts == [1] * 5
+    assert counts == [0] * 5
     bucket_dirs = [f"_cw_bucket={b}" for b in range(4)]
     assert page_events[3] == [(op, d) for d in bucket_dirs for op in ("read", "write")]
     for n in (0, 1, 2, 4):
@@ -203,32 +203,29 @@ def test_merge_into_job_count(spark, tmp_path):
     assert wh.table().count() == 201  # o203 and n000-n009 are new
 
 
-def test_process_batch_probe_is_one_job(spark, tmp_path):
-    """Outside its per-type merges, one batch submits one Spark job: the
-    collect of its max seq, live types and tombstone flag."""
+def test_process_batch_submits_no_job(spark, tmp_path):
+    """A batch with no Spark hook set submits no Spark job at all: its
+    max seq, live types and tombstones come from the driver-side parse,
+    and each type's merge runs on the driver too."""
     rng = random.Random(4)
     wh = Warehouse(spark, str(tmp_path / "wh"), "probejobs", n_buckets=4, split="type")
     wh.spool(write_feed(
         str(tmp_path / "f0"), [envelope(i + 1, order_doc(i, rng)) for i in range(20)]
     ))
-    sc = spark.sparkContext
     merge = wh._merge_type
     merged = []
 
-    def merge_in_own_group(live, tombstones, doc_type):
-        sc.setJobGroup("probe-merges", "probe-merges")
-        try:
-            merged.append(doc_type)
-            return merge(live, tombstones, doc_type)
-        finally:
-            sc.setJobGroup("probe-batch", "probe-batch")
+    def recording_merge(flat, tombstones, doc_type):
+        merged.append(doc_type)
+        return merge(flat, tombstones, doc_type)
 
-    wh._merge_type = merge_in_own_group
+    wh._merge_type = recording_merge
     page = [envelope(100 + i, order_doc(i, rng)) for i in range(5)] + [
         envelope(200, None, doc_id="order00007", deleted=True)
     ]
-    env = read_changes_feed(spark, write_feed(str(tmp_path / "f1"), page))
+    env = read_changes_feed(write_feed(str(tmp_path / "f1"), page))
     last, n_jobs = jobs_run_by(spark, "probe-batch", lambda: wh._process_batch(env))
     assert last == page[-1]["seq"]
     assert merged == ["order"]
-    assert n_jobs == 1
+    assert n_jobs == 0
+    assert wh.lookup("order00007", "order").count() == 0

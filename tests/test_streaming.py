@@ -85,25 +85,46 @@ INFERENCE_LINES = [
 ]
 
 
-def test_infer_json_schema_equals_file_read(spark, tmp_path):
-    """Inferring from the in-memory lines gives exactly the schema
-    ``spark.read.json`` infers from the same lines written to a file."""
-    from couchwarehouse_spark.sources.changes import infer_json_schema
+def _spark_type(t):
+    """An inferred-type tree of ``operators.document`` as the Spark type
+    JSON inference writes for it."""
+    from pyspark.sql import types as T
+
+    atomic = {"string": T.StringType(), "long": T.LongType(), "double": T.DoubleType(), "boolean": T.BooleanType()}
+    if isinstance(t, str):
+        return atomic[t]
+    if t[0] == "decimal":
+        return T.DecimalType(t[1], t[2])
+    if t[0] == "array":
+        return T.ArrayType(_spark_type(t[1]), True)
+    return T.StructType([T.StructField(k, _spark_type(v), True) for k, v in t[1].items()])
+
+
+def test_driver_inference_equals_file_read(spark, tmp_path):
+    """Inferring on the driver from the parsed lines gives exactly the
+    schema ``spark.read.json`` infers from the same lines in a file:
+    field order, number widening, conflicts as strings, empty structs
+    dropped, NULL-only fields as strings, decimals past a long."""
+    from couchwarehouse_spark.operators.document import canonical_type, widen
 
     path = tmp_path / "lines.json"
     path.write_text("\n".join(INFERENCE_LINES) + "\n")
     want = spark.read.json(str(path)).schema
-    frame = spark.createDataFrame([(x,) for x in INFERENCE_LINES], "value string")
-    got = infer_json_schema(spark, frame)
+    inferred = ("struct", {})
+    for line in INFERENCE_LINES:
+        value = json.loads(line)
+        for doc in value if isinstance(value, list) else [value] if isinstance(value, dict) else []:
+            inferred = widen(inferred, doc)
+    got = _spark_type(canonical_type(inferred))
     assert got == want
     assert got["big"].dataType.simpleString() == "decimal(24,0)"
     assert got["n"].dataType.simpleString() == "double"
 
 
 def test_parse_docs_submits_one_job(spark, tmp_path):
-    """A micro-batch's doc parse submits one Spark job: the schema
-    inference over the batch's docs — and none with a declared doc
-    schema."""
+    """A micro-batch's envelopes reach the driver in one Spark job —
+    the ``toArrow`` whose scan parses the landed lines — with ``doc``
+    as JSON text; every later step of the batch runs on the driver."""
     from couchwarehouse_spark.streaming.ingest import ENVELOPE_SCHEMA, _parse_docs
 
     from .fixtures import jobs_run_by
@@ -115,24 +136,14 @@ def test_parse_docs_submits_one_job(spark, tmp_path):
         + [envelope(7, None, doc_id="order00002", deleted=True)],
     )
     batch = spark.read.schema(ENVELOPE_SCHEMA).json(str(tmp_path / "feed"))
-    parsed, n_jobs = jobs_run_by(spark, "parse-docs", lambda: _parse_docs(spark, batch))
+    env, n_jobs = jobs_run_by(spark, "parse-docs", lambda: _parse_docs(batch))
     assert n_jobs == 1
-    rows = parsed.collect()
-    assert sorted(r["doc"]["_id"] for r in rows if not r["deleted"]) == [
+    rows = env.to_pylist()
+    assert sorted(json.loads(r["doc"])["_id"] for r in rows if not r["deleted"]) == [
         f"order{i:05d}" for i in range(6)
     ]
-    assert [(r["id"], r["doc"], r["_cw_seq"]) for r in rows if r["deleted"]] == [
-        ("order00002", None, 7)
-    ]
-
-    declared, n_jobs = jobs_run_by(
-        spark, "parse-docs-declared",
-        lambda: _parse_docs(spark, batch, doc_schema="_id string, total double"),
-    )
-    assert n_jobs == 0
-    assert declared.schema["doc"].dataType.fieldNames() == ["_id", "total"]
-    assert sorted(r["doc"]["_id"] for r in declared.collect() if not r["deleted"]) == [
-        f"order{i:05d}" for i in range(6)
+    assert [(r["id"], r["doc"], r["seq"]) for r in rows if r["deleted"]] == [
+        ("order00002", None, "7-g1AAAA0007")
     ]
 
 

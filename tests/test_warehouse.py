@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import random
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from couchwarehouse_spark.warehouse import Warehouse
@@ -216,9 +218,9 @@ def test_design_docs_excluded(spark, tmp_path):
 
 
 def test_doc_transform_strict_schema(spark, tmp_path):
-    """Strict mode: doc_schema parses the transform lane with one
-    from_json projection (no RDD inference round-trip)."""
-    from couchwarehouse_spark.sources.changes import read_changes_feed
+    """Strict mode: the transformed docs are read with the declared
+    doc schema, fields in its order — no inference, no Spark job."""
+    from .fixtures import jobs_run_by
 
     feed = person_feed(str(tmp_path / "feed.jsonl"), n=10)
 
@@ -227,17 +229,17 @@ def test_doc_transform_strict_schema(spark, tmp_path):
         doc["name"] = doc["name"].upper()
         return doc
 
-    env = read_changes_feed(
-        spark,
-        feed,
-        doc_transform=doc_tx,
-        doc_schema="_id string, _rev string, name string, age bigint",
+    wh = Warehouse(
+        spark, str(tmp_path / "wh"), "strict", doc_transform=doc_tx,
+        feed_schema="_id string, _rev string, name string, age bigint",
     )
-    rows = env.orderBy("id").collect()
+    _, n_jobs = jobs_run_by(spark, "strict-spool", lambda: wh.spool(feed))
+    assert n_jobs == 0
+    rows = wh.table().orderBy("id").collect()
     assert len(rows) == 10
-    assert rows[3]["doc"]["name"] == "PERSON 3"
-    assert rows[3]["doc"]["age"] == 23
-    assert env.schema["doc"].dataType.fieldNames() == ["_id", "_rev", "name", "age"]
+    assert rows[3]["name"] == "PERSON 3"
+    assert rows[3]["age"] == 23
+    assert wh.table().columns == ["id", "rev", "name", "age"]
 
 
 def test_incremental_bucket_merge(spark, tmp_path):
@@ -1329,13 +1331,12 @@ def test_clone_zero_copy_then_diverge(spark, tmp_path):
     ]
     # Spool targets every type in the batch's route; write directly
     # through the merge path for the sandbox type.
-    from couchwarehouse_spark.sources.changes import read_changes_feed
+    from couchwarehouse_spark.sources.changes import parse_page, read_changes_feed
+    from couchwarehouse_spark.warehouse import flatten_frame
 
-    env = read_changes_feed(spark, write_feed(str(tmp_path / "f2.jsonl"), amend))
-    from couchwarehouse_spark.operators.document import seq_number_col  # noqa: F401
-
-    live = env.withColumn("_cw_type", F.lit("sandbox"))
-    wh._merge_type(live, live.filter(F.lit(False)).select("id", "_cw_seq"), "sandbox")
+    page = parse_page(read_changes_feed(write_feed(str(tmp_path / "f2.jsonl"), amend)))
+    flat = flatten_frame(page.doc_chunks("_default"), page.types["_default"].struct)
+    wh._merge_type(flat, page.tombstones, "sandbox")
 
     sandboxed = wh.table("sandbox").filter(F.col("status") == "sandboxed").count()
     assert sandboxed == 5
@@ -1889,7 +1890,7 @@ def test_lookup_submits_no_spark_job(spark, tmp_path):
 
 
 def test_bucket_of_id_matches_bucket_formula(spark, tmp_path):
-    """The driver-side bucket (Spark's XXH64 called directly) equals the
+    """The driver-side bucket (``operators.bucketing.xxhash64``) equals the
     column formula ``_bucket_of`` for every id, edge cases included:
     the empty string, non-ASCII text and long ids."""
     import pandas as pd
@@ -1909,6 +1910,41 @@ def test_bucket_of_id_matches_bucket_formula(spark, tmp_path):
     for r in got:
         for n in (1, 5, 16):
             assert wh._bucket_of_id(r["id"], n) == r[f"b{n}"], (r["id"], n)
+
+
+_BUCKET_IDS = st.lists(
+    st.one_of(
+        st.just(""),
+        st.text(alphabet=st.characters(exclude_categories=("Cs",)), max_size=31),
+        st.text(alphabet=st.characters(exclude_categories=("Cs",)), min_size=32, max_size=90),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(ids=_BUCKET_IDS)
+def test_driver_bucket_hash_matches_spark(spark, tmp_path, ids):
+    """One driver-side hash for the merge and the lookup:
+    ``pmod(xxhash64_ids(ids), n)`` (the merge's vectorized hash) and
+    ``_bucket_of_id`` both equal Spark's ``_bucket_of("id", n)`` for
+    unicode, empty and 32-byte-or-longer ids."""
+    import numpy as np
+    import pandas as pd
+
+    from couchwarehouse_spark.operators.bucketing import xxhash64_ids
+
+    frame = spark.createDataFrame(pd.DataFrame({"id": ids}))
+    ns = (1, 16, 1024)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "bucketprop")
+    cols = [wh._bucket_of("id", n).alias(f"b{n}") for n in ns]
+    got = frame.select("id", *cols).collect()
+    hashes = xxhash64_ids([r["id"] for r in got])
+    for n in ns:
+        want = [r[f"b{n}"] for r in got]
+        assert list(np.mod(hashes, n)) == want
+        assert [Warehouse._bucket_of_id(r["id"], n) for r in got] == want
 
 
 def test_lookup_after_rebucket_and_restore(spark, tmp_path):
